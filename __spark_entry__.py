@@ -6,7 +6,7 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash → CORRECTNESS_r{N}.json).
 
 Engine-native gates run on a `sequences(doc_id, tokens, n_tok, source)`
-table derived deterministically from `orders` (tokenqc.harness), so the
+table derived deterministically from `orders` (corpusops.harness), so the
 oracle covers the engine's real check operators, not just lookalikes.
 Hash-family ops (MinHash-LSH, IVF-ANN, hyperplane-LSH near-dup, salted
 uniqueness, pandas top-k, the drift p-value gate) are oracle-checked
@@ -35,8 +35,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tokenqc import harness as H
-from tokenqc import harness_text as HT
+from corpusops import harness as H
+from corpusops import harness_text as HT
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -52,7 +52,7 @@ def _hash_family_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]
     a green row certifies LSH/IVF recall, not just row counts."""
     from tokenqc.checks import base as cb
     from tokenqc.checks import uniqueness
-    from tokenqc.textops import dedup, simsearch
+    from corpusops.textops import dedup, simsearch
 
     def q_minhash_lsh(spark, sf_dir):
         # banded-LSH candidates, exact-Jaccard verified; at this corpus the

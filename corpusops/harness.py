@@ -462,7 +462,7 @@ def oracle_seq_scores() -> str:
 def q_seq_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 token-id frequencies over the derived tokens arrays
     (explode → map-side partial agg → TakeOrderedAndProject)."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     return textqc.vocab_topk(derive_sequences(spark, sf_dir), k=50)
 
@@ -481,7 +481,7 @@ def oracle_seq_vocab_topk() -> str:
 
 def q_seq_vocab_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source top-5 token ids (window partitioned by source)."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     seq = derive_sequences(spark, sf_dir)
     return textqc.vocab_topk(seq.where(F.col("source").isNotNull()), k=5, by="source")
@@ -503,7 +503,7 @@ def q_seq_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Misra-Gries sketch run with k above the vocabulary size: no
     eviction fires, so the mergeable-summary machinery must reproduce the
     exact token frequencies — verified against closed-form counts."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     return textqc.mg_heavy_hitters(derive_sequences(spark, sf_dir), k=65536)
 
@@ -855,7 +855,7 @@ def q_seq_token_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality is first-value equality, and DuckDB re-derives the exact
     hit counts with a plain integer semi-join (no hashing needed).
     Keyed by rn (the unique row key)."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     seq = derive_sequences(spark, sf_dir).where(
         F.col("tokens").isNotNull() & (F.size("tokens") >= 8)
@@ -1026,14 +1026,14 @@ UNION ALL SELECT partition_id, doc_id, 'tokens', observed, expected FROM runs
 
 
 def q_seq_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-sequence token unigram entropy gate (textqc.token_entropy):
+    """Per-sequence token unigram entropy gate (degeneracy.token_entropy):
     the degenerate-text detector — planted rule rn % 97 = 11 collapses
     the whole array to its first token (entropy 0, flagged), every
     clean sequence has all-distinct tokens by the generator contract
     (31*997 < 50257: no wraparound) so its entropy is ln(sz). The
     oracle does NOT use that closed form — it re-derives per-position
     values and counts independently (the token-lints pattern)."""
-    from tokenqc.textops import textqc
+    from tokenqc.checks import degeneracy
 
     seq = derive_sequences(spark, sf_dir)
     planted = seq.withColumn(
@@ -1043,7 +1043,7 @@ def q_seq_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_repeat(F.element_at("tokens", 1), F.size("tokens")),
         ).otherwise(F.col("tokens")),
     )
-    return textqc.token_entropy(planted, id_col="rn")
+    return degeneracy.token_entropy(planted, id_col="rn")
 
 
 def oracle_seq_token_entropy() -> str:
@@ -1075,7 +1075,7 @@ FROM e
 
 def q_seq_token_kgram_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document duplicated k-gram fraction
-    (textqc.token_kgram_repetition, k=8): planted rule rn % 103 = 17
+    (degeneracy.token_kgram_repetition, k=8): planted rule rn % 103 = 17
     tiles the sequence with a period-4 cycle — unigram entropy stays
     ln(4) (the entropy gate passes it at its default threshold region)
     but every window repeats, so dup_kgram_frac → 1 and the row flags.
@@ -1084,7 +1084,7 @@ def q_seq_token_kgram_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     either closed form — it re-derives per-position values and counts
     DISTINCT actual 8-token windows (no hashing at all), so the Spark
     side's 64-bit window hash is independently certified."""
-    from tokenqc.textops import textqc
+    from tokenqc.checks import degeneracy
 
     seq = derive_sequences(spark, sf_dir)
     sz = F.size("tokens")
@@ -1099,7 +1099,7 @@ def q_seq_token_kgram_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
             tiled,
         ).otherwise(F.col("tokens")),
     )
-    return textqc.token_kgram_repetition(planted, id_col="rn")
+    return degeneracy.token_kgram_repetition(planted, id_col="rn")
 
 
 def oracle_seq_token_kgram_rep() -> str:
@@ -1148,7 +1148,7 @@ def q_seq_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered positions via generate_series — a formulation disjoint from
     the engine's xxhash64 windows + sorted interval sweep, so both the
     64-bit window hashing and the merge arithmetic are certified."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     seq = derive_sequences(spark, sf_dir).where(F.col("rn") % 3 == 0)
     return dedup.dup_span_coverage(seq, id_col="rn", k=8, min_docs=2)
@@ -1201,7 +1201,7 @@ def q_seq_dup_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive as md5(''). Certifies the window hashing, the
     gaps-and-islands interval merge, AND the in-row positional filter
     in one row per doc."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     seq = derive_sequences(spark, sf_dir).where(
         (F.col("rn") % 3 == 0) & F.col("tokens").isNotNull()
@@ -1380,7 +1380,7 @@ def q_seq_clustering_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     each, pruning-hostile) vs 'range' partitions by n_tok DIV 64
     (disjoint closed ranges -> 0 overlaps, pruning-perfect) — the audit
     must read maximally bad and maximally good off the same rows."""
-    from tokenqc import layout
+    from corpusops import layout
 
     seq = derive_sequences(spark, sf_dir).select("rn", "partition_id", "n_tok")
     hash_l = layout.clustering_audit(
@@ -1427,7 +1427,7 @@ def q_seq_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     over (n_tok, rn % 251): integer-exact bit interleaving after the
     floor(x+0.5) affine cell mapping, certified value-for-value; rows
     with NULL n_tok pin the NULL-key branch."""
-    from tokenqc import layout
+    from corpusops import layout
 
     seq = derive_sequences(spark, sf_dir).select(
         "rn", "n_tok", (F.col("rn") % 251).cast("int").alias("r2")
@@ -1470,7 +1470,7 @@ def q_seq_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences table: buckets 64..512, so the generator's 1..997 token
     range exercises every bucket AND the truncation path (n_tok > 512
     clamps into the top bucket with tokens_dropped > 0)."""
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     return pack.length_buckets(
         derive_sequences(spark, sf_dir),
@@ -1513,7 +1513,7 @@ def q_seq_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     take-all path, code the n = 0 empty path, wiki a boundary-heavy
     small count — keyed on the unique rn (doc_id carries planted
     dups/NULLs, which the op's docstring excludes)."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     out = textqc.stratified_sample(
         derive_sequences(spark, sf_dir), STRAT_COUNTS, id_col="rn"
@@ -1541,7 +1541,7 @@ def q_seq_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     table keyed on the unique rn: shard membership AND within-shard
     positions must be a pure function of the data — the oracle's
     per-shard row_number re-derives both independently."""
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     out = pack.shard_plan(
         derive_sequences(spark, sf_dir), n_shards=8, id_cols=("rn",)
@@ -1568,7 +1568,7 @@ def q_seq_interleave_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     spam9 dropped — not in the mixture). The oracle re-derives both the
     per-source md5 rank (a window the op deliberately avoids) and the
     stride arithmetic independently."""
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     out = pack.interleave_plan(
         derive_sequences(spark, sf_dir), INTERLEAVE_WEIGHTS, id_cols=("rn",)
@@ -1599,7 +1599,7 @@ def q_seq_score_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary-bucket walk are both load-bearing. The oracle is the
     direct per-source window formulation the operator deliberately
     avoids."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     seq = derive_sequences(spark, sf_dir).where(F.col("source").isNotNull())
     scored = seq.withColumn("q", (F.col("rn") * 37 % 1001) / F.lit(1000.0))
@@ -1687,7 +1687,7 @@ def q_seq_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain 64-bit integer SQL (every product < 2^62 — exact), replays
     the winnow minimum as a window min, and re-joins pairs — certifying
     hash arithmetic, winnow selection, dedup, df-cap, and threshold."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     seq = derive_sequences(spark, sf_dir)
     sz = F.size("tokens")
@@ -1761,7 +1761,7 @@ def q_seq_token_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-simulates per-position values, applies the SAME remap
     CASE, and compares the md5 of each rewritten array (the
     seq_pack_tokens idiom). Empty arrays survive as md5('')."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     seq = derive_sequences(spark, sf_dir)
     remap = (
@@ -1805,7 +1805,7 @@ def q_seq_window_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-exactly via the md5 of its token string; the oracle re-derives
     window starts with generate_series and rebuilds each window from
     re-simulated per-position values."""
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     seq = derive_sequences(spark, sf_dir)
     out = pack.window_chunks(seq, size=128, stride=96, id_col="rn")
@@ -1845,7 +1845,7 @@ def q_seq_vocab_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     one reserved UNK slot): the top-1000 corpus token ids renumbered
     densely by (freq DESC, old_id ASC). The oracle recounts frequencies
     from re-simulated per-position values and re-ranks with QUALIFY."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     seq = derive_sequences(spark, sf_dir)
     return textqc.vocab_prune_plan(seq, keep_v=1000)

@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tokenqc.harness import load
-from tokenqc.textops import dedup, simsearch, textqc
+from corpusops.harness import load
+from corpusops.textops import dedup, simsearch, textqc
 
 # ---------------------------------------------------------------------------
 # derived dedup corpus
@@ -509,7 +509,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering exists for every user and all conversions read 100%. The
     oracle replays the rank filter and the three chained
     min-after-anchor aggregations."""
-    from tokenqc import relops
+    from corpusops import relops
 
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -580,7 +580,7 @@ def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     its user (snapshots = every 7th event, aggregated to one row per
     (user, ts)). Oracle = DuckDB's native ASOF JOIN, so the union+window
     formulation is verified against an independent implementation."""
-    from tokenqc import relops
+    from corpusops import relops
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
     snaps = (
@@ -601,8 +601,8 @@ def q_seq_e2e_train_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage closed-form, so a green row certifies the COMPOSITION — the
     whole validate→mix→pack path a training pipeline runs — not just
     each operator in isolation."""
-    from tokenqc.harness import derive_sequences
-    from tokenqc.textops import pack
+    from corpusops.harness import derive_sequences
+    from corpusops.textops import pack
 
     seq = derive_sequences(spark, sf_dir)
     clean = seq.where(
@@ -625,7 +625,7 @@ def q_seq_e2e_train_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_e2e_train_plan() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     sw = sum(_MIX_WEIGHTS.values())
     targets = ", ".join(
@@ -662,7 +662,7 @@ def q_events_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hot-key-safe as-of formulation (window per (key, time
     bucket) + bucket-granularity carry) — must produce the identical
     result as the plain union+window against DuckDB's native ASOF."""
-    from tokenqc import relops
+    from corpusops import relops
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
     snaps = (
@@ -689,7 +689,7 @@ def oracle_events_asof() -> str:
 def q_lineitem_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed range join: orders priced within derived [lo, hi) bands
     (quadratic theta-join avoided via bucket equi-join + exact filter)."""
-    from tokenqc import relops
+    from corpusops import relops
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", (F.col("o_orderkey") % 1000).cast("long").alias("v")
@@ -719,7 +719,7 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregate the finer level's partials; the oracle computes EVERY
     level directly from raw rows, so the re-aggregation (mergeability)
     is what's being verified."""
-    from tokenqc import relops
+    from corpusops import relops
 
     return relops.time_rollup(load(spark, sf_dir, "events"))
 
@@ -745,7 +745,7 @@ def q_seq_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     count). For unbounded domains (floats, raw lengths) at 100× this is
     a per-group memory hazard; use the approx twin below
     (q_seq_quantiles_approx) — a constant-memory mergeable sketch."""
-    from tokenqc.harness import derive_sequences
+    from corpusops.harness import derive_sequences
 
     seq = derive_sequences(spark, sf_dir)
     return (
@@ -760,7 +760,7 @@ def q_seq_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_quantiles() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     return SEQ_CTE + (
         "SELECT source, "
@@ -791,7 +791,7 @@ def q_seq_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form (all-true). The verification is 2-pass by design (sketch
     pass + rank-check pass); the production operator is the sketch pass
     alone."""
-    from tokenqc.harness import derive_sequences
+    from corpusops.harness import derive_sequences
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -818,7 +818,7 @@ def q_seq_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_quantiles_approx() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     return SEQ_CTE + (
         "SELECT source, true AS p50_in_bound, true AS p90_in_bound, "
@@ -910,7 +910,7 @@ def q_doc_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full curation pipeline (language gate → quality gate → exact
     dedup → near-dup components → split) as one audit frame; every stage
     is an engine operator and the whole composition has a SQL twin."""
-    from tokenqc.textops import curate
+    from corpusops.textops import curate
 
     # the derived corpus plants exact copies AND near copies, so every
     # stage (lang, quality, exact_dup, near_dup) fires in the audit
@@ -988,7 +988,7 @@ def q_doc_curation_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash_lsh_pairs oracle row already certifies total recall on this
     corpus at threshold 0.6 — so the SAME exact-SQL twin applies: a
     green row certifies the 100-TB pair-generation plan end-to-end."""
-    from tokenqc.textops import curate
+    from corpusops.textops import curate
 
     return curate.curate(derive_corpus(spark, sf_dir), use_lsh=True)
 
@@ -1094,7 +1094,7 @@ def oracle_doc_contamination() -> str:
 
 def q_top_violation_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 violation examples per check (window top-k for reports)."""
-    from tokenqc import harness as H
+    from corpusops import harness as H
     from tokenqc.checks import base as cb
 
     seq = H.derive_sequences(spark, sf_dir)
@@ -1111,7 +1111,7 @@ def q_top_violation_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_top_violation_examples() -> str:
-    from tokenqc.harness import SEQ_CTE, _FACET_SQL
+    from corpusops.harness import SEQ_CTE, _FACET_SQL
 
     preds = {}
     for (check, _f), pred in _FACET_SQL.items():
@@ -1237,7 +1237,7 @@ def q_doc_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 def oracle_doc_pii() -> str:
     # built from the SAME RE2-portable pattern constants the engine
     # compiles (textqc.PII_PATTERNS) — pattern set can't silently drift
-    from tokenqc.textops.textqc import PII_PATTERNS
+    from corpusops.textops.textqc import PII_PATTERNS
 
     counts = ",\n  ".join(
         f"CAST(len(regexp_extract_all(text, '{p}')) AS INTEGER) AS n_{n}"
@@ -1264,7 +1264,7 @@ def q_doc_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def oracle_doc_pii_scrub() -> str:
     # same replacement ORDER as textqc.PII_PATTERNS — the chain is
     # generated from the engine's own pattern dict (order included)
-    from tokenqc.textops.textqc import PII_PATTERNS
+    from corpusops.textops.textqc import PII_PATTERNS
 
     expr = "text"
     for n, p in PII_PATTERNS.items():
@@ -1280,8 +1280,8 @@ def q_seq_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets (two-phase scan, see tokenqc/textops/pack.py — never a
     global single-task window) + the closed-form pack assignment. The
     oracle is the definitional single-node cumulative-sum window."""
-    from tokenqc.harness import derive_sequences
-    from tokenqc.textops import pack
+    from corpusops.harness import derive_sequences
+    from corpusops.textops import pack
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -1294,7 +1294,7 @@ def q_seq_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_pack_offsets() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     return SEQ_CTE + f"""
 , off AS (
@@ -1310,8 +1310,8 @@ def q_seq_pack_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing, phase 2: each doc exploded into its per-pack
     (start, len) spans — the exact slices a training loader reads. The
     oracle re-derives every span from the cumulative offsets."""
-    from tokenqc.harness import derive_sequences
-    from tokenqc.textops import pack
+    from corpusops.harness import derive_sequences
+    from corpusops.textops import pack
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -1324,7 +1324,7 @@ def q_seq_pack_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_pack_spans() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     c = _PACK_CAP
     return SEQ_CTE + f"""
@@ -1353,8 +1353,8 @@ def q_seq_pack_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_col is size(tokens), not the (deliberately corrupted) n_tok
     column: packing runs on a validated corpus where the two agree."""
-    from tokenqc.harness import derive_sequences
-    from tokenqc.textops import pack
+    from corpusops.harness import derive_sequences
+    from corpusops.textops import pack
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -1372,7 +1372,7 @@ def q_seq_pack_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_pack_tokens() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     c = _PACK_CAP
     # token at 1-based in-doc position x of doc rn = (x*31 + rn) % 50257
@@ -1406,7 +1406,7 @@ def q_seq_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter) — scored per rn (the unique row key, so planted duplicate
     doc_ids don't merge two documents' token bags). The oracle rebuilds
     the whole model from the closed-form token values."""
-    from tokenqc.harness import derive_sequences
+    from corpusops.harness import derive_sequences
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -1417,7 +1417,7 @@ def q_seq_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_unigram_logprob() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     return SEQ_CTE + """
 , tk AS (
@@ -1439,7 +1439,7 @@ def q_seq_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     both count trees, and the interpolation formula from the
     closed-form token values; identical left-associated arithmetic
     keeps engine agreement ~1e-13, far inside the 5-decimal round."""
-    from tokenqc.harness import derive_sequences
+    from corpusops.harness import derive_sequences
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -1450,7 +1450,7 @@ def q_seq_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_bigram_logprob() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     return SEQ_CTE + """
 , tk AS (
@@ -1481,7 +1481,7 @@ def q_seq_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (prev, cur) tie-breaks, so the top-k set and order are exactly
     reproducible cross-engine; the oracle replays pair/unigram counts
     and the identical left-associated formula."""
-    from tokenqc.harness import derive_sequences
+    from corpusops.harness import derive_sequences
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -1492,7 +1492,7 @@ def q_seq_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_pmi_pairs() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     return SEQ_CTE + """
 , tk AS (
@@ -1525,8 +1525,8 @@ QUALIFY rank <= 20
 def q_seq_pack_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic epoch-shuffle keys over the pack ids (portable md5,
     so the oracle recomputes every key byte-for-byte)."""
-    from tokenqc.harness import derive_sequences
-    from tokenqc.textops import pack
+    from corpusops.harness import derive_sequences
+    from corpusops.textops import pack
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -1542,7 +1542,7 @@ def q_seq_pack_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_pack_epoch() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     return SEQ_CTE + f"""
 , off AS (
@@ -1563,7 +1563,7 @@ def q_seq_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     1M-token budget over the four clean sources (spam9 excluded via the
     weight dict). The sample is a pure function of (salt, rn, the
     per-source totals) — the oracle reproduces every kept row."""
-    from tokenqc.harness import derive_sequences
+    from corpusops.harness import derive_sequences
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -1575,7 +1575,7 @@ def q_seq_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_mixture_sample() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     sw = sum(_MIX_WEIGHTS.values())
     targets = ", ".join(
@@ -1601,8 +1601,8 @@ def q_seq_pack_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     curriculum/domain-separated packing). Same two-phase prefix-sum
     plan, range-partitioned on (source, rn); the oracle is the
     per-source cumulative-sum window."""
-    from tokenqc.harness import derive_sequences
-    from tokenqc.textops import pack
+    from corpusops.harness import derive_sequences
+    from corpusops.textops import pack
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -1615,7 +1615,7 @@ def q_seq_pack_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_pack_by_source() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     return SEQ_CTE + f"""
 , off AS (
@@ -1742,7 +1742,7 @@ def q_media_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame index lists from map metadata, JVM-side sequence arithmetic
     only — the decision half a decode UDF consumes. Arrays compared as
     joined strings (the oracle harness stringifies object columns)."""
-    from tokenqc.textops import multimodal
+    from corpusops.textops import multimodal
 
     plan = multimodal.frame_sample_plan(
         derive_media(spark, sf_dir).where(F.col("kind") == "video")
@@ -1768,7 +1768,7 @@ def q_media_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (start, end) sample windows from map metadata, exploded to one row
     per chunk so downstream feature UDFs parallelize across chunks —
     a 10-hour file becomes independent tasks, not one straggler."""
-    from tokenqc.textops import multimodal
+    from corpusops.textops import multimodal
 
     return multimodal.audio_chunk_plan(derive_media(spark, sf_dir))
 
@@ -2399,8 +2399,8 @@ def q_seq_pack_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn % 229 = 4 shifts a span start (tiling seams, possibly bounds).
     The oracle re-derives the spans definitionally, replays the same
     corruption CASEs, and recomputes all four audit aggregates."""
-    from tokenqc.harness import derive_sequences
-    from tokenqc.textops import pack
+    from corpusops.harness import derive_sequences
+    from corpusops.textops import pack
 
     seq = (
         derive_sequences(spark, sf_dir)
@@ -2422,7 +2422,7 @@ def q_seq_pack_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_seq_pack_audit() -> str:
-    from tokenqc.harness import SEQ_CTE
+    from corpusops.harness import SEQ_CTE
 
     c = _PACK_CAP
     return SEQ_CTE + f"""
@@ -2606,7 +2606,7 @@ def q_events_rate_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     warmup/flat/ok paths ride the natural data. The oracle replays the
     planting union, the hourly counts, and the identical rows-based
     rolling window."""
-    from tokenqc import relops
+    from corpusops import relops
 
     ev = load(spark, sf_dir, "events").select("ts", "event_type")
     hot = ev.where(

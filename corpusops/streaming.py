@@ -402,7 +402,7 @@ def streaming_token_contamination(
     drift apart (same hash, same counts; pinned in
     test_streaming_token_contamination_matches_batch).
     """
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     if bench_arr is None:
         if benchmark is None:
@@ -525,7 +525,7 @@ def streaming_incremental_dedup(
     broadcast) and one partial-agg'd min; text never shuffles (it is
     digested in the scan projection).
     """
-    from tokenqc.textops import dedup as _dedup
+    from corpusops.textops import dedup as _dedup
 
     seen_path = seen_dir or os.path.join(out_dir, "seen_digests")
     admitted_path = os.path.join(out_dir, "admitted_stream")
@@ -707,7 +707,7 @@ def streaming_rate_spikes(
     read-merge-overwrite is a bounded job, the incremental-dedup
     store pattern with aggregation instead of anti-join.
     """
-    from tokenqc import relops
+    from corpusops import relops
 
     schema = (
         "event_id long, ts timestamp, user_id long, event_type string, "

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tokenqc.textops import dedup, textqc
+from corpusops.textops import dedup, textqc
 
 
 def curate(

@@ -314,7 +314,7 @@ def embedding_near_pairs(
       all-pairs and the exact join is the better plan; above it the
       bucket join is near-linear.
     """
-    from tokenqc.textops.simsearch import cosine_expr, hyperplane_lsh_bucket
+    from corpusops.textops.simsearch import cosine_expr, hyperplane_lsh_bucket
 
     use_lsh = mode == "lsh" or (mode == "auto" and threshold >= 0.7)
     cos = cosine_expr(F.col("va"), F.col("vb"))
@@ -678,7 +678,7 @@ def _dup_window_rows(
     import numpy as np
     import pyarrow as pa
 
-    from tokenqc.textops.textqc import (
+    from tokenqc.checks.degeneracy import (
         _flat_window_hashes,
         _list_flat,
         _shingle_powers,
@@ -884,7 +884,7 @@ def cluster_split(
     reference's per-tool fan-out keyed on the derived canonical
     (/root/reference/main.nf:91-116) — grouping before grading.
     """
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     labels = connected_components(pairs, max_iter=max_iter)
     joined = df.join(
@@ -989,7 +989,7 @@ def winnow_fingerprints(
     min_len = k + w - 1
 
     def winnow_op(it):
-        from tokenqc.textops.textqc import _list_flat, _sort_segments
+        from tokenqc.checks.degeneracy import _list_flat, _sort_segments
 
         for batch in it:
             if not batch.num_rows:
@@ -1014,7 +1014,7 @@ def winnow_fingerprints(
             valid = pos[:nwf] <= (n_sh[row_of[:nwf]] - w)
             sel = smin[valid]
             # distinct (row, fp) via per-row segment sorts + one
-            # adjacent-eq pass (textqc._sort_segments — measured ~18x
+            # adjacent-eq pass (degeneracy._sort_segments — measured ~18x
             # over the global lexsort this replaced); rows stay
             # contiguous under the valid mask, with n_sh - w + 1
             # winnow positions each

@@ -691,7 +691,7 @@ def semdedup(
     `embedding_near_pairs` (multi-table hyperplane LSH) when
     cross-cell recall matters more than cost.
     """
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")

@@ -350,7 +350,7 @@ def test_degeneracy_facets_opt_in_and_null_safe(spark):
 
 def test_degeneracy_fused_equals_two_standalone_passes(spark):
     """r6 optimization pin: with BOTH facets enabled the gate runs one
-    fused Arrow pass (textqc.token_degen_stats) — its violation rows
+    fused Arrow pass (degeneracy.token_degen_stats) — its violation rows
     must equal the union the two standalone ops produce, byte for byte
     (same rounded stats, same observed/expected strings), including the
     sub-k-row NULL and the single-token entropy-0 edge cases."""
@@ -358,7 +358,6 @@ def test_degeneracy_fused_equals_two_standalone_passes(spark):
 
     from tokenqc.checks import degeneracy
     from tokenqc.checks.base import CheckConfig
-    from tokenqc.textops import textqc
 
     df = spark.createDataFrame(
         [
@@ -375,10 +374,10 @@ def test_degeneracy_fused_equals_two_standalone_passes(spark):
         min_entropy=1.5, max_dup_kgram_frac=0.2,
     )
     fused = degeneracy.violations(df, cfg)
-    ent = textqc.token_entropy(
+    ent = degeneracy.token_entropy(
         df, id_col="doc_id", min_entropy=1.5, carry_cols=("partition_id",)
     )
-    rep = textqc.token_kgram_repetition(
+    rep = degeneracy.token_kgram_repetition(
         df, id_col="doc_id", k=cfg.degen_kgram_k, max_dup_frac=0.2,
         carry_cols=("partition_id",),
     )
@@ -396,7 +395,7 @@ def test_degeneracy_fused_equals_two_standalone_passes(spark):
     want = sorted(map(tuple, expected.collect()))
     assert got == want and len(got) >= 3, (got, want)
     # the fused stats themselves match the standalone ops row-for-row
-    st = textqc.token_degen_stats(df, id_col="doc_id").collect()
+    st = degeneracy.token_degen_stats(df, id_col="doc_id").collect()
     ent_by_id = {r.doc_id: r for r in ent.collect()}
     rep_by_id = {r.doc_id: r for r in rep.collect()}
     for r in st:

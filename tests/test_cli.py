@@ -66,7 +66,40 @@ def test_cli_enumerate_dups(spark, synth_dir, tmp_path, capsys):
     assert {"partition_id", "doc_id"} <= set(listed.columns)
 
 
+ENGINE_MODULES = sorted(
+    [
+        "tokenqc/__init__.py",
+        "tokenqc/checks/__init__.py",
+        "tokenqc/checks/base.py",
+        "tokenqc/checks/completeness.py",
+        "tokenqc/checks/degeneracy.py",
+        "tokenqc/checks/drift.py",
+        "tokenqc/checks/format.py",
+        "tokenqc/checks/invariant.py",
+        "tokenqc/checks/referential.py",
+        "tokenqc/checks/scoring.py",
+        "tokenqc/checks/snapshot.py",
+        "tokenqc/checks/stats.py",
+        "tokenqc/checks/structural.py",
+        "tokenqc/checks/tokens.py",
+        "tokenqc/checks/uniqueness.py",
+        "tokenqc/cli.py",
+        "tokenqc/io.py",
+        "tokenqc/report.py",
+        "tokenqc/runner.py",
+        "tokenqc/schema.py",
+        "tokenqc/session.py",
+        "tokenqc/skew.py",
+        "tokenqc/synth.py",
+    ]
+)
+
+
 def test_pyfiles_zip(tmp_path):
+    """The --py-files zip ships exactly the engine, and every tokenqc
+    import in it (function-local ones included) resolves inside the zip:
+    a cluster executor has nothing else to import from."""
+    import ast
     import subprocess
     import sys
     import zipfile
@@ -75,9 +108,57 @@ def test_pyfiles_zip(tmp_path):
     root = Path(__file__).resolve().parents[1]
     subprocess.run([sys.executable, str(root / "scripts" / "make_pyfiles.py")], check=True)
     z = zipfile.ZipFile(root / "dist" / "tokenqc.zip")
-    names = z.namelist()
-    assert "tokenqc/runner.py" in names
-    assert "tokenqc/checks/drift.py" in names
+    names = sorted(z.namelist())
+    assert names == ENGINE_MODULES
+
+    def module_path(mod: str) -> str | None:
+        base = mod.replace(".", "/")
+        for cand in (f"{base}.py", f"{base}/__init__.py"):
+            if cand in names:
+                return cand
+        return None
+
+    trees = {n: ast.parse(z.read(n).decode(), filename=n) for n in names}
+
+    def top_level_names(path: str) -> set[str]:
+        out: set[str] = set()
+        for node in trees[path].body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                out.add(node.name)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                out |= {t.id for t in targets if isinstance(t, ast.Name)}
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                out |= {(a.asname or a.name).split(".")[0] for a in node.names}
+        return out
+
+    unresolved = []
+    for path, tree in trees.items():
+        pkg = path.rsplit("/", 1)[0].replace("/", ".")
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                mods = [(a.name, None) for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mod = node.module or ""
+                if node.level:
+                    parts = pkg.split(".")[: len(pkg.split(".")) - node.level + 1]
+                    mod = ".".join(parts + ([mod] if mod else []))
+                mods = [(mod, a.name) for a in node.names]
+            else:
+                continue
+            for mod, attr in mods:
+                if mod.split(".")[0] != "tokenqc":
+                    assert mod.split(".")[0] != "corpusops", (path, mod)
+                    continue
+                target = module_path(mod)
+                ok = target is not None and (
+                    attr is None
+                    or module_path(f"{mod}.{attr}") is not None
+                    or attr in top_level_names(target)
+                )
+                if not ok:
+                    unresolved.append((path, node.lineno, mod, attr))
+    assert not unresolved, unresolved
 
 
 def test_missing_input_clean_error(capsys):

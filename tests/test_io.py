@@ -13,6 +13,24 @@ def test_read_table_absent_returns_none(spark, tmp_path):
     assert qio.read_table(spark, str(tmp_path / "nope"), "verdicts", "r1") is None
 
 
+def test_read_table_absent_never_reaches_reader(spark, tmp_path, monkeypatch):
+    """Every fresh run reads tables it has not written yet: absence is
+    decided before the parquet reader, which would log a WARN and a
+    FileNotFoundException stack trace for the missing path."""
+    calls: list = []
+    cls = type(spark)
+    real = cls.read
+    monkeypatch.setattr(cls, "read", property(lambda s: calls.append(1) or real.fget(s)))
+    assert qio.read_table(spark, str(tmp_path / "nope"), "verdicts") is None
+    assert qio.read_table(spark, str(tmp_path / "nope"), "verdicts", "r1") is None
+    assert calls == []
+    # a directory that exists but holds no parquet schema: the reader
+    # runs and its AnalysisException still reads as absent
+    (tmp_path / "t" / "run_id=r1").mkdir(parents=True)
+    assert qio.read_table(spark, str(tmp_path), "t", "r1") is None
+    assert calls
+
+
 def test_write_then_read_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
     qio.write_batch(df, str(tmp_path), "t", "r1", 0)
@@ -174,7 +192,7 @@ def test_html_report_artifact(spark, tmp_path, tables):
     from tokenqc.checks import drift
     from tokenqc.checks.base import CheckConfig
     from tokenqc.runner import QCRunner
-    from tokenqc.textops import pack, textqc
+    from corpusops.textops import pack, textqc
 
     cfg = CheckConfig(n_partitions=8)
     runner = QCRunner(spark, cfg, out_dir=str(tmp_path / "q"))

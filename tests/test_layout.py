@@ -5,7 +5,7 @@ from __future__ import annotations
 def test_clustering_audit_hand_computed(spark):
     """Disjoint ranges -> 0 overlaps; identical ranges all overlap;
     boundary-touching closed intervals overlap; nulls excluded."""
-    from tokenqc import layout
+    from corpusops import layout
 
     rows = (
         [(0, v) for v in (1, 10)]      # [1,10]
@@ -25,7 +25,7 @@ def test_zorder_key_hand_computed(spark):
     """Bit interleave pinned: with 2-bit cells and values already on
     the 0..3 grid, the cell map is identity and the key is the classic
     Morton number; null column -> null key."""
-    from tokenqc import layout
+    from corpusops import layout
 
     rows = [(i, x, y) for i, (x, y) in enumerate(
         [(0, 0), (3, 0), (0, 3), (3, 3), (1, 2), (None, 1)]
@@ -47,7 +47,7 @@ def test_zorder_key_hand_computed(spark):
 
 def test_zorder_key_guards(spark):
     import pytest
-    from tokenqc import layout
+    from corpusops import layout
 
     df = spark.createDataFrame([(1, 2)], "a int, b int")
     with pytest.raises(ValueError):

@@ -16,7 +16,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from tokenqc.textops import pack
+from corpusops.textops import pack
 
 
 def _mk(spark, n=500, seed=7, parts=None):
@@ -263,7 +263,7 @@ def test_shard_plan_partition_invariant_and_dense(spark):
     0..n_s-1 per shard, membership matching the md5 arithmetic."""
     import hashlib
 
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     rows = [(i,) for i in range(400)]
     df = spark.createDataFrame(rows, "pack_id long")
@@ -293,7 +293,7 @@ def test_shard_plan_partition_invariant_and_dense(spark):
 def test_shard_plan_validates_n_shards(spark):
     import pytest as _pytest
 
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     df = spark.createDataFrame([(1,)], "pack_id long")
     with _pytest.raises(ValueError):
@@ -311,7 +311,7 @@ def test_interleave_plan_stride_property_and_invariance(spark):
     a pure function of the data at any partitioning."""
     import hashlib
 
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     rows = [(i, ["web", "books", "wiki", "web", "web", "code"][i % 6]) for i in range(600)]
     df = spark.createDataFrame(rows, "doc_id long, source string")
@@ -352,7 +352,7 @@ def test_interleave_plan_stride_property_and_invariance(spark):
 def test_interleave_plan_validates_weights(spark):
     import pytest as _pytest
 
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     df = spark.createDataFrame([(1, "web")], "doc_id long, source string")
     with _pytest.raises(ValueError):
@@ -371,7 +371,7 @@ def test_interleave_plan_validates_weights(spark):
 
 
 def test_pack_audit_clean_plan_is_all_zero(spark):
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     src = spark.createDataFrame(
         [(i, n) for i, n in enumerate([7, 3, 10, 5, 5, 4])], "rn long, n_tok int"
@@ -389,7 +389,7 @@ def test_pack_audit_clean_plan_is_all_zero(spark):
 def test_pack_audit_flags_each_corruption(spark):
     from pyspark.sql import functions as F
 
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     src = spark.createDataFrame(
         [(i, n) for i, n in enumerate([7, 3, 10, 5, 5, 4])], "rn long, n_tok int"
@@ -425,7 +425,7 @@ def test_pack_audit_flags_each_corruption(spark):
 def test_window_chunks_semantics(spark):
     import pytest
 
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     df = spark.createDataFrame(
         [(0, list(range(10))), (1, list(range(4))), (2, []), (3, None)],

@@ -78,7 +78,7 @@ def test_topk_is_take_ordered_not_global_window(spark, synth_dir):
     """VERDICT r1 #1: top-k must plan TakeOrderedAndProject (per-task
     k-row heaps) — never a global unpartitioned window that moves every
     scored row to one partition."""
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     emb = spark.createDataFrame(
         [(i, [float(i % 7), float(i % 5), 1.0]) for i in range(200)],
@@ -107,7 +107,7 @@ def test_batch_topk_window_input_is_partial_topk(spark):
     i.e. the partial runs before any shuffle."""
     import re
 
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     emb = spark.createDataFrame(
         [(i, [float(i % 7), float(i % 5), 1.0]) for i in range(200)],
@@ -146,7 +146,7 @@ def test_stats_profile_scan_shape(seq_parquet):
 
 
 def test_contamination_benchmark_is_broadcast(spark):
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     docs = spark.createDataFrame(
         [(i, f"w{i} w{i+1} w{i+2} w{i+3} w{i+4}") for i in range(200)],
@@ -159,7 +159,7 @@ def test_contamination_benchmark_is_broadcast(spark):
 
 
 def test_vocab_topk_partial_aggregates_and_take_ordered(spark):
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(i, list(range(i % 7))) for i in range(100)], "doc_id long, tokens array<int>"
@@ -198,7 +198,7 @@ def test_unigram_logprob_model_is_broadcast(spark):
     """The vocab-bounded model must join back BROADCAST onto the exploded
     tokens (never a shuffle of the corpus by token id), and the per-doc
     mean must partial-aggregate before its exchange."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(i, list(range(1, 2 + i % 7))) for i in range(100)],
@@ -214,7 +214,7 @@ def test_heavy_hitters_merge_input_is_bounded(spark):
     """The MG final merge must receive per-partition summaries (<=k rows
     each), never raw tokens: the plan between the two Python stages is a
     shuffle of the small summary frame."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(list(range(20)),) for _ in range(50)], "tokens array<int>"
@@ -278,7 +278,7 @@ def test_cluster_representatives_aggregates_without_window(spark):
     NO per-cluster window (a degenerate 10^9-member boilerplate cluster
     would sort inside one task) — and must partial-aggregate before its
     exchange."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     labels = spark.createDataFrame(
         [(i, i % 3) for i in range(30)], "id long, component long"
@@ -297,7 +297,7 @@ def test_token_contamination_is_shuffle_free(spark):
     stage against the driver-broadcast benchmark set, and the output is
     already per-doc (the join-based formulation moved every (id, hash)
     row back through Arrow AND a shuffle)."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     train = spark.createDataFrame(
         [(f"d{i}", [i, i + 1, i + 2, i + 3]) for i in range(50)],
@@ -315,7 +315,7 @@ def test_knn_label_vote_broadcasts_seeds_no_query_shuffle(spark):
     struct array (BroadcastNestedLoopJoin of a 1-row aggregate) and the
     only exchanges are the two bounded vote aggregations on Q x k rows
     — never a hashpartitioning of Q x S scored rows."""
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     rows = [(i, [float(i % 7), 1.0, float(i % 3)], i % 4) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
@@ -329,7 +329,7 @@ def test_chunk_dup_stats_shuffles_digests_only(spark, synth_dir):
     """Text never crosses an exchange: every Exchange input below the
     scan carries only doc_id/digest/count columns (the md5 happens in
     the scan-side project)."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d x y")], "doc_id long, text string"
@@ -343,7 +343,7 @@ def test_chunk_dup_stats_shuffles_digests_only(spark, synth_dir):
 
 
 def test_embedding_profile_single_global_agg(spark):
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     df = spark.createDataFrame(
         [(i, [1.0, 0.0]) for i in range(10)], "vec_id long, embedding array<float>"
@@ -355,12 +355,12 @@ def test_embedding_profile_single_global_agg(spark):
 
 def test_token_entropy_zero_shuffle(spark):
     """Entropy is a within-row statistic: ONE Arrow stage, no Exchange."""
-    from tokenqc.textops import textqc
+    from tokenqc.checks import degeneracy
 
     df = spark.createDataFrame(
         [(1, [1, 2, 3])], "doc_id long, tokens array<int>"
     )
-    plan = plan_of(textqc.token_entropy(df))
+    plan = plan_of(degeneracy.token_entropy(df))
     assert "Exchange" not in plan, plan
     assert "MapInArrow" in plan
 
@@ -368,12 +368,12 @@ def test_token_entropy_zero_shuffle(spark):
 def test_token_kgram_repetition_zero_shuffle(spark):
     """Duplicated-k-gram fraction is a within-row statistic: ONE Arrow
     stage, no Exchange."""
-    from tokenqc.textops import textqc
+    from tokenqc.checks import degeneracy
 
     df = spark.createDataFrame(
         [(1, list(range(10)))], "doc_id long, tokens array<int>"
     )
-    plan = plan_of(textqc.token_kgram_repetition(df, k=4))
+    plan = plan_of(degeneracy.token_kgram_repetition(df, k=4))
     assert "Exchange" not in plan, plan
     assert "MapInArrow" in plan
 
@@ -381,7 +381,7 @@ def test_token_kgram_repetition_zero_shuffle(spark):
 def test_length_buckets_partial_agg_single_exchange(spark):
     """The plan ledger moves <= tasks x sources x n_buckets rows: one
     hash exchange on (source, bucket) with map-side partial agg below."""
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     df = spark.createDataFrame(
         [("web", 100)], "source string, n_tok int"
@@ -397,7 +397,7 @@ def test_stratified_sample_window_is_boundary_bounded(spark):
     """The only Window ranks the BOUNDARY bucket, never the corpus: the
     threshold dim joins broadcast and exactly one Window survives, fed
     by the bucket-equality filter branch."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(i, "web") for i in range(50)], "doc_id long, source string"
@@ -415,7 +415,7 @@ def test_score_top_sample_window_is_boundary_bounded(spark):
     boundary SCORE bucket, the threshold dim broadcasts."""
     import re
 
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(i, "web", i / 100.0) for i in range(50)],
@@ -456,7 +456,7 @@ def test_degeneracy_fused_single_pass_zero_shuffle(spark):
 def test_winnow_fingerprints_zero_shuffle(spark):
     """Fingerprinting is within-row: ONE Arrow stage, arrays cross once
     as a per-doc fps array, the explode is JVM-side — no Exchange."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     df = spark.createDataFrame(
         [(1, list(range(20)))], "doc_id long, tokens array<int>"
@@ -469,7 +469,7 @@ def test_winnow_fingerprints_zero_shuffle(spark):
 def test_corpus_datacard_aggregates_before_dup_join(spark):
     """The dup tree joins per-(digest, source) AGGREGATES, never per-doc
     rows, and nothing in the card needs a Window."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(1, "a b c", "s")], "doc_id long, text string, source string"
@@ -482,7 +482,7 @@ def test_corpus_datacard_aggregates_before_dup_join(spark):
 def test_score_weighted_sample_zero_shuffle(spark):
     """The soft sampler is row-local: filter in the scan stage, no
     Exchange, no Python."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame([(1, 0.5)], "doc_id long, quality_score double")
     plan = plan_of(textqc.score_weighted_sample(df))
@@ -496,7 +496,7 @@ def test_score_weighted_sample_zero_shuffle(spark):
 def test_remap_tokens_zero_shuffle(spark):
     """The rewrite pass is ONE Arrow stage over the corpus — the
     bounded remap LUT ships as a broadcast variable, never a join."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     remap = spark.createDataFrame([(1, 2)], "old_id int, new_id int")
     df = spark.createDataFrame([(0, [1, 1])], "doc_id long, tokens array<int>")
@@ -508,7 +508,7 @@ def test_remap_tokens_zero_shuffle(spark):
 def test_window_chunks_zero_shuffle_no_python(spark):
     """Window chunking is sequence+explode+slice — all codegen'd JVM,
     sliced in the scan stage: no Exchange, no Python nodes."""
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     df = spark.createDataFrame([(0, list(range(10)))], "rn long, tokens array<int>")
     plan = plan_of(pack.window_chunks(df, size=4, stride=3))
@@ -520,7 +520,7 @@ def test_window_chunks_zero_shuffle_no_python(spark):
 def test_vocab_prune_plan_partial_agg_and_take_ordered(spark):
     """Frequency counts partial-aggregate map-side; the top-V is
     TakeOrderedAndProject (per-task heaps), never a vocab-wide sort."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(i, list(range(i % 9))) for i in range(50)], "doc_id long, tokens array<int>"
@@ -535,7 +535,7 @@ def test_boilerplate_scrub_text_crosses_one_exchange(spark):
     moves text: every Exchange except the last join's doc side must
     carry no string line/text payload — the frequency tree and the
     position collection shuffle (id, source, pos, 16-byte digest) only."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(i, f"s{i % 2}", "a\nb\nc") for i in range(20)],
@@ -563,7 +563,7 @@ def test_dsir_weights_broadcast_model_no_text_shuffle(spark):
     exchange carries the text column — features hash to longs in-row."""
     from pyspark.sql import functions as F
 
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(i, "a few plain words here", i % 3 == 0) for i in range(30)],
@@ -583,7 +583,7 @@ def test_zorder_key_no_shuffle_beyond_broadcast(spark, synth_dir):
     """zorder_key = one broadcast bounds row + in-row bit math: the
     key projection adds NO Exchange over the scan (the only exchange
     is the broadcast of the 1-row global min/max aggregate)."""
-    from tokenqc import layout
+    from corpusops import layout
 
     df = spark.read.parquet(f"{synth_dir}/sequences.parquet").select(
         "n_tok", F.pmod(F.xxhash64("doc_id"), F.lit(251)).cast("int").alias("r2")
@@ -603,7 +603,7 @@ def test_funnel_no_window_over_raw_stream(spark):
     the conv_ppm lag over the len(steps)-row summary."""
     import datetime as dt
 
-    from tokenqc import relops
+    from corpusops import relops
 
     ev = spark.createDataFrame(
         [(1, dt.datetime(2026, 1, 1), "view")],
@@ -619,7 +619,7 @@ def test_funnel_no_window_over_raw_stream(spark):
 def test_clustering_audit_overlap_join_is_broadcast(spark):
     """The pairwise overlap self-join runs on the P-row range table and
     must broadcast (metadata-sized), never shuffle the data side."""
-    from tokenqc import layout
+    from corpusops import layout
 
     df = spark.createDataFrame(
         [(i % 4, i) for i in range(100)], "p int, v int"

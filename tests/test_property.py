@@ -103,7 +103,7 @@ def _union_find_components(edges: list[tuple[int, int]]) -> dict[int, int]:
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges_strategy)
 def test_connected_components_match_union_find(spark, edges):
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     # normalize to id_a < id_b (the operator's input contract)
     pairs = [(min(a, b), max(a, b)) for a, b in edges]
@@ -119,7 +119,7 @@ def test_connected_components_string_ids_match_union_find(spark, edges):
     the fixpoint test must not assume numeric labels (sum(component)
     threw CAST_INVALID_INPUT under ANSI). Same random graphs, ids mapped
     to strings whose lexicographic order matches the numeric order."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     s = lambda n: f"doc-{n:08d}"  # noqa: E731
     pairs = [(s(min(a, b)), s(max(a, b))) for a, b in edges]
@@ -133,7 +133,7 @@ def test_connected_components_string_chain_diameter_4(spark):
     """Direct repro of the r2 judge bug: a string-id chain of diameter 4
     needs several label-propagation rounds, so the fixpoint test itself
     runs on string labels."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     chain = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
     df = spark.createDataFrame(chain, "id_a string, id_b string")
@@ -146,7 +146,7 @@ def test_connected_components_raises_when_unconverged(spark):
     not silently return split clusters."""
     import pytest
 
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     chain = [(i, i + 1) for i in range(12)]  # diameter 12 > max_iter 2
     df = spark.createDataFrame(chain, "id_a long, id_b long")
@@ -165,7 +165,7 @@ def test_token_offsets_property(spark, sizes, num_partitions):
     """Offsets = exclusive prefix sum over the order key, for ANY token
     sizes (zeros included) and ANY partition count — range-partition
     boundaries must cancel out of the two-phase scan."""
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     df = spark.createDataFrame(list(enumerate(sizes)), "rn long, n_tok int")
     got = {
@@ -195,7 +195,7 @@ def test_token_contamination_matches_python_sets(spark, train, bench, k):
     recomputation on arbitrary corpora — including empty benchmarks,
     sub-k rows, and heavy repetition (where hash bugs would double- or
     under-count)."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     tdf = spark.createDataFrame(
         [(str(i), t) for i, t in enumerate(train)],
@@ -245,7 +245,7 @@ def test_kmeans_refine_matches_numpy_lloyds(spark, vecs, n_iter):
     fallback, on arbitrary float vectors."""
     import numpy as np
 
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
@@ -291,13 +291,13 @@ rep_rows = st.lists(
 def test_token_kgram_repetition_matches_tuple_sets(spark, arrs, k):
     import numpy as np
 
-    from tokenqc.textops import textqc
+    from tokenqc.checks import degeneracy
 
     df = spark.createDataFrame(
         list(enumerate(arrs)), "doc_id long, tokens array<int>"
     )
     got = {
-        r.doc_id: r for r in textqc.token_kgram_repetition(df, k=k).collect()
+        r.doc_id: r for r in degeneracy.token_kgram_repetition(df, k=k).collect()
     }
     for i, a in enumerate(arrs):
         if len(a) < k:
@@ -322,12 +322,12 @@ ent_rows = st.lists(
 def test_token_entropy_matches_per_row_numpy(spark, arrs):
     import numpy as np
 
-    from tokenqc.textops import textqc
+    from tokenqc.checks import degeneracy
 
     df = spark.createDataFrame(
         list(enumerate(arrs)), "doc_id long, tokens array<int>"
     )
-    got = {r.doc_id: r for r in textqc.token_entropy(df).collect()}
+    got = {r.doc_id: r for r in degeneracy.token_entropy(df).collect()}
     for i, a in enumerate(arrs):
         if not a:
             assert i not in got
@@ -356,7 +356,7 @@ strat_data = st.lists(
 def test_stratified_sample_matches_naive_sort(spark, rows, na, nb):
     import hashlib
 
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(rows, "doc_id long, source string")
     counts = {"a": na, "b": nb}
@@ -387,7 +387,7 @@ def test_winnow_fingerprints_match_naive(spark, arrs, k, w):
     (every hash selected) and rows with no window."""
     from tests_winnow_naive import naive_winnow  # local helper below
 
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     df = spark.createDataFrame(
         list(enumerate(arrs)), "doc_id long, tokens array<int>"

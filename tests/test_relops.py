@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tokenqc import relops
+from corpusops import relops
 
 
 def _events(spark):
@@ -193,7 +193,7 @@ def test_rate_spikes_semantics(spark):
 
     import pytest
 
-    from tokenqc import relops
+    from corpusops import relops
 
     base = dt.datetime(2024, 1, 1)
     rows = []
@@ -224,7 +224,7 @@ def test_rate_spikes_variance_baseline_spike(spark):
     """With a non-degenerate baseline the burst actually grades SPIKE."""
     import datetime as dt
 
-    from tokenqc import relops
+    from corpusops import relops
 
     base = dt.datetime(2024, 1, 1)
     rows = []
@@ -241,7 +241,7 @@ def test_funnel_counts_hand_computed(spark):
     count; a later one does; purchases need a qualifying click first;
     same-timestamp events don't satisfy 'after'."""
     import datetime as dt
-    from tokenqc import relops
+    from corpusops import relops
 
     t = lambda s: dt.datetime(2026, 1, 1, 0, 0, s)
     rows = [

@@ -4,7 +4,7 @@
 from __future__ import annotations
 
 from tokenqc.checks import scoring
-from tokenqc.textops import textqc
+from corpusops.textops import textqc
 
 
 def test_graded_status_thresholds(spark):

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import pyarrow.parquet as pq
 
-from tokenqc import streaming, synth
+from corpusops import streaming
+
+from tokenqc import synth
 from tokenqc.checks.base import CheckConfig
 
 
@@ -546,7 +548,7 @@ def test_streaming_token_contamination_matches_batch(spark, tmp_path):
     import pyarrow as pa
     import pyspark.sql.functions as F
 
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     inp = tmp_path / "contam_in"
     inp.mkdir()
@@ -689,7 +691,7 @@ def test_streaming_incremental_dedup_matches_batch_and_restarts(spark, tmp_path)
     admits nothing already owned."""
     import pyarrow as pa
 
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     inp = tmp_path / "inc_in"
     inp.mkdir()
@@ -800,7 +802,7 @@ def test_streaming_pack_matches_batch_complete_packs(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     inp = tmp_path / "pack_in"
     inp.mkdir()
@@ -854,7 +856,7 @@ def test_streaming_pack_per_stream_keys(spark, tmp_path):
     are dense, and each stream's packs equal its own batch packing."""
     import pyarrow as pa
 
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     inp = tmp_path / "packk_in"
     inp.mkdir()
@@ -907,7 +909,7 @@ def test_streaming_rate_spikes_matches_batch(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from tokenqc import relops
+    from corpusops import relops
 
     inp = tmp_path / "spike_in"
     inp.mkdir()
@@ -965,7 +967,7 @@ def test_streaming_funnel_matches_batch_gate(spark, tmp_path):
     import pyarrow as pa
     import pyspark.sql.functions as F
 
-    from tokenqc import relops, streaming
+    from corpusops import relops, streaming
 
     t0 = dt.datetime(2026, 1, 1)
 

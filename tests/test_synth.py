@@ -83,14 +83,14 @@ def test_reference_citations_exist():
     import re
     from pathlib import Path
 
-    root = Path(__file__).resolve().parents[1] / "tokenqc"
+    repo = Path(__file__).resolve().parents[1]
     pat = re.compile(r"/root/reference/[A-Za-z0-9_./-]+")
     missing = []
     if not os.path.isdir("/root/reference"):
         import pytest
 
         pytest.skip("reference repo not mounted")
-    for py in root.rglob("*.py"):
+    for py in (p for pkg in ("tokenqc", "corpusops") for p in (repo / pkg).rglob("*.py")):
         text = py.read_text()
         for m in pat.findall(text):
             path = m.rstrip(".,)")

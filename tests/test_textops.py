@@ -6,7 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tokenqc.textops import dedup, multimodal, simsearch, textqc
+from corpusops.textops import dedup, multimodal, simsearch, textqc
+from tokenqc.checks import degeneracy
 
 
 @pytest.fixture(scope="module")
@@ -481,7 +482,7 @@ def test_audio_chunk_plan_and_features(spark):
 
 
 def test_curate_pipeline_stages(spark):
-    from tokenqc.textops import curate
+    from corpusops.textops import curate
 
     en = "the cat and the dog went to the house and that is the story of the day it was fine"
     rows = [
@@ -504,7 +505,7 @@ def test_curate_pipeline_stages(spark):
 
 
 def test_curate_lsh_path_matches_exact(spark):
-    from tokenqc.textops import curate
+    from corpusops.textops import curate
 
     en = "the cat and the dog went to the house and that is the story of the day"
     rows = [(i, en + f" variation {i % 4}") for i in range(12)] + [
@@ -615,7 +616,7 @@ def test_token_contamination_flags(spark):
     """Hand-built token corpora: a train row sharing a k-token window
     with the benchmark is flagged with the exact hit count; rows shorter
     than k are excluded (no shingles to match)."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     k = 3
     bench = spark.createDataFrame(
@@ -661,6 +662,23 @@ def test_token_contamination_flags(spark):
     assert got_p.contaminated is False
 
 
+def test_token_contamination_no_false_negatives_on_large_bench(spark):
+    """train == bench with ~20k distinct windows: every window must be
+    found. At this size many bench keys share a byte of the Bloom
+    prefilter's bitmap, so a bitmap build that drops repeated-index
+    writes turns contaminated windows into misses."""
+    import numpy as np
+
+    from corpusops.textops import textqc
+
+    rng = np.random.default_rng(7)
+    rows = [(i, rng.integers(0, 50257, 108).tolist()) for i in range(200)]
+    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
+    got = textqc.token_contamination_flags(df, df, k=8).collect()
+    assert len(got) == 200 and sum(r.n_shingles for r in got) == 200 * 101
+    assert all(r.n_contaminated == r.n_shingles for r in got)
+
+
 def test_cluster_representatives(spark):
     labels = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20)],
@@ -700,7 +718,7 @@ def test_incremental_new_docs(spark):
 
 
 def test_curate_keep_best_picks_quality_argmax(spark):
-    from tokenqc.textops import curate
+    from corpusops.textops import curate
 
     # repetitive base keeps quality under the distinct-ratio cap, so the
     # tail's extra distinct words measurably raise doc 5's score
@@ -843,7 +861,7 @@ def test_token_entropy_flags_degenerate(spark):
         (5, None),                  # excluded
     ]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
-    out = {r.doc_id: r for r in textqc.token_entropy(df).collect()}
+    out = {r.doc_id: r for r in degeneracy.token_entropy(df).collect()}
     assert set(out) == {0, 1, 2, 3}
     assert out[0].entropy == 0.0 and out[0].low_entropy and out[0].n_distinct == 1
     assert out[1].entropy == round(math.log(4), 6) and out[1].low_entropy
@@ -864,7 +882,7 @@ def test_token_kgram_repetition_stats(spark):
         (4, None),               # excluded
     ]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
-    out = {r.doc_id: r for r in textqc.token_kgram_repetition(df, k=8).collect()}
+    out = {r.doc_id: r for r in degeneracy.token_kgram_repetition(df, k=8).collect()}
     assert set(out) == {0, 1, 2}
     assert out[0].dup_kgram_frac == 0.0 and not out[0].repetitive
     assert out[0].n_kgrams == 13 and out[0].n_distinct_kgrams == 13
@@ -881,7 +899,7 @@ def test_token_kgram_repetition_order_sensitive(spark):
     # window sets: the polynomial hash keeps positional sensitivity
     rows = [(0, [1, 2, 3, 1, 2, 3]), (1, [3, 2, 1, 3, 2, 1])]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
-    out = {r.doc_id: r for r in textqc.token_kgram_repetition(df, k=3).collect()}
+    out = {r.doc_id: r for r in degeneracy.token_kgram_repetition(df, k=3).collect()}
     # both tile with period 3: 4 windows, 3 distinct phases
     assert out[0].n_distinct_kgrams == 3 and out[1].n_distinct_kgrams == 3
     assert out[0].dup_kgram_frac == 0.25
@@ -926,7 +944,7 @@ def test_stratified_sample_zero_and_validation(spark):
 # length-bucket batching plan
 # ---------------------------------------------------------------------------
 def test_length_buckets_semantics(spark):
-    from tokenqc.textops import pack
+    from corpusops.textops import pack
 
     rows = [
         ("web", 1), ("web", 64), ("web", 65), ("web", 512),
@@ -959,7 +977,7 @@ def test_dup_span_coverage_hand_computed(spark):
     """Interval-merge arithmetic pinned by hand: overlapping windows
     merge, disjoint windows add, within-doc-only repeats don't count
     (min_docs=2 needs DISTINCT docs), docs shorter than k are excluded."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     k = 3
     rows = [
@@ -986,7 +1004,7 @@ def test_dup_span_coverage_hand_computed(spark):
 def test_dup_span_coverage_containment_and_min_docs(spark):
     """A window fully contained in earlier coverage contributes 0 (the
     sweep clamps at the running max end); min_docs=3 drops pairs."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     rows = [
         (0, [1, 2, 3, 4, 5]),
@@ -1011,7 +1029,7 @@ def test_dup_span_scrub_hand_computed(spark):
     """Scrub removes exactly the merged covered intervals; pass-through
     rows (short, clean, empty) keep their arrays; a fully-duplicated
     doc collapses to []."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     rows = [
         # shares the [10,20,30,40] 4-gram region with doc 1 -> positions
@@ -1038,7 +1056,7 @@ def test_dup_span_scrub_hand_computed(spark):
 def test_dup_span_scrub_disjoint_intervals(spark):
     """Two disjoint shared spans in one doc scrub independently (the
     gaps-and-islands merge keeps them separate islands)."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     rows = [
         (0, [1, 2, 3, 50, 51, 52, 7, 8, 9]),  # shares head AND tail trigrams
@@ -1184,7 +1202,7 @@ def test_winnow_guarantee_shared_passage(spark):
     """The MOSS guarantee: documents sharing a run of >= w + k - 1
     tokens share at least one fingerprint, and the pairs report finds
     them; unrelated documents share none."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     phrase = [(j * 37 + 11) % 50257 for j in range(1, 41)]
     rows = [
@@ -1207,7 +1225,7 @@ def test_winnow_guarantee_shared_passage(spark):
 def test_winnow_short_rows_excluded_and_dup_phrase_distinct(spark):
     """Rows shorter than k + w - 1 have no window; a phrase repeated
     inside ONE doc contributes each fingerprint once (distinct-per-doc)."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     phrase = list(range(100, 130))
     rows = [(0, list(range(14))), (1, phrase * 4)]
@@ -1222,7 +1240,7 @@ def test_winnow_short_rows_excluded_and_dup_phrase_distinct(spark):
 def test_winnow_overlap_df_cap_drops_boilerplate(spark):
     """A fingerprint hotter than max_fp_df is pruned from candidate
     generation: pairs supported ONLY by it disappear."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     fps = spark.createDataFrame(
         [(i, 777) for i in range(6)] + [(0, 1), (1, 1), (0, 2), (1, 2), (0, 3), (1, 3)],
@@ -1237,7 +1255,7 @@ def test_winnow_overlap_df_cap_drops_boilerplate(spark):
 def test_corpus_datacard_planted(spark):
     """Cross-source copies count as duplicated in BOTH sources; null
     text/source rows are excluded; lang mix and integer dup_ppm exact."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     rows = [
         (0, "the cat and the dog sat of to is in that", "web"),
@@ -1264,7 +1282,7 @@ def test_corpus_datacard_persist_projection(spark):
     aggregation trees read one cached scan — InMemoryTableScan in the
     plan); persist_projection=False removes the cache and recomputes,
     with identical results either way."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     rows = [
         (0, "the cat and the dog sat of to is in that", "web"),
@@ -1287,7 +1305,7 @@ def test_corpus_datacard_persist_projection(spark):
 def test_corpus_datacard_quality_matches_quality_score(spark):
     """The card's mean_quality is the mean of quality_score's per-doc
     scores — one formula, no drift."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog again and again", "s"),
@@ -1311,7 +1329,7 @@ def test_score_weighted_sample_exact_semantics(spark):
 
     import pytest
 
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     rows = [(0, 1.0), (1, 0.5), (2, 0.0), (3, -0.2), (4, 1.7), (5, None)]
     df = spark.createDataFrame(rows, "doc_id long, quality_score double")
@@ -1337,7 +1355,7 @@ def test_score_weighted_sample_exact_semantics(spark):
 
 
 def test_remap_tokens_strict_and_passthrough(spark):
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     remap = spark.createDataFrame([(2, 100), (5, 200)], "old_id int, new_id int")
     df = spark.createDataFrame(
@@ -1357,7 +1375,7 @@ def test_remap_tokens_strict_and_passthrough(spark):
 def test_remap_tokens_guards(spark):
     import pytest
 
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame([(0, [1])], "doc_id long, tokens array<int>")
     empty = spark.createDataFrame([], "old_id int, new_id int")
@@ -1374,7 +1392,7 @@ def test_remap_tokens_guards(spark):
 def test_semdedup_keeps_one_rep_per_group(spark):
     import pytest
 
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     # two planted near-dup families + singletons; seeds = 2 smallest ids
     rows = [
@@ -1403,7 +1421,7 @@ def test_semdedup_keeps_one_rep_per_group(spark):
 def test_semdedup_cross_cell_pairs_missed_by_design(spark):
     """The documented SemDeDup recall tradeoff: near-identical vectors
     assigned to DIFFERENT cells are not paired."""
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     rows = [
         (0, [1.0, 0.0]),
@@ -1423,7 +1441,7 @@ def test_split_leakage_audit_diagonal_for_cluster_split(spark):
     """Any pair graph: cluster_split's leakage matrix is purely
     diagonal, while a splitter that separates a planted pair shows it
     off-diagonal with the exact count."""
-    from tokenqc.textops import dedup
+    from corpusops.textops import dedup
 
     docs = spark.createDataFrame(
         [(f"d{i}",) for i in range(8)], "doc_id string"
@@ -1451,7 +1469,7 @@ def test_vocab_prune_plan_feeds_remap_tokens(spark):
     V) with un-kept ids collapsed to UNK."""
     import pytest
 
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(0, [5, 5, 5, 9, 9, 2]), (1, [5, 9, 7]), (2, [2, 7])],
@@ -1483,7 +1501,7 @@ def test_boilerplate_scrub_planted_chrome(spark):
     must SURVIVE in src_b docs."""
     import pytest
 
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     hdr, ftr = "NAV home about", "(c) corp"
     rows = [
@@ -1513,7 +1531,7 @@ def test_boilerplate_scrub_planted_chrome(spark):
 def test_boilerplate_scrub_keeps_duplicate_content_within_one_doc(spark):
     """A line repeated many times INSIDE one doc counts once toward the
     document frequency (count_distinct doc_id), so it is not chrome."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame(
         [(0, "s", "x\nx\nx\nx\nx"), (1, "s", "y")],
@@ -1532,7 +1550,7 @@ def test_dsir_weights_prefers_target_like_docs(spark):
 
     from pyspark.sql import functions as F
 
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     rows = [
         (0, "good clean prose text", True),
@@ -1615,7 +1633,7 @@ def test_bigram_logprob_hand_computed(spark):
     """Interpolated bigram math pinned against a numpy replay."""
     import math
     from collections import Counter
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     rows = [
         (0, [1, 2, 1, 2, 3]),
@@ -1648,7 +1666,7 @@ def test_bigram_logprob_hand_computed(spark):
 
 def test_bigram_logprob_lam_guard(spark):
     import pytest
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     df = spark.createDataFrame([(0, [1, 2])], "doc_id long, tokens array<int>")
     with pytest.raises(ValueError):
@@ -1661,7 +1679,7 @@ def test_scalar_quantize_hand_computed(spark):
     """Affine codes + reconstruction error against a numpy replay;
     constant dims code to 0 with zero error; NaN/null/empty excluded."""
     import numpy as np
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     rows = [
         (0, [0.0, 10.0, 5.0]),
@@ -1692,7 +1710,7 @@ def test_scalar_quantize_hand_computed(spark):
 
 def test_scalar_quantize_levels_guard(spark):
     import pytest
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     df = spark.createDataFrame([(0, [1.0])], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError):
@@ -1702,7 +1720,7 @@ def test_scalar_quantize_levels_guard(spark):
 def test_topk_recall_hand_computed(spark):
     """Set-coverage math: partial overlap, zero overlap, rank>k rows
     ignored, missing query in candidates -> 0 hits."""
-    from tokenqc.textops import simsearch
+    from corpusops.textops import simsearch
 
     truth = spark.createDataFrame(
         [(0, 1, 10), (0, 2, 11), (0, 3, 12),
@@ -1727,7 +1745,7 @@ def test_pmi_top_pairs_hand_computed(spark):
     """PMI formula + min_count guard against a numpy replay."""
     import math
     from collections import Counter
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     # pair (7,8) occurs 6x and only with each other -> high PMI;
     # (1,2) occurs 6x but 1 and 2 are everywhere -> lower PMI;
@@ -1763,7 +1781,7 @@ def test_pmi_top_pairs_hand_computed(spark):
 def test_gopher_rules_hand_computed(spark):
     """Each rule flips on its planted violation; keep is the
     conjunction; ratio rules on empty docs coalesce to False."""
-    from tokenqc.textops import textqc
+    from corpusops.textops import textqc
 
     good = ("the quick brown fox jumps over that lazy dog and it runs off "
             "to be with a friend of mine having . " * 5).strip()

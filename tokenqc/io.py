@@ -220,9 +220,12 @@ def read_table(
 ) -> DataFrame | None:
     """Read a result table (optionally one run's slice); None if absent.
 
-    Absence is detected by *attempting the read* and catching the
-    path-not-found / no-schema AnalysisException — not by os.path probes,
-    which silently fail for hdfs:// and s3a:// locations."""
+    Absence is checked before the read, through the Hadoop FileSystem
+    (`_exists`): os.path probes silently fail for hdfs:// and s3a://
+    locations, and reading a missing path logs a WARN and a stack trace
+    for every table a fresh run has not written yet. A directory that
+    exists but holds no parquet schema still reads as absent via the
+    caught AnalysisException."""
     if use_iceberg(spark):
         ident = _ident(spark, table)
         if not spark.catalog.tableExists(ident):
@@ -236,6 +239,8 @@ def read_table(
         return df
     base = os.path.join(_qualify(base_dir), table)
     path = base if run_id is None else os.path.join(base, f"run_id={run_id}")
+    if not _exists(spark, path):
+        return None
     try:
         return spark.read.option("basePath", base).parquet(path)
     except AnalysisException:

@@ -23,7 +23,7 @@ outcome is computable in closed form (and in plain SQL for oracles):
                                               ; NULL       if i % 251 == 8
 
 Generation is numpy + pyarrow (no Spark dependency), so pytest fixtures
-are fast and bench.py can synthesize any scale up front.
+are fast and the benchmark (qcbench/) can synthesize any scale up front.
 """
 
 from __future__ import annotations
