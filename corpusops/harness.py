@@ -518,7 +518,7 @@ def oracle_seq_heavy_hitters() -> str:
 
 
 def q_seq_drift_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL drift gate — observed histograms, applyInPandas chi2/KS
+    """The FULL drift gate — observed histograms, driver-side chi2/KS
     p-values, threshold decision — reduced to its deterministic output
     (source, status, n_rows) so DuckDB can oracle it: web as its own
     baseline must PASS, far-off sources FAIL, thin sources UNKNOWN."""

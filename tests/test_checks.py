@@ -81,6 +81,38 @@ def test_uniqueness_salted_matches_plain(tables):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
+def test_key_totals_feed_violations_and_row_totals(tables):
+    """The once-per-run uniqueness frame gives both outputs exactly: its
+    dup_key rows are the plain dup-count violations, and its
+    per-partition sums are the per-partition row counts (NULL doc_ids
+    included)."""
+    seq = tables["sequences"]
+    kt = uniqueness.key_totals(seq, CFG)
+    cols = ["partition_id", "doc_id", "check_name", "observed", "expected"]
+    got = uniqueness.violations(seq, CFG, key_totals=kt).select(*cols).collect()
+    want = uniqueness.violations(seq, CFG).select(*cols).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want)) and want
+    totals = {r[0]: r[1] for r in kt.groupBy("partition_id").agg(F.sum("n")).collect()}
+    counts = seq.groupBy(cb.partition_id_col(CFG).alias("p")).count().collect()
+    assert totals == {r.p: r["count"] for r in counts}
+    assert seq.where("doc_id is null").count() > 0
+
+
+def test_key_totals_scan_the_input_once(tables, synth_dir):
+    """One linear plan: the final plan of the persisted frame holds exactly
+    one FileScan, of the input (AQE's plan string also prints the initial
+    plan, which is not counted)."""
+    kt = uniqueness.key_totals(tables["sequences"], CFG).persist()
+    try:
+        kt.count()
+        plan = kt._jdf.queryExecution().executedPlan().toString()
+    finally:
+        kt.unpersist()
+    final = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    scans = [ln for ln in final.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1 and f"{synth_dir}/sequences.parquet" in scans[0]
+
+
 def test_enumerate_rows_skewsafe_matches_window(spark, tables):
     """The skew-safe enumeration (agg + broadcast dup-dimension join,
     no per-key window) must emit the exact (doc_id → surplus count)

@@ -3,6 +3,8 @@ p-value math is validated against closed-form/known values."""
 
 from __future__ import annotations
 
+import dataclasses
+import json
 import math
 
 import numpy as np
@@ -271,3 +273,94 @@ def test_embedding_drift_hand_computed(spark):
     back = {r["dim"]: r["status"] for r in
             drift.embedding_drift(base, cur, z_max=1e9).collect()}
     assert back[2] == "DROPPED_DIM"
+
+
+# ---------------------------------------------------------------------------
+# parity with the grouped-pandas-apply formulation (the oracle runs the
+# same drift_stats_pdf through Spark's applyInPandas and grades in SQL)
+# ---------------------------------------------------------------------------
+_STATS = ("chi2", "chi2_p", "ks_d", "ks_p")
+_COLS = ("source", "status", "n_rows", "chi2", "chi2_p", "ks_d", "ks_p", "out_frac")
+
+
+def _applyinpandas_verdicts(df, baseline_hist, cfg):
+    """drift.verdicts as a groupBy().applyInPandas(drift_stats_pdf) plus a
+    Spark SQL status rule, with the to_json details of the runner's
+    drift verdict rows."""
+    from pyspark.sql import functions as F
+
+    schema = (
+        "source string, n_rows long, chi2 double, chi2_p double, "
+        "ks_d double, ks_p double, out_frac double, has_baseline boolean"
+    )
+    joined = drift.observed_histogram(df, cfg).join(
+        baseline_hist, on=["source", "bucket"], how="full_outer"
+    )
+    stats = joined.groupBy("source").applyInPandas(drift.drift_stats_pdf, schema=schema)
+    alpha = float(cfg.drift_alpha)
+    status = (
+        F.when(~F.col("has_baseline"), F.lit("UNKNOWN"))
+        .when(F.col("n_rows") < cfg.min_drift_rows, F.lit("UNKNOWN"))
+        .when(
+            (F.col("chi2_p") < alpha)
+            | (F.col("ks_p") < alpha)
+            | (F.col("out_frac") > cfg.drift_out_frac_max),
+            F.lit("FAIL"),
+        )
+        .otherwise(F.lit("PASS"))
+    )
+    return stats.select(
+        *_COLS[:1], status.alias("status"), *_COLS[2:],
+        F.to_json(F.struct(*_STATS)).alias("details"),
+    )
+
+
+def _assert_parity(df, baseline_hist, cfg):
+    from tokenqc.runner import _source_verdicts
+
+    want = {r.source: r for r in _applyinpandas_verdicts(df, baseline_hist, cfg).collect()}
+    got_df = drift.verdicts(df, baseline_hist, cfg)
+    assert tuple(got_df.columns) == _COLS
+    got = {r.source: r for r in got_df.collect()}
+    assert set(got) == set(want)
+    for src, w in want.items():
+        assert tuple(got[src]) == tuple(w[c] for c in _COLS), src
+    details = {
+        r.check_name: json.loads(r.details)
+        for r in _source_verdicts("drift", got_df, _STATS)
+    }
+    assert details == {
+        None if s is None else f"drift:{s}": json.loads(w.details) for s, w in want.items()
+    }
+    return {src: r.status for src, r in got.items()}
+
+
+def test_verdicts_match_applyinpandas_on_planted_fixture(tables):
+    statuses = _assert_parity(tables["sequences"], tables["baseline_hist"], CFG)
+    assert statuses["code"] == "FAIL" and statuses["spam9"] == "UNKNOWN"
+
+
+def test_verdicts_match_applyinpandas_on_edge_sources(spark):
+    """A source without a baseline, a baseline-only source (no observed
+    rows: every statistic NaN), a source whose whole mass lies outside
+    its baseline's support, and a NULL-source baseline row — graded with
+    min_drift_rows=0 so the NaN statistics reach the FAIL rule, and with
+    the default row floor."""
+    seq = spark.createDataFrame(
+        [(f"a{i}", "src_a", 10 + i % 300) for i in range(400)]
+        + [(f"b{i}", "nobase", 5 + i % 7) for i in range(50)]
+        + [(f"c{i}", "outside", 1000 + i) for i in range(40)],
+        "doc_id string, source string, n_tok int",
+    )
+    base = spark.createDataFrame(
+        [("src_a", b, 0.25) for b in range(4)]
+        + [("baseonly", 0, 0.5), ("baseonly", 1, 0.5), ("outside", 0, 1.0), (None, 0, 1.0)],
+        "source string, bucket int, p double",
+    )
+    edge = _assert_parity(seq, base, dataclasses.replace(CFG, min_drift_rows=0))
+    # NaN statistics never select FAIL: the baseline-only source passes
+    assert edge == {
+        "src_a": "FAIL", "nobase": "UNKNOWN", "baseonly": "PASS", "outside": "FAIL", None: "PASS",
+    }
+    floor = _assert_parity(seq, base, CFG)
+    assert floor["src_a"] == "FAIL" and floor["outside"] == "UNKNOWN"

@@ -383,3 +383,77 @@ def test_degenerate_gate_end_to_end(spark, tmp_path):
     assert dverd.count() == 4
     assert dverd.where("status = 'FAIL'").count() >= 1
     assert res.verdicts.where("check_name = 'completeness'").count() == 4
+
+
+@pytest.mark.parametrize("run_id", ["000123", "1e5"])
+def test_run_id_reads_back_as_written(spark, tables, tmp_path, run_id):
+    """The run_id layout column reads back as the string the run was given,
+    on the run and on its resume. Inferred from the directory names,
+    "000123" came back as the integer 123 and "1e5" as decimal 100000."""
+    cfg = CheckConfig(n_partitions=4, checks=("completeness", "uniqueness"))
+    runner = QCRunner(spark, cfg, out_dir=str(tmp_path / "q"))
+    first = runner.run(tables["sequences"], run_id=run_id)
+    resumed = runner.run(tables["sequences"], run_id=run_id)
+    assert resumed.skipped_partitions == [0, 1, 2, 3]
+    for res in (first, resumed):
+        for frame in (res.verdicts, res.violations, res.state):
+            assert dict(frame.dtypes)["run_id"] == "string"
+            assert [r.run_id for r in frame.select("run_id").distinct().collect()] == [run_id]
+
+
+def test_read_back_runs_no_spark_job(spark, tables, tmp_path):
+    """The result tables are read back with pinned schemas: opening the
+    run's current view of all three starts no (schema-inference) job."""
+    from tokenqc import io as qio
+    from tokenqc.runner import TABLES
+
+    out = str(tmp_path / "q")
+    cfg = CheckConfig(n_partitions=4, checks=("completeness", "uniqueness"))
+    QCRunner(spark, cfg, out_dir=out).run(tables["sequences"], run_id="rb")
+    sc = spark.sparkContext
+    sc.setJobGroup("read-back-probe", "read-back-probe")
+    try:
+        frames = [qio.read_current(spark, out, t, "rb") for t in TABLES]
+        assert list(sc.statusTracker().getJobIdsForGroup("read-back-probe")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(f is not None for f in frames)
+
+
+def test_default_checks_start_no_python_worker(spark, tables, tmp_path, monkeypatch):
+    """A default-check run never goes through a grouped pandas apply (drift
+    is graded on the driver): with applyInPandas made to raise, the run
+    has no errors and the verdicts of an unpatched run. Its timings cover
+    the resume point and the read-back too."""
+    from pyspark.sql.group import GroupedData
+
+    cfg = CheckConfig(n_partitions=8)
+    inputs = dict(
+        sequences=tables["sequences"],
+        allowed_sources=tables["allowed_sources"],
+        baseline_hist=tables["baseline_hist"],
+        reference_tokens=tables["reference_tokens"],
+    )
+    want = QCRunner(spark, cfg, out_dir=str(tmp_path / "a")).run(**inputs, run_id="py")
+
+    def no_pandas_apply(*a, **k):
+        raise AssertionError("applyInPandas called")
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", no_pandas_apply)
+    got = QCRunner(spark, cfg, out_dir=str(tmp_path / "b")).run(**inputs, run_id="py")
+    assert got.errors == {}
+
+    def rows(res):
+        return sorted(
+            (
+                tuple(r) for r in res.verdicts.select(
+                    "partition_id", "check_name", "status", "n_rows", "n_viol", "details"
+                ).collect()
+            ),
+            key=str,
+        )
+
+    assert rows(got) == rows(want)
+    assert any(r[1].startswith("drift:") for r in rows(got))
+    assert {"resume_point", "run_plans", "read_back"} <= set(got.timings)

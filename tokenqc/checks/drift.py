@@ -5,11 +5,13 @@ verdicts (/root/reference/README.md expected-status table,
 bin/analyze_joss.py:302-345): observed behavior is compared to a stored
 expectation, and a graded verdict is emitted.
 
-Scale plan (the pandas-UDF discipline from BASELINE.json `input_hint`):
-the statistics run on **pre-aggregated histograms, never raw rows**. One
-distributed `groupBy(source, bucket).count()` reduces 10^12 rows to
-(sources × 64 buckets) rows; `applyInPandas` then computes KS and
-chi-square per source on those tiny groups. Python touches kilobytes.
+Scale plan: the statistics run on **pre-aggregated histograms, never raw
+rows**. One distributed `groupBy(source, bucket).count()` reduces 10^12
+rows to (sources × 64 buckets) rows, full-outer-joined to the baseline.
+That bounded table is collected to the driver, where `drift_stats_pdf`
+computes KS and chi-square per source through a pandas groupby. Python
+touches kilobytes, and no Python worker starts: a grouped pandas apply
+would pay a shuffle and a worker round trip for the same few rows.
 
 Statistics (numpy-only; scipy is not in the image):
 - Pearson chi-square of observed bucket counts vs expected = n·p, with
@@ -21,9 +23,10 @@ Statistics (numpy-only; scipy is not in the image):
   (SURVEY.md section 7.3) — bucket width is pinned in CheckConfig and
   tested against raw-data KS at small scale.
 
-Verdict: FAIL if either p < alpha (given ≥ min_drift_rows rows);
-UNKNOWN when the source has no baseline — mirroring the reference's
-missing-input default (bin/analyze_joss.py:96-105).
+Verdict (graded on the driver, `grade`): FAIL if either p < alpha or
+the out-of-support fraction exceeds its maximum (given ≥ min_drift_rows
+rows); UNKNOWN when the source has no baseline — mirroring the
+reference's missing-input default (bin/analyze_joss.py:96-105).
 """
 
 from __future__ import annotations
@@ -36,12 +39,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tokenqc.checks.base import CheckConfig
+from tokenqc.schema import FAIL, PASS, UNKNOWN
 
 CHECK = "drift"
 
-_RESULT_SCHEMA = (
-    "source string, n_rows long, chi2 double, chi2_p double, "
-    "ks_d double, ks_p double, out_frac double, has_baseline boolean"
+_VERDICT_SCHEMA = (
+    "source string, status string, n_rows long, chi2 double, chi2_p double, "
+    "ks_d double, ks_p double, out_frac double"
 )
 
 
@@ -171,36 +175,47 @@ def observed_histogram(df: DataFrame, cfg: CheckConfig) -> DataFrame:
     )
 
 
-def verdicts(df: DataFrame, baseline_hist: DataFrame, cfg: CheckConfig) -> DataFrame:
-    """Per-source drift verdict rows.
+def grade(stats: pd.DataFrame, cfg: CheckConfig) -> pd.Series:
+    """The drift verdict of each `drift_stats_pdf` row.
 
-    Output: (source, status, n_rows, chi2, chi2_p, ks_d, ks_p).
+    A NaN statistic never selects FAIL, because a comparison with NaN is
+    false. That is the grade a Spark SQL form of the rule gives too: the
+    frame `verdicts` returns holds NULL where pandas has NaN, and a NULL
+    comparison never selects its branch either."""
+    alpha = float(cfg.drift_alpha)
+    fail = (
+        (stats["chi2_p"] < alpha)
+        | (stats["ks_p"] < alpha)
+        | (stats["out_frac"] > cfg.drift_out_frac_max)
+    )
+    status = np.where(fail, FAIL, PASS)
+    status = np.where(stats["n_rows"] < cfg.min_drift_rows, UNKNOWN, status)
+    status = np.where(stats["has_baseline"].astype(bool), status, UNKNOWN)
+    return pd.Series(status, index=stats.index)
+
+
+def verdicts(df: DataFrame, baseline_hist: DataFrame, cfg: CheckConfig) -> DataFrame:
+    """Per-source drift verdict rows, graded on the driver.
+
+    The observed histogram full-outer-joined to the baseline holds at
+    most sources × buckets rows: it is collected, and each source (a NULL
+    source included) goes through `drift_stats_pdf` and `grade`. Eager:
+    the histogram jobs run before it returns a local frame of
+    (source, status, n_rows, chi2, chi2_p, ks_d, ks_p, out_frac), with
+    NaN statistics as NULL.
     """
     hist = observed_histogram(df, cfg)
     joined = hist.join(baseline_hist, on=["source", "bucket"], how="full_outer")
-    stats = joined.groupBy("source").applyInPandas(drift_stats_pdf, schema=_RESULT_SCHEMA)
-    alpha = float(cfg.drift_alpha)
-    status = (
-        F.when(~F.col("has_baseline"), F.lit("UNKNOWN"))
-        .when(F.col("n_rows") < cfg.min_drift_rows, F.lit("UNKNOWN"))
-        .when(
-            (F.col("chi2_p") < alpha)
-            | (F.col("ks_p") < alpha)
-            | (F.col("out_frac") > cfg.drift_out_frac_max),
-            F.lit("FAIL"),
-        )
-        .otherwise(F.lit("PASS"))
+    pdf = joined.select("source", "bucket", "cnt", "p").toPandas()
+    spark = df.sparkSession
+    if pdf.empty:
+        return spark.createDataFrame([], _VERDICT_SCHEMA)
+    stats = pd.concat(
+        [drift_stats_pdf(g) for _, g in pdf.groupby("source", dropna=False, sort=False)],
+        ignore_index=True,
     )
-    return stats.select(
-        "source",
-        status.alias("status"),
-        "n_rows",
-        "chi2",
-        "chi2_p",
-        "ks_d",
-        "ks_p",
-        "out_frac",
-    )
+    stats.insert(1, "status", grade(stats, cfg))
+    return spark.createDataFrame(stats.drop(columns="has_baseline"), _VERDICT_SCHEMA)
 
 
 def js_divergence(

@@ -26,22 +26,58 @@ from tokenqc.skew import salted_count
 CHECK = "uniqueness"
 
 
-def violations(df: DataFrame, cfg: CheckConfig, salt: int = 0) -> DataFrame:
+def key_totals(df: DataFrame, cfg: CheckConfig) -> DataFrame:
+    """(partition_id, dup_key, n): per lineage partition, the row count of
+    each duplicated doc_id (dup_key) plus one row (dup_key NULL) summing
+    every other row — at most P + dup-key rows.
+
+    Both outputs of a run's uniqueness pass come from this one frame:
+    its dup_key rows are the uniqueness violations (:func:`violations`
+    with ``key_totals=``), and its per-partition sums are the row totals
+    of the verdict grid. partition_id is a function of doc_id, so one
+    linear plan — groupBy(doc_id), then a regroup by (partition_id,
+    dup_key) — scans the input once for both. (Two groupBy(doc_id)
+    branches unioned would not share the exchange: the optimizer pushes
+    isnotnull(doc_id) below one of them, and the input is read twice.)
+    NULL doc_ids count toward their partition's total, never as dups.
+    """
+    counts = df.select("doc_id").groupBy("doc_id").agg(F.count(F.lit(1)).alias("cnt"))
+    return counts.groupBy(
+        partition_id_col(cfg).alias("partition_id"),
+        F.when(F.col("doc_id").isNotNull() & (F.col("cnt") > 1), F.col("doc_id")).alias(
+            "dup_key"
+        ),
+    ).agg(F.sum("cnt").alias("n"))
+
+
+def violations(
+    df: DataFrame, cfg: CheckConfig, salt: int = 0, key_totals: DataFrame | None = None
+) -> DataFrame:
     """(partition_id, doc_id, check_name, observed, expected) for dup keys.
 
     NULL doc_ids are excluded — they are completeness violations, not
     duplicates of one another. partition_id is derived from the key hash,
-    so a duplicate group lands in exactly one verdict partition.
+    so a duplicate group lands in exactly one verdict partition. Given
+    `key_totals` (the :func:`key_totals` frame of `df`), the rows are
+    read off it instead of aggregating `df` again.
     """
-    keyed = df.where(F.col("doc_id").isNotNull()).select("doc_id")
-    counts = (
-        salted_count(keyed, "doc_id", salt)
-        if salt > 1
-        else keyed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return counts.where(F.col("cnt") > 1).select(
-        partition_id_col(cfg).alias("partition_id"),
-        F.col("doc_id"),
+    if key_totals is not None:
+        dups = key_totals.where(F.col("dup_key").isNotNull()).select(
+            "partition_id", F.col("dup_key").alias("doc_id"), F.col("n").alias("cnt")
+        )
+    else:
+        keyed = df.where(F.col("doc_id").isNotNull()).select("doc_id")
+        counts = (
+            salted_count(keyed, "doc_id", salt)
+            if salt > 1
+            else keyed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        dups = counts.where(F.col("cnt") > 1).select(
+            partition_id_col(cfg).alias("partition_id"), "doc_id", "cnt"
+        )
+    return dups.select(
+        "partition_id",
+        "doc_id",
         F.lit(CHECK).alias("check_name"),
         F.concat(F.lit("count="), F.col("cnt")).alias("observed"),
         F.lit("count == 1").alias("expected"),

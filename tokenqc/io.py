@@ -31,6 +31,25 @@ from pyspark.sql import functions as F
 
 _NS_CONF = "spark.tokenqc.iceberg.namespace"
 
+#: Data columns of the runner's result tables. The writers produce these
+#: columns, and the reader pins them, so a read-back infers nothing.
+TABLE_SCHEMAS = {
+    "violations": (
+        "partition_id int, doc_id string, check_name string, "
+        "observed string, expected string"
+    ),
+    "verdicts": (
+        "partition_id int, check_name string, status string, "
+        "n_rows long, n_viol long, details string"
+    ),
+    "qc_state": (
+        "partition_id int, status string, n_rows long, n_viol long, "
+        "wall_ms long, finished_at timestamp"
+    ),
+}
+#: The (run_id, batch) layout columns every result table is partitioned by.
+PARTITION_SCHEMA = "run_id string, batch int"
+
 
 # ---------------------------------------------------------------------------
 # Iceberg probe + identifiers
@@ -224,8 +243,14 @@ def read_table(
     (`_exists`): os.path probes silently fail for hdfs:// and s3a://
     locations, and reading a missing path logs a WARN and a stack trace
     for every table a fresh run has not written yet. A directory that
-    exists but holds no parquet schema still reads as absent via the
-    caught AnalysisException."""
+    exists but holds no parquet file reads as absent for a table without
+    a pinned schema (the caught AnalysisException), and as an empty
+    frame for a pinned one.
+
+    The result tables of `TABLE_SCHEMAS` are read with their schema
+    pinned, partition columns included: no schema-inference job runs,
+    and `run_id` stays the string that was written (inferred, "000123"
+    would read back as the integer 123)."""
     if use_iceberg(spark):
         ident = _ident(spark, table)
         if not spark.catalog.tableExists(ident):
@@ -241,8 +266,11 @@ def read_table(
     path = base if run_id is None else os.path.join(base, f"run_id={run_id}")
     if not _exists(spark, path):
         return None
+    reader = spark.read.option("basePath", base)
+    if table in TABLE_SCHEMAS:
+        reader = reader.schema(f"{TABLE_SCHEMAS[table]}, {PARTITION_SCHEMA}")
     try:
-        return spark.read.option("basePath", base).parquet(path)
+        return reader.parquet(path)
     except AnalysisException:
         return None
 

@@ -30,27 +30,37 @@ Execution shape (scale-first):
 1. one narrow pass over the fact table computes every row-level facet
    (completeness, structural, format, referential-via-broadcast) and
    writes violation rows — no shuffle;
-2. uniqueness (shuffle on doc_id, map-side combined) is planned ONCE per
-   run — a multi-batch run pays one dup-count shuffle, not one per
-   batch — and the persisted key-level violations are sliced per batch;
-3. verdict counts aggregate the *persisted* violation frame plus one
-   cheap totals scan (doc_id only) that overlaps the violations write;
-4. drift runs ONCE per run on the full input (64-buckets-per-source
-   aggregate via applyInPandas) and lands in the first batch's verdict
-   slice — per-batch drift would compute chi2/KS on partial histograms;
+2. uniqueness is planned ONCE per run as one linear, persisted
+   aggregate: groupBy(doc_id) counts, regrouped by (partition_id,
+   dup_key). Its dup-key rows are the uniqueness violations (sliced per
+   batch), and its per-partition sums are every batch's row totals, so
+   the input is scanned once for both and a multi-batch run pays one
+   dup-count shuffle, not one per batch;
+3. verdict counts aggregate the *persisted* violation frame against
+   those totals (without uniqueness in the check set, a doc_id-only
+   totals scan overlaps the violations write instead);
+4. drift runs ONCE per run on the full input, on a side thread that
+   overlaps the violations write: the 64-buckets-per-source histogram
+   joined to the baseline is collected and graded on the driver, and its
+   verdict rows are appended to the first batch's verdict slice in
+   Python — per-batch drift would compute chi2/KS on partial
+   histograms, and a run with the default checks starts no Python
+   worker;
 5. qc_state rows are written per batch (idempotent overwrite-by-batch).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from tokenqc import io as qio
@@ -69,14 +79,9 @@ from tokenqc.schema import FAIL, PASS, UNKNOWN
 
 TABLES = ("violations", "verdicts", "qc_state")
 
-_VERDICT_SCHEMA = (
-    "partition_id int, check_name string, status string, "
-    "n_rows long, n_viol long, details string"
-)
-_STATE_SCHEMA = (
-    "partition_id int, status string, n_rows long, n_viol long, "
-    "wall_ms long, finished_at timestamp"
-)
+_VERDICT_SCHEMA = qio.TABLE_SCHEMAS["verdicts"]
+_STATE_SCHEMA = qio.TABLE_SCHEMAS["qc_state"]
+_VerdictRow = Row("partition_id", "check_name", "status", "n_rows", "n_viol", "details")
 
 
 def _arrow_fields(kind: str):
@@ -112,6 +117,31 @@ class RunResult:
     skipped_partitions: list[int] = field(default_factory=list)
     errors: dict[str, str] = field(default_factory=dict)
     timings: dict[str, float] = field(default_factory=dict)
+
+
+def _mark_timing(timings: dict[str, float], name: str, start: float) -> float:
+    """Add the seconds since `start` to timings[name]; returns now."""
+    now = time.monotonic()
+    timings[name] = timings.get(name, 0.0) + round(now - start, 3)
+    return now
+
+
+def _source_verdicts(family: str, frame: DataFrame, stats: tuple[str, ...]) -> list[Row]:
+    """Run-level verdict rows (partition_id = -1) of a per-source table,
+    one per source, named `<family>:<source>`. `details` holds the
+    `stats` columns as JSON and leaves NULL ones out, as Spark's to_json
+    does."""
+    return [
+        _VerdictRow(
+            -1,
+            None if r["source"] is None else f"{family}:{r['source']}",
+            r["status"],
+            r["n_rows"],
+            0,
+            json.dumps({k: r[k] for k in stats if r[k] is not None}, separators=(",", ":")),
+        )
+        for r in frame.collect()
+    ]
 
 
 def _row_level_facets(cfg: cb.CheckConfig, with_referential: bool) -> list[cb.Facet]:
@@ -162,11 +192,14 @@ class QCRunner:
         run_id = run_id or uuid.uuid4().hex[:12]
         spark = self.spark
         errors: dict[str, str] = {}
+        timings: dict[str, float] = {}
 
+        t = time.monotonic()
         completed, committed_batches = self._resume_point(run_id)
         # slices written by a crashed batch (no qc_state commit) would
         # double-count on read-back — drop them before doing anything
         qio.drop_orphan_batches(spark, self.out_dir, list(TABLES), run_id, committed_batches)
+        t = _mark_timing(timings, "resume_point", t)
         batch_start = (max(committed_batches) + 1) if committed_batches else 0
         pending = [p for p in range(cfg.n_partitions) if p not in completed]
 
@@ -174,6 +207,10 @@ class QCRunner:
         has_ref_dim = allowed_sources is not None
         if "referential" in cfg.checks and has_ref_dim:
             df = referential.attach(df, allowed_sources)
+        # the once-per-run uniqueness and drift frames read `sequences`,
+        # not `df`: the whitelist join adds only a marker column to the
+        # same rows, yet the optimizer keeps it (a dimension scan,
+        # shuffle and broadcast per plan) where no plan reads the marker
 
         # missing-input UNKNOWNs: recorded once, at run level (partition -1)
         missing: list[tuple[str, str]] = []
@@ -186,18 +223,22 @@ class QCRunner:
         if "token_drift" in cfg.checks and token_baseline_hist is None:
             missing.append(("token_drift", "no token_baseline_hist provided"))
 
-        timings: dict[str, float] = {}
         batches = self._plan_batches(pending)
 
         # global (cross-partition) checks are planned once per run
         prefailed: dict[str, str] = {}
+        key_totals: DataFrame | None = None
         uniq: DataFrame | None = None
         if "uniqueness" in cfg.checks and batches:
             try:
-                uniq = uniqueness.violations(df, cfg).persist()
+                key_totals = uniqueness.key_totals(sequences, cfg).persist()
+                uniq = uniqueness.violations(sequences, cfg, key_totals=key_totals)
             except Exception as e:  # errorStrategy 'ignore'
                 errors["uniqueness"] = repr(e)
                 prefailed["uniqueness"] = repr(e)
+                if key_totals is not None:
+                    key_totals.unpersist()
+                    key_totals = None
         # degenerate-content gate: row-level but Arrow-staged (it cannot
         # fuse into the JVM row scan), planned once per run like
         # uniqueness and sliced per batch by partition_id
@@ -210,23 +251,30 @@ class QCRunner:
             except Exception as e:  # errorStrategy 'ignore'
                 errors["degenerate"] = repr(e)
                 prefailed["degenerate"] = repr(e)
-        drift_plan: DataFrame | None = None
+        # source-level families: bounded tables, computed once per run on
+        # the first batch's side thread and appended as verdict rows
+        source_checks: list[tuple[str, Callable[[], list[Row]]]] = []
         if "drift" in cfg.checks and baseline_hist is not None and batches:
-            try:
-                drift_plan = drift.verdicts(df, baseline_hist, cfg)
-            except Exception as e:
-                errors["drift"] = repr(e)
-        token_drift_plan: DataFrame | None = None
+            source_checks.append((
+                "drift",
+                lambda: _source_verdicts(
+                    "drift", drift.verdicts(sequences, baseline_hist, cfg),
+                    ("chi2", "chi2_p", "ks_d", "ks_p"),
+                ),
+            ))
         if "token_drift" in cfg.checks and token_baseline_hist is not None and batches:
-            try:
-                token_drift_plan = drift.token_js_divergence(
-                    df,
-                    token_baseline_hist,
-                    js_max=cfg.token_js_max,
-                    n_buckets=cfg.token_drift_buckets,
-                )
-            except Exception as e:
-                errors["token_drift"] = repr(e)
+            source_checks.append((
+                "token_drift",
+                lambda: _source_verdicts(
+                    "token_drift",
+                    drift.token_js_divergence(
+                        sequences, token_baseline_hist,
+                        js_max=cfg.token_js_max, n_buckets=cfg.token_drift_buckets,
+                    ),
+                    ("js_divergence",),
+                ),
+            ))
+        _mark_timing(timings, "run_plans", t)
 
         for i, parts in enumerate(batches):
             self._run_batch(
@@ -234,29 +282,31 @@ class QCRunner:
                 has_ref_dim=has_ref_dim,
                 reference=reference_tokens,
                 uniq=uniq,
+                key_totals=key_totals,
                 degen=degen,
                 prefailed=prefailed,
-                drift_plan=drift_plan if i == 0 else None,
-                token_drift_plan=token_drift_plan if i == 0 else None,
+                source_checks=source_checks if i == 0 else [],
                 missing=missing if i == 0 else [],
                 timings=timings,
             )
-        if uniq is not None:
-            uniq.unpersist()
+        if key_totals is not None:
+            key_totals.unpersist()
         if degen is not None:
             degen.unpersist()
 
-        verdicts = self._read_current(run_id, "verdicts")
-        violations = self._read_current(run_id, "violations")
-        state = self._read_current(run_id, "qc_state")
-        empty_v = spark.createDataFrame([], "run_id string, batch int, partition_id int, check_name string, status string, n_rows long, n_viol long, details string")
-        empty_viol = spark.createDataFrame([], "run_id string, batch int, partition_id int, doc_id string, check_name string, observed string, expected string")
-        empty_s = spark.createDataFrame([], "run_id string, batch int, partition_id int, status string, n_rows long, n_viol long, wall_ms long, finished_at timestamp")
+        t = time.monotonic()
+        frames = {}
+        for table in TABLES:
+            cur = self._read_current(run_id, table)
+            frames[table] = cur if cur is not None else spark.createDataFrame(
+                [], f"{qio.TABLE_SCHEMAS[table]}, {qio.PARTITION_SCHEMA}"
+            )
+        _mark_timing(timings, "read_back", t)
         return RunResult(
             run_id=run_id,
-            verdicts=verdicts if verdicts is not None else empty_v,
-            violations=violations if violations is not None else empty_viol,
-            state=state if state is not None else empty_s,
+            verdicts=frames["verdicts"],
+            violations=frames["violations"],
+            state=frames["qc_state"],
             skipped_partitions=sorted(completed),
             errors=errors,
             timings=timings,
@@ -303,23 +353,23 @@ class QCRunner:
         reference: DataFrame | None,
         uniq: DataFrame | None,
         prefailed: dict[str, str],
-        drift_plan: DataFrame | None,
+        source_checks: list[tuple[str, Callable[[], list[Row]]]],
         missing: list[tuple[str, str]],
-        timings: dict[str, float] | None = None,
-        token_drift_plan: DataFrame | None = None,
+        timings: dict[str, float],
+        key_totals: DataFrame | None = None,
         degen: DataFrame | None = None,
     ) -> None:
-        timings = timings if timings is not None else {}
-
         def _mark(name: str, start: float) -> float:
-            now = time.monotonic()
-            timings[name] = timings.get(name, 0.0) + round(now - start, 3)
-            return now
+            return _mark_timing(timings, name, start)
 
         t0 = time.monotonic()
         spark = self.spark
         full_batch = len(parts) == cfg.n_partitions
-        bdf = df if full_batch else df.where(F.col("partition_id").isin(parts))
+
+        def _slice(frame: DataFrame) -> DataFrame:
+            return frame if full_batch else frame.where(F.col("partition_id").isin(parts))
+
+        bdf = _slice(df)
         failed: dict[str, str] = dict(prefailed)  # check_name -> error detail
 
         # --- violations: ONE narrow scan for all row-level gates, with the
@@ -368,21 +418,14 @@ class QCRunner:
                 errors["invariant"] = repr(e)
                 failed["invariant"] = repr(e)
         if uniq is not None:
-            viol_parts.append(
-                uniq if full_batch else uniq.where(F.col("partition_id").isin(parts))
-            )
+            viol_parts.append(_slice(uniq))
         if degen is not None:
-            viol_parts.append(
-                degen if full_batch else degen.where(F.col("partition_id").isin(parts))
-            )
+            viol_parts.append(_slice(degen))
 
         _t = _mark("build_plan", t0)
         if not viol_parts:
             viol_parts.append(
-                spark.createDataFrame(
-                    [],
-                    "partition_id int, doc_id string, check_name string, observed string, expected string",
-                )
+                spark.createDataFrame([], qio.TABLE_SCHEMAS["violations"])
             )
         viol = viol_parts[0]
         for extra in viol_parts[1:]:
@@ -394,29 +437,33 @@ class QCRunner:
         viol = viol.repartition("partition_id").persist()
 
         # --- overlap independent side jobs with the big violations write:
-        # the totals scan (doc_id only) and the drift pipeline (histogram
-        # shuffle + applyInPandas) share no lineage with the violation
-        # sink, so a second driver thread materializes them while the
-        # scan/join/write saturates the executors — Spark's scheduler
-        # interleaves jobs from concurrent threads (FIFO within cores)
-        totals = bdf.groupBy("partition_id").agg(F.count(F.lit(1)).alias("n_rows"))
-        side: dict[str, DataFrame] = {}
+        # the source-level families (histogram shuffle, then a driver-side
+        # grade) and, without uniqueness, the totals scan (doc_id only)
+        # share no lineage with the violation sink, so a second driver
+        # thread materializes them while the scan/join/write saturates
+        # the executors — Spark's scheduler interleaves jobs from
+        # concurrent threads (FIFO within cores). With uniqueness, the
+        # totals are sums over the persisted key_totals frame, which the
+        # violations write materializes: no second scan of the input.
+        if key_totals is not None:
+            totals = _slice(key_totals).groupBy("partition_id").agg(
+                F.sum("n").alias("n_rows")
+            )
+        else:
+            totals = bdf.groupBy("partition_id").agg(F.count(F.lit(1)).alias("n_rows"))
+        source_rows: list[Row] = []
 
         def _materialize_side() -> None:
-            try:
-                t_tot = totals.persist()
-                t_tot.count()
-                side["totals"] = t_tot
-                if drift_plan is not None:
-                    dv = drift_plan.persist()
-                    dv.count()
-                    side["drift"] = dv
-                if token_drift_plan is not None:
-                    tv = token_drift_plan.persist()
-                    tv.count()
-                    side["token_drift"] = tv
-            except Exception as e:  # errorStrategy 'ignore'
-                errors["side_jobs"] = repr(e)
+            if key_totals is None:
+                try:
+                    totals.persist().count()
+                except Exception as e:  # errorStrategy 'ignore'
+                    errors["side_jobs"] = repr(e)
+            for family, verdict_rows_of in source_checks:
+                try:
+                    source_rows.extend(verdict_rows_of())
+                except Exception as e:  # errorStrategy 'ignore'
+                    errors[family] = repr(e)
 
         side_thread = threading.Thread(target=_materialize_side, daemon=True)
         side_thread.start()
@@ -439,8 +486,7 @@ class QCRunner:
         side_thread.join()
         _t = _mark("side_jobs_join", _t)
 
-        # --- verdict counts: persisted violations × cheap totals scan ----
-        totals = side.get("totals", totals)
+        # --- verdict counts: persisted violations × per-partition totals --
         counts = viol.groupBy("partition_id", "check_name").agg(
             F.count(F.lit(1)).alias("n_viol")
         )
@@ -450,10 +496,12 @@ class QCRunner:
         if "referential" in active and not has_ref_dim:
             active.remove("referential")
         active = [c for c in active if c not in failed]
-        checks_lit = F.array(*[F.lit(c) for c in active]) if active else None
-        if checks_lit is not None:
+        verdicts: DataFrame | None = None
+        if active:
             grid = totals.select(
-                "partition_id", "n_rows", F.explode(checks_lit).alias("check_name")
+                "partition_id",
+                "n_rows",
+                F.explode(F.array(*[F.lit(c) for c in active])).alias("check_name"),
             )
             # counts is bounded by n_partitions × checks — broadcast it so
             # the verdict grid never shuffles (one less tiny-but-serial stage)
@@ -473,72 +521,30 @@ class QCRunner:
                 "n_viol",
                 F.lit(None).cast("string").alias("details"),
             )
-        else:
-            verdicts = spark.createDataFrame([], _VERDICT_SCHEMA)
-
-        # errored check families → per-partition UNKNOWN rows: the
-        # partition is NOT graded PASS (no silent fillna(0)), and its
-        # qc_state row below becomes UNKNOWN so resume re-validates it
-        unknown_rows = [
-            (pid, check, UNKNOWN, 0, 0, detail)
-            for check, detail in sorted(failed.items())
-            for pid in parts
-        ]
-        # missing-input checks → one run-level UNKNOWN row each (-1)
-        unknown_rows += [(-1, check, UNKNOWN, 0, 0, detail) for check, detail in missing]
-        if unknown_rows:
-            verdicts = verdicts.unionByName(
-                spark.createDataFrame(unknown_rows, _VERDICT_SCHEMA)
-            )
-
-        # --- drift: source-level verdicts (partition_id = -1), computed
-        # once per run over the full input (this frame is only passed for
-        # the run's first batch)
-        if drift_plan is not None:
-            try:
-                dv = side.get("drift")
-                if dv is None:  # side thread failed: recompute inline
-                    dv = drift_plan
-                drift_verd = dv.select(
-                    F.lit(-1).alias("partition_id"),
-                    F.concat(F.lit("drift:"), F.col("source")).alias("check_name"),
-                    F.col("status"),
-                    F.col("n_rows").cast("long").alias("n_rows"),
-                    F.lit(0).cast("long").alias("n_viol"),
-                    F.to_json(F.struct("chi2", "chi2_p", "ks_d", "ks_p")).alias("details"),
-                )
-                verdicts = verdicts.unionByName(drift_verd)
-            except Exception as e:
-                errors["drift"] = repr(e)
-
-        # --- token-unigram drift: same source-level shape; n_rows counts
-        # TOKENS (the residue histogram's unit), details carries the JS
-        if token_drift_plan is not None:
-            try:
-                tv = side.get("token_drift")
-                if tv is None:
-                    tv = token_drift_plan
-                tok_verd = tv.select(
-                    F.lit(-1).alias("partition_id"),
-                    F.concat(F.lit("token_drift:"), F.col("source")).alias("check_name"),
-                    F.col("status"),
-                    F.col("n_rows").cast("long").alias("n_rows"),
-                    F.lit(0).cast("long").alias("n_viol"),
-                    F.to_json(F.struct("js_divergence")).alias("details"),
-                )
-                verdicts = verdicts.unionByName(tok_verd)
-            except Exception as e:
-                errors["token_drift"] = repr(e)
 
         _t = _mark("verdicts_plan", _t)
         # materialize the verdict frame ONCE, driver-side: it is bounded by
-        # construction (n_partitions × checks + drift sources + unknown
-        # rows), so collecting it and deriving qc_state in plain Python
-        # replaces a second execution of the whole verdict aggregation (the
-        # old state = verdicts.groupBy(...) plan) with two tiny
-        # single-partition commits — the serial commit tail was the
-        # residual N→4N scaling gap (VERDICT r2 #4)
-        verdict_rows = verdicts.collect()
+        # construction (n_partitions × checks), so collecting it and
+        # deriving qc_state in plain Python replaces a second execution of
+        # the whole verdict aggregation (the old state =
+        # verdicts.groupBy(...) plan) with two tiny single-partition
+        # commits — the serial commit tail was the residual N→4N scaling
+        # gap (VERDICT r2 #4). Rows the driver already holds never go
+        # through the plan:
+        verdict_rows = verdicts.collect() if verdicts is not None else []
+        # - errored check families → per-partition UNKNOWN rows: the
+        #   partition is NOT graded PASS (no silent fillna(0)), and its
+        #   qc_state row below becomes UNKNOWN so resume re-validates it;
+        verdict_rows += [
+            _VerdictRow(pid, check, UNKNOWN, 0, 0, detail)
+            for check, detail in sorted(failed.items())
+            for pid in parts
+        ]
+        # - missing-input checks → one run-level UNKNOWN row each (-1);
+        verdict_rows += [_VerdictRow(-1, check, UNKNOWN, 0, 0, detail) for check, detail in missing]
+        # - source-level drift verdicts (partition_id = -1), computed once
+        #   per run over the full input on the first batch's side thread.
+        verdict_rows += source_rows
         _t = _mark("verdicts_collect", _t)
         qio.write_batch_rows(
             spark, verdict_rows, _VERDICT_SCHEMA, _arrow_fields("verdicts"),
@@ -580,8 +586,7 @@ class QCRunner:
             self.out_dir, "qc_state", run_id, batch,
         )
         viol.unpersist()
-        for cached in side.values():
-            cached.unpersist()
+        totals.unpersist()
         _mark("state_write", _t)
 
     # ------------------------------------------------------------------
