@@ -255,6 +255,27 @@ def test_invariant_exact(tables, seq_pa, expected):
     assert sorted(r.doc_id for r in v2.select("doc_id").collect()) == got
 
 
+
+def test_invariant_repeated_reference_doc_id(spark):
+    """A doc_id the reference repeats joins once: identical copies are one
+    copy, conflicting copies are one mismatch, in hash and exact mode."""
+    seq = spark.createDataFrame(
+        [("a", [1, 2]), ("b", [3]), ("c", [4]), ("d", None), ("e", None)],
+        "doc_id string, tokens array<int>",
+    )
+    ref = spark.createDataFrame(
+        [("a", [1, 2])] * 3                   # identical copies, tokens equal
+        + [("b", [3]), ("b", [3, 0])]          # conflicting copies
+        + [("c", [5]), ("c", [5])]             # identical copies, tokens differ
+        + [("d", None), ("d", None)]           # identical NULL copies
+        + [("e", None), ("e", [])],            # NULL vs empty: exact mode only
+        "doc_id string, tokens_ref array<int>",
+    )
+    got = sorted(r.doc_id for r in invariant.violations(seq, ref, CFG).collect())
+    assert got == ["b", "c"]
+    got = sorted(r.doc_id for r in invariant.violations(seq, ref, CFG, exact=True).collect())
+    assert got == ["b", "c", "e"]
+
 def test_assemble_violations_long_format(tables, expected):
     df = referential.attach(
         tables["sequences"], tables["allowed_sources"]

@@ -457,3 +457,148 @@ def test_default_checks_start_no_python_worker(spark, tables, tmp_path, monkeypa
     assert rows(got) == rows(want)
     assert any(r[1].startswith("drift:") for r in rows(got))
     assert {"resume_point", "run_plans", "read_back"} <= set(got.timings)
+
+
+def test_repeated_reference_doc_id_counts_once(spark, tmp_path):
+    """The fused invariant join reads a reference that repeats a doc_id as
+    one row: identical copies neither multiply the row's violation rows
+    nor count as a mismatch, and conflicting copies are one mismatch. A
+    3x copy once graded a 2-row partition at n_viol=5 (rate 250 %)."""
+    seq = spark.createDataFrame(
+        [("a", [1, 2, 3], 4, "web"), ("b", [4, 5], 2, "web"), ("c", [6], 1, "web")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    ref = spark.createDataFrame(
+        [("a", [1, 2, 3])] * 3 + [("b", [4, 5]), ("b", [4, 6]), ("c", [6])],
+        "doc_id string, tokens_ref array<int>",
+    )
+    cfg = CheckConfig(n_partitions=1, checks=("structural", "invariant"))
+    res = QCRunner(spark, cfg, out_dir=str(tmp_path / "q")).run(
+        seq, reference_tokens=ref, run_id="dup"
+    )
+    assert res.errors == {}
+    assert sorted((r.doc_id, r.check_name) for r in res.violations.collect()) == [
+        ("a", "structural"), ("b", "invariant"),
+    ]
+    assert sorted(
+        (r.check_name, r.n_rows, r.n_viol) for r in res.verdicts.collect()
+    ) == [("invariant", 3, 1), ("structural", 3, 1)]
+
+
+def _outputs(res):
+    """Batch-independent view of a run: the violations multiset, the
+    per-partition verdict rows and each partition's qc_state status."""
+    viol = sorted(
+        (tuple(r) for r in res.violations.select(
+            "partition_id", "doc_id", "check_name", "observed", "expected"
+        ).collect()),
+        key=str,
+    )
+    verd = sorted(
+        (tuple(r) for r in res.verdicts.where("partition_id >= 0").select(
+            "partition_id", "check_name", "status", "n_rows", "n_viol"
+        ).collect()),
+        key=str,
+    )
+    state = sorted((r.partition_id, r.status) for r in res.state.collect())
+    return viol, verd, state
+
+
+def test_outputs_do_not_depend_on_batching(spark, tables, tmp_path):
+    """1, 3 and 4 batches over 16 partitions write the same rows, also
+    after a crash that loses the last qc_state commit and a resume."""
+    import shutil
+
+    from tokenqc import io as qio
+
+    inputs = dict(
+        sequences=tables["sequences"],
+        allowed_sources=tables["allowed_sources"],
+        reference_tokens=tables["reference_tokens"],
+    )
+    cfg = CheckConfig(n_partitions=16)
+    want = None
+    for n in (1, 3, 4):
+        out = str(tmp_path / f"b{n}")
+        runner = QCRunner(spark, cfg, out_dir=out, n_batches=n)
+        got = _outputs(runner.run(**inputs, run_id="bi"))
+        if want is None:
+            want = got
+            assert want[0] and {s for _, s in want[2]} <= {"PASS", "FAIL"}
+        assert got == want, f"n_batches={n}"
+        if n > 1:
+            last = qio.list_batches(spark, out, "qc_state", "bi")[-1]
+            assert last == n - 1
+            shutil.rmtree(f"{out}/qc_state/run_id=bi/batch={last}")
+            resumed = runner.run(**inputs, run_id="bi")
+            # 3 batches are 6+6+4 partitions and 4 are 4 each: the last has 4
+            assert resumed.skipped_partitions == list(range(12))
+            assert _outputs(resumed) == want, f"n_batches={n}, resumed"
+
+
+def test_one_scan_per_run_whatever_the_batches(spark, tables, tmp_path, monkeypatch):
+    """A batch is a commit, not a scan: a 4-batch run plans the row-gate
+    projection once, and starts at most 2 more Spark jobs per extra batch
+    than a 1-batch run (a per-batch scan, join and verdict grid cost ~9)."""
+    from tokenqc.checks import base as cb
+
+    calls = []
+    real = cb.project_facets
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(cb, "project_facets", counting)
+    inputs = dict(
+        sequences=tables["sequences"],
+        allowed_sources=tables["allowed_sources"],
+        baseline_hist=tables["baseline_hist"],
+        reference_tokens=tables["reference_tokens"],
+    )
+    tracker = spark.sparkContext.statusTracker()
+    jobs = {}
+    for n in (1, 4):
+        runner = QCRunner(spark, CheckConfig(n_partitions=16), out_dir=str(tmp_path / f"j{n}"),
+                          n_batches=n)
+        calls.clear()
+        before = set(tracker.getJobIdsForGroup(None))
+        res = runner.run(**inputs, run_id="j")
+        jobs[n] = len(set(tracker.getJobIdsForGroup(None)) - before)
+        assert res.errors == {} and len(calls) == 1, f"n_batches={n}"
+    assert jobs[4] <= jobs[1] + 2 * 3, jobs
+
+
+def test_jobs_named_by_phase(spark, tables, tmp_path, monkeypatch):
+    """Each phase's jobs carry `tokenqc <run_id> batch=<b> <phase>`, the
+    side thread names its own, and the caller's description is restored."""
+    from tokenqc import io as qio
+    from tokenqc.checks import drift
+
+    sc = spark.sparkContext
+    seen = []
+
+    def recording(name, real):
+        def wrapper(*a, **k):
+            seen.append((name, sc.getLocalProperty("spark.job.description")))
+            return real(*a, **k)
+        return wrapper
+
+    monkeypatch.setattr(qio, "write_batch", recording("write_batch", qio.write_batch))
+    monkeypatch.setattr(drift, "verdicts", recording("drift", drift.verdicts))
+    runner = QCRunner(spark, CheckConfig(n_partitions=16), out_dir=str(tmp_path / "jd"),
+                      n_batches=4)
+    sc.setJobDescription("caller")
+    try:
+        runner.run(
+            tables["sequences"],
+            allowed_sources=tables["allowed_sources"],
+            baseline_hist=tables["baseline_hist"],
+            run_id="jd",
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert sorted(seen) == [("drift", "tokenqc jd batch=0 drift")] + [
+        ("write_batch", f"tokenqc jd batch={b} violations") for b in range(4)
+    ]

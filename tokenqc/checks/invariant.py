@@ -11,16 +11,38 @@ once, hashed JVM-side inside whole-stage codegen, and dropped before the
 join — then a sort-merge (or broadcast, if the reference slice is small)
 equi-join compares 16 bytes per row instead of KBs. 64-bit collisions
 (~n²/2⁶⁵) are documented; `exact=True` joins the raw arrays for audits.
+The reference side is grouped by doc_id before the join (min and max of
+its copies' hashes), so a doc_id the reference repeats cannot multiply
+violation rows; copies that disagree are themselves a mismatch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tokenqc.checks.base import CheckConfig, partition_id_col
 
 CHECK = "invariant"
+
+
+def reference_digest(reference: DataFrame, exact: bool = False) -> DataFrame:
+    """(doc_id, _rmin, _rmax): one row per reference doc_id, holding the
+    least and greatest of its copies (xxhash64(tokens_ref), or with
+    `exact` the array itself wrapped in a struct so a NULL array is a
+    comparable value). A doc_id repeated in the reference then joins one
+    row, never several, and its copies conflict iff _rmin != _rmax —
+    identical copies are one copy. The groupBy hashes on doc_id, the
+    join key, so a shuffled join reuses its exchange."""
+    v = F.struct(F.col("tokens_ref").alias("v")) if exact else F.xxhash64("tokens_ref")
+    return reference.groupBy("doc_id").agg(F.min(v).alias("_rmin"), F.max(v).alias("_rmax"))
+
+
+def mismatch(tok: Column) -> Column:
+    """Tokens (`tok`, digested like the reference) differ from the joined
+    reference digest, or the reference's copies conflict among
+    themselves: no input can equal every copy."""
+    return (tok != F.col("_rmin")) | (F.col("_rmin") != F.col("_rmax"))
 
 
 def violations(
@@ -30,22 +52,11 @@ def violations(
     doc_id: rows absent from the reference are not checked — UNKNOWN,
     not FAIL, matching the reference's missing-input default,
     /root/reference/bin/analyze_joss.py:96-105)."""
-    if exact:
-        left = df.where(F.col("doc_id").isNotNull()).select("doc_id", F.col("tokens").alias("_t"))
-        right = reference.select("doc_id", F.col("tokens_ref").alias("_r"))
-        mismatch = ~(
-            (F.col("_t").isNull() & F.col("_r").isNull())
-            | (F.col("_t").isNotNull() & F.col("_r").isNotNull() & (F.col("_t") == F.col("_r")))
-        )
-    else:
-        left = df.where(F.col("doc_id").isNotNull()).select(
-            "doc_id", F.xxhash64("tokens").alias("_t")
-        )
-        right = reference.select("doc_id", F.xxhash64("tokens_ref").alias("_r"))
-        mismatch = F.col("_t") != F.col("_r")
+    tok = F.struct(F.col("tokens").alias("v")) if exact else F.xxhash64("tokens")
+    left = df.where(F.col("doc_id").isNotNull()).select("doc_id", tok.alias("_t"))
     return (
-        left.join(right, on="doc_id", how="inner")
-        .where(mismatch)
+        left.join(reference_digest(reference, exact), on="doc_id", how="inner")
+        .where(mismatch(F.col("_t")))
         .select(
             partition_id_col(cfg).alias("partition_id"),
             "doc_id",

@@ -38,7 +38,11 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap.add_argument("--reference-tokens", default=None)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--partitions", type=int, default=64)
-    ap.add_argument("--batches", type=int, default=1)
+    ap.add_argument(
+        "--batches", type=int, default=1,
+        help="commit units per run: the input is scanned once, and each batch commits "
+        "its partitions' violations, verdicts and qc_state (the resume unit)",
+    )
     ap.add_argument("--checks", default=None, help="comma-separated subset of checks")
     ap.add_argument("--threshold", type=float, default=0.0)
     ap.add_argument("--master", default=None)

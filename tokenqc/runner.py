@@ -25,28 +25,41 @@ Orchestration semantics carried over from the reference (SURVEY.md §2.8):
   from a crashed batch (violations/verdicts written, qc_state commit
   missing) are dropped up front.
 
-Execution shape (scale-first):
+Execution shape (scale-first): the input is scanned once per run, and a
+batch is a commit unit, not a compute unit.
 
-1. one narrow pass over the fact table computes every row-level facet
-   (completeness, structural, format, referential-via-broadcast) and
-   writes violation rows — no shuffle;
-2. uniqueness is planned ONCE per run as one linear, persisted
-   aggregate: groupBy(doc_id) counts, regrouped by (partition_id,
-   dup_key). Its dup-key rows are the uniqueness violations (sliced per
-   batch), and its per-partition sums are every batch's row totals, so
-   the input is scanned once for both and a multi-batch run pays one
-   dup-count shuffle, not one per batch;
-3. verdict counts aggregate the *persisted* violation frame against
-   those totals (without uniqueness in the check set, a doc_id-only
-   totals scan overlaps the violations write instead);
+1. ONE violation frame per run, over the pending partitions: one narrow
+   pass over the fact table computes every row-level facet
+   (completeness, structural, format, referential-via-broadcast) with
+   the invariant hash join fused in (the reference reduced to one row
+   per doc_id), unioned with the uniqueness and degeneracy rows and
+   clustered by partition_id into one persisted frame. It holds
+   violation rows only, never input rows, and spills like any cached
+   frame;
+2. uniqueness is planned as one linear, persisted aggregate:
+   groupBy(doc_id) counts, regrouped by (partition_id, dup_key). Its
+   dup-key rows are the uniqueness violations, and its per-partition
+   sums are the row totals, so the input is scanned once for both;
+3. each batch writes its slice of the persisted frame, then its verdict
+   rows, then its qc_state rows. The first batch's write materializes
+   the whole run's violation rows; later batches only filter the cache.
+   The verdict grid is graded on the driver from one bounded collect
+   per run: per-(partition, check) violation counts, at most P × checks
+   rows, and the per-partition row totals (without uniqueness in the
+   check set, a doc_id-only totals scan overlaps the first write);
 4. drift runs ONCE per run on the full input, on a side thread that
-   overlaps the violations write: the 64-buckets-per-source histogram
-   joined to the baseline is collected and graded on the driver, and its
-   verdict rows are appended to the first batch's verdict slice in
-   Python — per-batch drift would compute chi2/KS on partial
-   histograms, and a run with the default checks starts no Python
-   worker;
-5. qc_state rows are written per batch (idempotent overwrite-by-batch).
+   overlaps the first violations write: the 64-buckets-per-source
+   histogram joined to the baseline is collected and graded on the
+   driver, and its verdict rows are appended to the first batch's
+   verdict slice in Python — per-batch drift would compute chi2/KS on
+   partial histograms, and a run with the default checks starts no
+   Python worker;
+5. qc_state rows are written per batch (idempotent overwrite-by-batch),
+   last: a crash before a batch's qc_state commit leaves orphan
+   violation/verdict slices, which the next run drops before it starts.
+
+Every Spark job a run starts carries the description
+`tokenqc <run_id> batch=<b> <phase>` (batch `-` outside any batch).
 """
 
 from __future__ import annotations
@@ -191,114 +204,275 @@ class QCRunner:
         cfg = self.cfg
         run_id = run_id or uuid.uuid4().hex[:12]
         spark = self.spark
+        sc = spark.sparkContext
         errors: dict[str, str] = {}
         timings: dict[str, float] = {}
 
-        t = time.monotonic()
-        completed, committed_batches = self._resume_point(run_id)
-        # slices written by a crashed batch (no qc_state commit) would
-        # double-count on read-back — drop them before doing anything
-        qio.drop_orphan_batches(spark, self.out_dir, list(TABLES), run_id, committed_batches)
-        t = _mark_timing(timings, "resume_point", t)
-        batch_start = (max(committed_batches) + 1) if committed_batches else 0
-        pending = [p for p in range(cfg.n_partitions) if p not in completed]
+        def phase(batch: int | str, name: str) -> None:
+            # a local property: it names the jobs of the calling thread only
+            sc.setJobDescription(f"tokenqc {run_id} batch={batch} {name}")
 
-        df = sequences.withColumn("partition_id", cb.partition_id_col(cfg))
-        has_ref_dim = allowed_sources is not None
-        if "referential" in cfg.checks and has_ref_dim:
-            df = referential.attach(df, allowed_sources)
-        # the once-per-run uniqueness and drift frames read `sequences`,
-        # not `df`: the whitelist join adds only a marker column to the
-        # same rows, yet the optimizer keeps it (a dimension scan,
-        # shuffle and broadcast per plan) where no plan reads the marker
-
-        # missing-input UNKNOWNs: recorded once, at run level (partition -1)
-        missing: list[tuple[str, str]] = []
-        if "referential" in cfg.checks and not has_ref_dim:
-            missing.append(("referential", "no allowed_sources provided"))
-        if "invariant" in cfg.checks and reference_tokens is None:
-            missing.append(("invariant", "no reference_tokens provided"))
-        if "drift" in cfg.checks and baseline_hist is None:
-            missing.append(("drift", "no baseline_hist provided"))
-        if "token_drift" in cfg.checks and token_baseline_hist is None:
-            missing.append(("token_drift", "no token_baseline_hist provided"))
-
-        batches = self._plan_batches(pending)
-
-        # global (cross-partition) checks are planned once per run
-        prefailed: dict[str, str] = {}
+        caller_description = sc.getLocalProperty("spark.job.description")
         key_totals: DataFrame | None = None
-        uniq: DataFrame | None = None
-        if "uniqueness" in cfg.checks and batches:
-            try:
-                key_totals = uniqueness.key_totals(sequences, cfg).persist()
-                uniq = uniqueness.violations(sequences, cfg, key_totals=key_totals)
-            except Exception as e:  # errorStrategy 'ignore'
-                errors["uniqueness"] = repr(e)
-                prefailed["uniqueness"] = repr(e)
-                if key_totals is not None:
-                    key_totals.unpersist()
-                    key_totals = None
-        # degenerate-content gate: row-level but Arrow-staged (it cannot
-        # fuse into the JVM row scan), planned once per run like
-        # uniqueness and sliced per batch by partition_id
-        degen: DataFrame | None = None
-        if "degenerate" in cfg.checks and batches:
-            try:
-                from tokenqc.checks import degeneracy
+        viol_all: DataFrame | None = None
+        try:
+            t = time.monotonic()
+            phase("-", "resume_point")
+            completed, committed_batches = self._resume_point(run_id)
+            # slices written by a crashed batch (no qc_state commit) would
+            # double-count on read-back — drop them before doing anything
+            qio.drop_orphan_batches(spark, self.out_dir, list(TABLES), run_id, committed_batches)
+            t = _mark_timing(timings, "resume_point", t)
+            batch_start = (max(committed_batches) + 1) if committed_batches else 0
+            pending = [p for p in range(cfg.n_partitions) if p not in completed]
+            batches = self._plan_batches(pending)
+            if not batches:
+                phase("-", "read_back")
+                return self._result(run_id, completed, errors, timings)
 
-                degen = degeneracy.violations(df, cfg).persist()
-            except Exception as e:  # errorStrategy 'ignore'
-                errors["degenerate"] = repr(e)
-                prefailed["degenerate"] = repr(e)
-        # source-level families: bounded tables, computed once per run on
-        # the first batch's side thread and appended as verdict rows
-        source_checks: list[tuple[str, Callable[[], list[Row]]]] = []
-        if "drift" in cfg.checks and baseline_hist is not None and batches:
-            source_checks.append((
-                "drift",
-                lambda: _source_verdicts(
-                    "drift", drift.verdicts(sequences, baseline_hist, cfg),
-                    ("chi2", "chi2_p", "ks_d", "ks_p"),
-                ),
-            ))
-        if "token_drift" in cfg.checks and token_baseline_hist is not None and batches:
-            source_checks.append((
-                "token_drift",
-                lambda: _source_verdicts(
-                    "token_drift",
-                    drift.token_js_divergence(
-                        sequences, token_baseline_hist,
-                        js_max=cfg.token_js_max, n_buckets=cfg.token_drift_buckets,
+            def pending_only(frame: DataFrame) -> DataFrame:
+                if len(pending) == cfg.n_partitions:
+                    return frame
+                return frame.where(F.col("partition_id").isin(pending))
+
+            df = sequences.withColumn("partition_id", cb.partition_id_col(cfg))
+            has_ref_dim = allowed_sources is not None
+            if "referential" in cfg.checks and has_ref_dim:
+                df = referential.attach(df, allowed_sources)
+            pdf = pending_only(df)
+            # the once-per-run uniqueness and drift frames read `sequences`,
+            # not `df`: the whitelist join adds only a marker column to the
+            # same rows, yet the optimizer keeps it (a dimension scan,
+            # shuffle and broadcast per plan) where no plan reads the marker
+
+            # missing-input UNKNOWNs: recorded once, at run level (partition -1)
+            missing: list[tuple[str, str]] = []
+            if "referential" in cfg.checks and not has_ref_dim:
+                missing.append(("referential", "no allowed_sources provided"))
+            if "invariant" in cfg.checks and reference_tokens is None:
+                missing.append(("invariant", "no reference_tokens provided"))
+            if "drift" in cfg.checks and baseline_hist is None:
+                missing.append(("drift", "no baseline_hist provided"))
+            if "token_drift" in cfg.checks and token_baseline_hist is None:
+                missing.append(("token_drift", "no token_baseline_hist provided"))
+
+            # --- the run's ONE violation frame over the pending partitions.
+            # A family whose plan fails is recorded once here and graded
+            # UNKNOWN per partition in every batch.
+            failed: dict[str, str] = {}  # check_name -> error detail
+            viol_parts: list[DataFrame] = []
+            # global (cross-partition) check: the dup counts need every
+            # row, so the aggregate reads the whole input
+            if "uniqueness" in cfg.checks:
+                try:
+                    key_totals = uniqueness.key_totals(sequences, cfg).persist()
+                    viol_parts.append(pending_only(
+                        uniqueness.violations(sequences, cfg, key_totals=key_totals)
+                    ))
+                except Exception as e:  # errorStrategy 'ignore'
+                    errors["uniqueness"] = failed["uniqueness"] = repr(e)
+                    if key_totals is not None:
+                        key_totals.unpersist()
+                        key_totals = None
+            # degenerate-content gate: row-level but Arrow-staged (it
+            # cannot fuse into the JVM row scan)
+            if "degenerate" in cfg.checks:
+                try:
+                    from tokenqc.checks import degeneracy
+
+                    viol_parts.append(degeneracy.violations(pdf, cfg))
+                except Exception as e:  # errorStrategy 'ignore'
+                    errors["degenerate"] = failed["degenerate"] = repr(e)
+            # source-level families: bounded tables, computed once per run on
+            # the side thread and appended to the first batch's verdicts
+            source_checks: list[tuple[str, Callable[[], list[Row]]]] = []
+            if "drift" in cfg.checks and baseline_hist is not None:
+                source_checks.append((
+                    "drift",
+                    lambda: _source_verdicts(
+                        "drift", drift.verdicts(sequences, baseline_hist, cfg),
+                        ("chi2", "chi2_p", "ks_d", "ks_p"),
                     ),
-                    ("js_divergence",),
-                ),
-            ))
-        _mark_timing(timings, "run_plans", t)
+                ))
+            if "token_drift" in cfg.checks and token_baseline_hist is not None:
+                source_checks.append((
+                    "token_drift",
+                    lambda: _source_verdicts(
+                        "token_drift",
+                        drift.token_js_divergence(
+                            sequences, token_baseline_hist,
+                            js_max=cfg.token_js_max, n_buckets=cfg.token_drift_buckets,
+                        ),
+                        ("js_divergence",),
+                    ),
+                ))
+            t = _mark_timing(timings, "run_plans", t)
 
-        for i, parts in enumerate(batches):
-            self._run_batch(
-                df, parts, batch_start + i, run_id, cfg, errors,
-                has_ref_dim=has_ref_dim,
-                reference=reference_tokens,
-                uniq=uniq,
-                key_totals=key_totals,
-                degen=degen,
-                prefailed=prefailed,
-                source_checks=source_checks if i == 0 else [],
-                missing=missing if i == 0 else [],
-                timings=timings,
-            )
-        if key_totals is not None:
-            key_totals.unpersist()
-        if degen is not None:
-            degen.unpersist()
+            # ONE narrow scan for all row-level gates, with the invariant
+            # fused in (tokens hashed once, 8-byte hashes joined to the
+            # reference digest — the tokens column is read exactly once per
+            # side across the whole run)
+            facets = _row_level_facets(cfg, with_referential=has_ref_dim)
+            want_invariant = "invariant" in cfg.checks and reference_tokens is not None
+            if facets:
+                try:
+                    extra = (
+                        [F.xxhash64("tokens").alias("__tok_hash")] if want_invariant else []
+                    )
+                    narrow = cb.project_facets(pdf, facets, extra)
+                    all_facets = list(facets)
+                    if want_invariant:
+                        narrow = narrow.join(
+                            invariant.reference_digest(reference_tokens), on="doc_id", how="left"
+                        )
+                        inv = cb.Facet(
+                            invariant.CHECK,
+                            "tokens_mismatch",
+                            F.col("_rmin").isNotNull() & invariant.mismatch(F.col("__tok_hash")),
+                            F.lit("hash(tokens) != hash(tokens_ref)"),
+                            "tokens == tokens_ref",
+                        )
+                        i = len(all_facets)
+                        narrow = narrow.withColumn(f"__c{i}", inv.cond).withColumn(
+                            f"__o{i}", F.when(inv.cond, inv.observed)
+                        )
+                        all_facets.append(inv)
+                    viol_parts.append(cb.explode_flags(narrow, all_facets))
+                except Exception as e:  # errorStrategy 'ignore'
+                    errors["row_level"] = repr(e)
+                    for c in sorted({f.check for f in facets}) + (
+                        ["invariant"] if want_invariant else []
+                    ):
+                        failed[c] = repr(e)
+            elif want_invariant:
+                try:
+                    viol_parts.append(invariant.violations(pdf, reference_tokens, cfg))
+                except Exception as e:
+                    errors["invariant"] = failed["invariant"] = repr(e)
+            if not viol_parts:
+                viol_parts.append(spark.createDataFrame([], qio.TABLE_SCHEMAS["violations"]))
+            viol_all = viol_parts[0]
+            for part in viol_parts[1:]:
+                viol_all = viol_all.unionByName(part)
+            # cluster the (sparse) violation rows by lineage partition
+            # before the sink: one small shuffle (AQE-coalesced) instead of
+            # one tiny output file per scan task; persisted, so every
+            # batch's write and the verdict counts read the computed rows
+            viol_all = viol_all.repartition("partition_id").persist()
+            t = _mark_timing(timings, "build_plan", t)
 
+            # --- overlap independent side jobs with the first violations
+            # write: the source-level families (histogram shuffle, then a
+            # driver-side grade) and, without uniqueness, the totals scan
+            # (doc_id only) share no lineage with the violation sink, so a
+            # second driver thread runs them while the scan/join/write
+            # saturates the executors — Spark's scheduler interleaves jobs
+            # from concurrent threads (FIFO within cores). With uniqueness,
+            # the totals are sums over the persisted key_totals frame, which
+            # the first write materializes: no second scan of the input.
+            source_rows: list[Row] = []
+            row_totals: dict[int, int] = {}
+
+            def materialize_side() -> None:
+                try:
+                    if key_totals is None:
+                        phase(batch_start, "row_totals")
+                        try:
+                            row_totals.update(
+                                (r["partition_id"], r["n_rows"])
+                                for r in pdf.groupBy("partition_id")
+                                .agg(F.count(F.lit(1)).alias("n_rows"))
+                                .collect()
+                            )
+                        except Exception as e:  # errorStrategy 'ignore'
+                            errors["side_jobs"] = repr(e)
+                    for family, verdict_rows_of in source_checks:
+                        phase(batch_start, family)
+                        try:
+                            source_rows.extend(verdict_rows_of())
+                        except Exception as e:  # errorStrategy 'ignore'
+                            errors[family] = repr(e)
+                finally:
+                    sc.setJobDescription(None)
+
+            side_thread = threading.Thread(target=materialize_side, daemon=True)
+            side_thread.start()
+            n_viol: dict[tuple[int, str], int] = {}
+            # missing-input checks → one run-level UNKNOWN row each (-1);
+            # the first batch commits them with the source-level verdicts
+            run_level = [_VerdictRow(-1, c, UNKNOWN, 0, 0, why) for c, why in missing]
+            # the checks graded per partition: not source-level, not
+            # missing their input, not errored
+            skip = {"drift", "token_drift", *dict(missing), *failed}
+            active = [c for c in cfg.checks if c not in skip]
+            # Phase attribution is OPT-IN: materializing the persisted frame
+            # before the first sink splits compute from commit (the write
+            # otherwise absorbs the whole lazy plan), but costs an extra
+            # cache-read pass, so the default is the single fused
+            # compute+write pass with a combined mark.
+            detail = os.environ.get("TOKENQC_PHASE_DETAIL") == "1"
+            for i, parts in enumerate(batches):
+                batch = batch_start + i
+                t0 = t = time.monotonic()
+                phase(batch, "violations")
+                if detail and i == 0:
+                    viol_all.count()
+                    t = _mark_timing(timings, "violations_compute", t)
+                viol = viol_all if len(batches) == 1 else viol_all.where(
+                    F.col("partition_id").isin(parts)
+                )
+                qio.write_batch(viol, self.out_dir, "violations", run_id, batch)
+                t = _mark_timing(
+                    timings, "violations_write" if detail else "violations_compute_write", t
+                )
+                if i == 0:
+                    side_thread.join()
+                    t = _mark_timing(timings, "side_jobs_join", t)
+                    # the verdict grid's inputs, collected once per run in
+                    # one bounded frame: (partition, check, n_viol) rows,
+                    # at most P × checks, and, with uniqueness,
+                    # (partition, NULL, n_rows) rows summed off key_totals
+                    phase(batch, "verdict_counts")
+                    grid = viol_all.groupBy("partition_id", "check_name").agg(
+                        F.count(F.lit(1)).alias("n")
+                    )
+                    if key_totals is not None:
+                        grid = grid.unionByName(key_totals.groupBy("partition_id").agg(
+                            F.lit(None).cast("string").alias("check_name"),
+                            F.sum("n").alias("n"),
+                        ))
+                    for r in grid.collect():
+                        if r["check_name"] is None:
+                            row_totals[r["partition_id"]] = r["n"]
+                        else:
+                            n_viol[(r["partition_id"], r["check_name"])] = r["n"]
+                    t = _mark_timing(timings, "verdicts_collect", t)
+                self._commit_batch(
+                    parts, batch, run_id, active, n_viol, row_totals, failed,
+                    run_level=(run_level + source_rows) if i == 0 else [],
+                    timings=timings,
+                    t0=t0,
+                )
+
+            phase("-", "read_back")
+            return self._result(run_id, completed, errors, timings)
+        finally:
+            sc.setJobDescription(caller_description)
+            if viol_all is not None:
+                viol_all.unpersist()
+            if key_totals is not None:
+                key_totals.unpersist()
+
+    def _result(
+        self, run_id: str, completed: set[int], errors: dict[str, str],
+        timings: dict[str, float],
+    ) -> RunResult:
+        """The run's result: the current view of its three tables."""
         t = time.monotonic()
         frames = {}
         for table in TABLES:
             cur = self._read_current(run_id, table)
-            frames[table] = cur if cur is not None else spark.createDataFrame(
+            frames[table] = cur if cur is not None else self.spark.createDataFrame(
                 [], f"{qio.TABLE_SCHEMAS[table]}, {qio.PARTITION_SCHEMA}"
             )
         _mark_timing(timings, "read_back", t)
@@ -341,216 +515,51 @@ class QCRunner:
         return [pending[i : i + size] for i in range(0, len(pending), size)]
 
     # ------------------------------------------------------------------
-    def _run_batch(
+    def _commit_batch(
         self,
-        df: DataFrame,
         parts: list[int],
         batch: int,
         run_id: str,
-        cfg: cb.CheckConfig,
-        errors: dict[str, str],
-        has_ref_dim: bool,
-        reference: DataFrame | None,
-        uniq: DataFrame | None,
-        prefailed: dict[str, str],
-        source_checks: list[tuple[str, Callable[[], list[Row]]]],
-        missing: list[tuple[str, str]],
+        active: list[str],
+        n_viol: dict[tuple[int, str], int],
+        row_totals: dict[int, int],
+        failed: dict[str, str],
+        run_level: list[Row],
         timings: dict[str, float],
-        key_totals: DataFrame | None = None,
-        degen: DataFrame | None = None,
+        t0: float,
     ) -> None:
-        def _mark(name: str, start: float) -> float:
-            return _mark_timing(timings, name, start)
-
-        t0 = time.monotonic()
-        spark = self.spark
-        full_batch = len(parts) == cfg.n_partitions
-
-        def _slice(frame: DataFrame) -> DataFrame:
-            return frame if full_batch else frame.where(F.col("partition_id").isin(parts))
-
-        bdf = _slice(df)
-        failed: dict[str, str] = dict(prefailed)  # check_name -> error detail
-
-        # --- violations: ONE narrow scan for all row-level gates, with the
-        # invariant fused in (tokens hashed once, 8-byte hashes joined to
-        # the pre-hashed reference — the tokens column is read exactly
-        # once per side across the whole run) + the once-per-run
-        # uniqueness slice
-        viol_parts: list[DataFrame] = []
-        facets = _row_level_facets(cfg, with_referential=has_ref_dim)
-        row_checks = sorted({f.check for f in facets})
-        want_invariant = "invariant" in cfg.checks and reference is not None
-        if facets:
-            try:
-                extra = (
-                    [F.xxhash64("tokens").alias("__tok_hash")] if want_invariant else []
-                )
-                narrow = cb.project_facets(bdf, facets, extra)
-                all_facets = list(facets)
-                if want_invariant:
-                    refh = reference.select(
-                        "doc_id", F.xxhash64("tokens_ref").alias("__ref_hash")
-                    )
-                    narrow = narrow.join(refh, on="doc_id", how="left")
-                    inv = cb.Facet(
-                        invariant.CHECK,
-                        "tokens_mismatch",
-                        F.col("__ref_hash").isNotNull()
-                        & (F.col("__tok_hash") != F.col("__ref_hash")),
-                        F.lit("hash(tokens) != hash(tokens_ref)"),
-                        "tokens == tokens_ref",
-                    )
-                    i = len(all_facets)
-                    narrow = narrow.withColumn(f"__c{i}", inv.cond).withColumn(
-                        f"__o{i}", F.when(inv.cond, inv.observed)
-                    )
-                    all_facets.append(inv)
-                viol_parts.append(cb.explode_flags(narrow, all_facets))
-            except Exception as e:  # errorStrategy 'ignore'
-                errors["row_level"] = repr(e)
-                for c in row_checks + (["invariant"] if want_invariant else []):
-                    failed[c] = repr(e)
-        elif want_invariant:
-            try:
-                viol_parts.append(invariant.violations(bdf, reference, cfg))
-            except Exception as e:
-                errors["invariant"] = repr(e)
-                failed["invariant"] = repr(e)
-        if uniq is not None:
-            viol_parts.append(_slice(uniq))
-        if degen is not None:
-            viol_parts.append(_slice(degen))
-
-        _t = _mark("build_plan", t0)
-        if not viol_parts:
-            viol_parts.append(
-                spark.createDataFrame([], qio.TABLE_SCHEMAS["violations"])
-            )
-        viol = viol_parts[0]
-        for extra in viol_parts[1:]:
-            viol = viol.unionByName(extra)
-        # cluster the (sparse) violation rows by lineage partition before
-        # the sink: one small shuffle (AQE-coalesced) instead of one tiny
-        # output file per scan task. persist() so the verdict counts reuse
-        # the computed rows instead of re-reading the written parquet.
-        viol = viol.repartition("partition_id").persist()
-
-        # --- overlap independent side jobs with the big violations write:
-        # the source-level families (histogram shuffle, then a driver-side
-        # grade) and, without uniqueness, the totals scan (doc_id only)
-        # share no lineage with the violation sink, so a second driver
-        # thread materializes them while the scan/join/write saturates
-        # the executors — Spark's scheduler interleaves jobs from
-        # concurrent threads (FIFO within cores). With uniqueness, the
-        # totals are sums over the persisted key_totals frame, which the
-        # violations write materializes: no second scan of the input.
-        if key_totals is not None:
-            totals = _slice(key_totals).groupBy("partition_id").agg(
-                F.sum("n").alias("n_rows")
-            )
-        else:
-            totals = bdf.groupBy("partition_id").agg(F.count(F.lit(1)).alias("n_rows"))
-        source_rows: list[Row] = []
-
-        def _materialize_side() -> None:
-            if key_totals is None:
-                try:
-                    totals.persist().count()
-                except Exception as e:  # errorStrategy 'ignore'
-                    errors["side_jobs"] = repr(e)
-            for family, verdict_rows_of in source_checks:
-                try:
-                    source_rows.extend(verdict_rows_of())
-                except Exception as e:  # errorStrategy 'ignore'
-                    errors[family] = repr(e)
-
-        side_thread = threading.Thread(target=_materialize_side, daemon=True)
-        side_thread.start()
-        # Phase attribution (r4 verdict #4) is OPT-IN: materializing the
-        # fused gate compute into the persisted cache before the sink
-        # splits compute from commit credibly (`violations_write`
-        # otherwise absorbs the whole lazy plan), but the split costs an
-        # extra cache-read pass (~0.7 s at sf1.0 local[16] — measurable
-        # against the N->4N efficiency target), so the production default
-        # is the single fused compute+write pass with an honestly-named
-        # combined mark.
-        if os.environ.get("TOKENQC_PHASE_DETAIL") == "1":
-            viol.count()
-            _t = _mark("violations_compute", _t)
-            qio.write_batch(viol, self.out_dir, "violations", run_id, batch)
-            _t = _mark("violations_write", _t)
-        else:
-            qio.write_batch(viol, self.out_dir, "violations", run_id, batch)
-            _t = _mark("violations_compute_write", _t)
-        side_thread.join()
-        _t = _mark("side_jobs_join", _t)
-
-        # --- verdict counts: persisted violations × per-partition totals --
-        counts = viol.groupBy("partition_id", "check_name").agg(
-            F.count(F.lit(1)).alias("n_viol")
-        )
-        active = [c for c in cfg.checks if c not in ("drift", "token_drift")]
-        if "invariant" in active and reference is None:
-            active.remove("invariant")
-        if "referential" in active and not has_ref_dim:
-            active.remove("referential")
-        active = [c for c in active if c not in failed]
-        verdicts: DataFrame | None = None
-        if active:
-            grid = totals.select(
-                "partition_id",
-                "n_rows",
-                F.explode(F.array(*[F.lit(c) for c in active])).alias("check_name"),
-            )
-            # counts is bounded by n_partitions × checks — broadcast it so
-            # the verdict grid never shuffles (one less tiny-but-serial stage)
-            per_check = grid.join(
-                F.broadcast(counts), on=["partition_id", "check_name"], how="left"
-            ).fillna({"n_viol": 0})
-            thr = F.create_map(
-                *[x for c in active for x in (F.lit(c), F.lit(cfg.threshold(c)))]
-            )
-            rate = F.when(F.col("n_rows") > 0, F.col("n_viol") / F.col("n_rows")).otherwise(F.lit(0.0))
-            status = F.when(rate <= thr[F.col("check_name")], F.lit(PASS)).otherwise(F.lit(FAIL))
-            verdicts = per_check.select(
-                "partition_id",
-                "check_name",
-                status.alias("status"),
-                "n_rows",
-                "n_viol",
-                F.lit(None).cast("string").alias("details"),
-            )
-
-        _t = _mark("verdicts_plan", _t)
-        # materialize the verdict frame ONCE, driver-side: it is bounded by
-        # construction (n_partitions × checks), so collecting it and
-        # deriving qc_state in plain Python replaces a second execution of
-        # the whole verdict aggregation (the old state =
-        # verdicts.groupBy(...) plan) with two tiny single-partition
-        # commits — the serial commit tail was the residual N→4N scaling
-        # gap (VERDICT r2 #4). Rows the driver already holds never go
-        # through the plan:
-        verdict_rows = verdicts.collect() if verdicts is not None else []
-        # - errored check families → per-partition UNKNOWN rows: the
-        #   partition is NOT graded PASS (no silent fillna(0)), and its
-        #   qc_state row below becomes UNKNOWN so resume re-validates it;
+        """Grade one batch's partitions on the driver and commit their
+        verdict rows, then their qc_state rows. `n_viol` and `row_totals`
+        are the run's per-(partition, check) violation counts and
+        per-partition row totals; `run_level` holds the partition -1 rows
+        this batch carries (the first batch carries the run's)."""
+        t = time.monotonic()
+        # a partition with no input rows has no totals and gets no rows
+        verdict_rows = []
+        for pid in parts:
+            n_rows = row_totals.get(pid)
+            if n_rows is None:
+                continue
+            for c in active:
+                n = n_viol.get((pid, c), 0)
+                rate = n / n_rows if n_rows > 0 else 0.0
+                status = PASS if rate <= self.cfg.threshold(c) else FAIL
+                verdict_rows.append(_VerdictRow(pid, c, status, n_rows, n, None))
+        # errored check families → per-partition UNKNOWN rows: the
+        # partition is NOT graded PASS (no silent fillna(0)), and its
+        # qc_state row below becomes UNKNOWN so resume re-validates it
         verdict_rows += [
             _VerdictRow(pid, check, UNKNOWN, 0, 0, detail)
             for check, detail in sorted(failed.items())
             for pid in parts
         ]
-        # - missing-input checks → one run-level UNKNOWN row each (-1);
-        verdict_rows += [_VerdictRow(-1, check, UNKNOWN, 0, 0, detail) for check, detail in missing]
-        # - source-level drift verdicts (partition_id = -1), computed once
-        #   per run over the full input on the first batch's side thread.
-        verdict_rows += source_rows
-        _t = _mark("verdicts_collect", _t)
+        verdict_rows += run_level
+        t = _mark_timing(timings, "verdicts_plan", t)
         qio.write_batch_rows(
-            spark, verdict_rows, _VERDICT_SCHEMA, _arrow_fields("verdicts"),
+            self.spark, verdict_rows, _VERDICT_SCHEMA, _arrow_fields("verdicts"),
             self.out_dir, "verdicts", run_id, batch,
         )
-        _t = _mark("verdicts_write", _t)
+        t = _mark_timing(timings, "verdicts_write", t)
 
         # --- qc_state lineage rows (written LAST: a state row for a
         # partition implies its violations/verdicts committed) ------------
@@ -582,12 +591,10 @@ class QCRunner:
             for pid, s in sorted(per_part.items())
         ]
         qio.write_batch_rows(
-            spark, state_rows, _STATE_SCHEMA, _arrow_fields("state"),
+            self.spark, state_rows, _STATE_SCHEMA, _arrow_fields("state"),
             self.out_dir, "qc_state", run_id, batch,
         )
-        viol.unpersist()
-        totals.unpersist()
-        _mark("state_write", _t)
+        _mark_timing(timings, "state_write", t)
 
     # ------------------------------------------------------------------
     def report(self, run_id: str) -> DataFrame | None:
