@@ -330,7 +330,7 @@ def _assert_parity(df, baseline_hist, cfg):
         for r in _source_verdicts("drift", got_df, _STATS)
     }
     assert details == {
-        None if s is None else f"drift:{s}": json.loads(w.details) for s, w in want.items()
+        f"drift:{'NULL' if s is None else s}": json.loads(w.details) for s, w in want.items()
     }
     return {src: r.status for src, r in got.items()}
 

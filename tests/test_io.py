@@ -64,27 +64,26 @@ def test_write_batch_rows_atomic_and_clean(spark, tmp_path):
     """The pyarrow fast path commits via temp-file + os.replace: after a
     write no .inprogress temp remains, and a leftover temp from a
     crashed writer is invisible to readers (dotfile) and replaced by the
-    next idempotent overwrite."""
+    next idempotent overwrite. The table's schema comes from
+    TABLE_SCHEMAS, and the rows read back through it as written."""
     import os
 
-    import pyarrow as pa
-
     out = str(tmp_path)
-    ddl = "k int, v string"
-    schema = [("k", pa.int32()), ("v", pa.string())]
-    path = qio.write_batch_rows(spark, [(1, "a"), (2, "b")], ddl, schema, out, "t", "r", 0)
+    rows = [(0, "format", "PASS", 10, 0, None), (1, "format", "FAIL", 10, 2, None)]
+    path = qio.write_batch_rows(spark, rows, out, "verdicts", "r", 0)
     files = os.listdir(path)
     assert files == ["part-00000.parquet"]
-    assert qio.read_table(spark, out, "t", "r").count() == 2
+    back = qio.read_table(spark, out, "verdicts", "r")
+    assert sorted(tuple(r)[:6] for r in back.collect()) == rows
     # plant a torn temp (simulated crash mid-write) — readers must not see it
     torn = os.path.join(path, ".part-00000.parquet.inprogress")
     with open(torn, "wb") as f:
         f.write(b"not parquet")
-    assert qio.read_table(spark, out, "t", "r").count() == 2
+    assert qio.read_table(spark, out, "verdicts", "r").count() == 2
     # idempotent retry replaces the slice and clears the temp
-    qio.write_batch_rows(spark, [(3, "c")], ddl, schema, out, "t", "r", 0)
+    qio.write_batch_rows(spark, [(2, "format", "PASS", 5, 0, None)], out, "verdicts", "r", 0)
     assert os.listdir(path) == ["part-00000.parquet"]
-    assert qio.read_table(spark, out, "t", "r").count() == 1
+    assert qio.read_table(spark, out, "verdicts", "r").count() == 1
 
 
 def test_drop_orphan_batches(spark, tmp_path):
@@ -189,10 +188,8 @@ def test_iceberg_end_to_end(spark, tmp_path):  # pragma: no cover
 
 def test_html_report_artifact(spark, tmp_path, tables):
     from tokenqc import report
-    from tokenqc.checks import drift
     from tokenqc.checks.base import CheckConfig
     from tokenqc.runner import QCRunner
-    from corpusops.textops import pack, textqc
 
     cfg = CheckConfig(n_partitions=8)
     runner = QCRunner(spark, cfg, out_dir=str(tmp_path / "q"))
@@ -202,47 +199,19 @@ def test_html_report_artifact(spark, tmp_path, tables):
         baseline_hist=tables["baseline_hist"],
         run_id="rep1",
     )
-    # round-3/4 operator sections: JS drift, repetition/PII roll-up,
-    # packing footer (all bounded summaries)
-    js = drift.js_divergence(tables["sequences"], tables["baseline_hist"], cfg)
-    corpus = spark.createDataFrame(
-        [("d1", "a a a a a"), ("d2", "one two three four five 1.2.3.4")],
-        "doc_id string, text string",
-    )
-    tqc = report.text_qc_rows(
-        repetition=textqc.repetition_stats(corpus),
-        pii=textqc.pii_flags(corpus),
-    )
-    seqs = tables["sequences"].where("n_tok is not null and doc_id is not null")
-    spans = pack.chunk_spans(seqs.select("doc_id", "n_tok"), cap=256)
-    ps = report.pack_stats_row(spans, cap=256)
-    path = runner.write_report("rep1", js_drift=js, text_qc=tqc, pack_stats=ps)
+    path = runner.write_report("rep1")
     with open(path) as f:
         html = f.read()
     assert "tokenqc QC report" in html and "rep1" in html
     assert "Per-partition scores" in html
+    assert "Verdict rollup" in html
+    assert "Run-level verdicts" in html
     assert "Top violation examples" in html
     assert 'class="FAIL"' in html  # planted violations show up graded
     assert "drift:" in html  # run-level drift verdicts present
-    assert "JS-divergence drift" in html
-    assert "Corpus text QC (repetition / PII)" in html
-    assert "repetition" in html and "pii" in html and "n_email=" in html
-    assert "Packing summary" in html and str(ps["n_packs"]) in html
-    assert tqc[0]["n_flagged"] == 1 and tqc[1]["n_flagged"] == 1  # planted
-    # every pack except possibly the final partial one tiles to cap
-    assert ps["n_packs"] > 0 and ps["n_full_packs"] >= ps["n_packs"] - 1
-    # the run artifact carries the repo's measured scale story (r4
-    # verdict #8): scaling-efficiency summary + planted-skew table,
-    # sourced from BENCH/scaling_result.json + skew_result.json
-    ev = report.load_scale_evidence()
-    assert ev and "scaling" in ev and "skew" in ev  # repo ships both
-    assert "Scale evidence (measured)" in html
-    assert "median efficiency" in html
-    assert "enum_skewsafe" in html and "hot_frac" in html
-    # and the section degrades to absent when the artifacts are missing
-    assert report.load_scale_evidence(str(tmp_path / "nope")) is None
-    bare = report.render_html("x", None, None, None, scale_evidence=None)
-    assert "Scale evidence" not in bare
+    assert "Scale evidence" not in html
+    bare = report.render_html("x", None, None, None)
+    assert "Per-partition scores" not in bare and "</body></html>" in bare
     assert runner.write_report("never-ran") is None
     # snapshot-diff section (cli --prev-input --report path): the run
     # artifact carries the structural diff vs the previous version

@@ -319,30 +319,6 @@ def test_token_drift_missing_baseline_is_unknown(spark, tables, tmp_path):
     assert row.status == "UNKNOWN" and row.partition_id == -1
 
 
-def test_phase_detail_modes_equivalent(spark, tables, tmp_path, monkeypatch):
-    """TOKENQC_PHASE_DETAIL only changes when the violations frame is
-    materialized (attribution vs single fused compute+write pass) —
-    outputs are identical; each mode stamps its own timing mark."""
-    import os
-
-    cfg = CheckConfig(n_partitions=4, checks=("completeness",))
-    monkeypatch.setenv("TOKENQC_PHASE_DETAIL", "1")
-    r1 = QCRunner(spark, cfg, out_dir=str(tmp_path / "pd1")).run(
-        tables["sequences"], run_id="pd1"
-    )
-    monkeypatch.delenv("TOKENQC_PHASE_DETAIL")
-    r2 = QCRunner(spark, cfg, out_dir=str(tmp_path / "pd2")).run(
-        tables["sequences"], run_id="pd2"
-    )
-    assert r1.violations.count() == r2.violations.count()
-    assert sorted(
-        (r.partition_id, r.check_name, r.status) for r in r1.verdicts.collect()
-    ) == sorted((r.partition_id, r.check_name, r.status) for r in r2.verdicts.collect())
-    assert "violations_compute" in r1.timings and "violations_write" in r1.timings
-    assert "violations_compute_write" in r2.timings
-    assert "violations_compute" not in r2.timings
-
-
 def test_degenerate_gate_end_to_end(spark, tmp_path):
     """The degenerate-content gate as an engine check: planted
     entropy-collapse and tiling rows land as violation rows with the
@@ -602,3 +578,81 @@ def test_jobs_named_by_phase(spark, tables, tmp_path, monkeypatch):
     assert sorted(seen) == [("drift", "tokenqc jd batch=0 drift")] + [
         ("write_batch", f"tokenqc jd batch={b} violations") for b in range(4)
     ]
+
+
+def test_null_source_baseline_verdict_reads_back(spark, tables, tmp_path):
+    """A baseline row with a NULL source is graded like any source, and
+    its run-level verdict survives the read-back as `drift:NULL`: with a
+    NULL check_name it never matched the run-level semi-join and was
+    dropped."""
+    base = tables["baseline_hist"].unionByName(
+        spark.createDataFrame([(None, 0, 1.0)], "source string, bucket int, p double")
+    )
+    cfg = CheckConfig(n_partitions=4, checks=("drift",))
+    res = QCRunner(spark, cfg, out_dir=str(tmp_path / "qn")).run(
+        tables["sequences"], baseline_hist=base, run_id="ns"
+    )
+    got = {r.check_name: r.status for r in res.verdicts.collect()}
+    assert got["drift:NULL"] == "UNKNOWN"
+    assert got["drift:web"] == "PASS"
+    assert None not in got
+
+
+def test_invariant_rows_do_not_depend_on_other_checks(spark, tmp_path):
+    """An invariant-only run takes the fused path every other run takes:
+    the same invariant violation rows (observed included) and verdicts,
+    on identical and conflicting reference copies, a NULL doc_id, a NULL
+    token array and a doc_id the reference lacks."""
+    seq = spark.createDataFrame(
+        [
+            ("a", [1, 2, 3], 3, "web"), ("b", [4, 5], 2, "web"), ("c", [6], 1, "web"),
+            (None, [8], 1, "web"), ("d", None, 0, "web"), ("e", [1], 1, "web"),
+        ],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    ref = spark.createDataFrame(
+        [("a", [1, 2, 3])] * 2 + [("b", [4, 5]), ("b", [4, 6]), ("c", [7]), ("d", [9]),
+                                  (None, [8])],
+        "doc_id string, tokens_ref array<int>",
+    )
+
+    def invariant_rows(checks, name):
+        cfg = CheckConfig(n_partitions=2, checks=checks)
+        res = QCRunner(spark, cfg, out_dir=str(tmp_path / name)).run(
+            seq, reference_tokens=ref, run_id=name
+        )
+        assert res.errors == {}
+        viol = sorted(
+            (tuple(r) for r in res.violations.where("check_name = 'invariant'").select(
+                "partition_id", "doc_id", "observed", "expected"
+            ).collect()),
+            key=str,
+        )
+        verd = sorted(
+            tuple(r) for r in res.verdicts.where("check_name = 'invariant'").select(
+                "partition_id", "status", "n_rows", "n_viol"
+            ).collect()
+        )
+        return viol, verd
+
+    alone = invariant_rows(("invariant",), "inv")
+    assert sorted(d for _, d, _, _ in alone[0]) == ["b", "c", "d"]
+    assert {o for _, _, o, _ in alone[0]} == {
+        "tokens_mismatch: hash(tokens) != hash(tokens_ref)"
+    }
+    assert alone == invariant_rows(("completeness", "invariant"), "inv2")
+
+
+def test_traced_timing_keys_survive(spark, tables, tmp_path):
+    """Every runner timing key the benchmark's traced run reads is set by
+    a default-check, 1-batch run."""
+    from qcbench.tracing import RUNNER_PHASES
+
+    res = QCRunner(spark, CheckConfig(n_partitions=16), out_dir=str(tmp_path / "qt")).run(
+        tables["sequences"],
+        allowed_sources=tables["allowed_sources"],
+        baseline_hist=tables["baseline_hist"],
+        reference_tokens=tables["reference_tokens"],
+        run_id="tk",
+    )
+    assert set(RUNNER_PHASES) <= set(res.timings), sorted(res.timings)

@@ -1,5 +1,5 @@
 """Scoring semantics parity with the reference thresholds
-(analyze_joss.py:42-49, 288-298, 322-335, 505-508)."""
+(analyze_joss.py:42-49, 322-335, 505-508)."""
 
 from __future__ import annotations
 
@@ -13,17 +13,6 @@ def test_graded_status_thresholds(spark):
     )
     out = [r[0] for r in df.select(scoring.graded_status(df.r)).collect()]
     assert out == ["good", "good", "ok", "ok", "needs_improvement", "needs_improvement"]
-
-
-def test_best_status_per_group(spark):
-    rows = [
-        ("a", "needs_improvement"), ("a", "ok"), ("a", "good"),
-        ("b", "ok"), ("b", "needs_improvement"),
-        ("c", "needs_improvement"),
-    ]
-    df = spark.createDataFrame(rows, "grp string, status string")
-    out = {r.grp: r.overall_status for r in scoring.best_status_per_group(df, ["grp"]).collect()}
-    assert out == {"a": "good", "b": "ok", "c": "needs_improvement"}
 
 
 def test_outcome_counts_semantics(spark):

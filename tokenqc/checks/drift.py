@@ -277,23 +277,6 @@ def js_from_histograms(
     )
 
 
-def psi_stats(
-    df: DataFrame,
-    baseline_hist: DataFrame,
-    cfg: CheckConfig,
-    psi_warn: float = 0.1,
-    psi_fail: float = 0.25,
-) -> DataFrame:
-    """Population Stability Index drift gate per source between the
-    observed n_tok histogram and the baseline — the industry-standard
-    model-monitoring drift statistic (sums (actual% - expected%) *
-    ln(actual%/expected%)); the third member of the chi2-KS / JS
-    family, graded PASS / WARN / FAIL instead of binary."""
-    return psi_from_histograms(
-        observed_histogram(df, cfg), baseline_hist, psi_warn, psi_fail
-    )
-
-
 def psi_from_histograms(
     hist: DataFrame,
     baseline_hist: DataFrame,

@@ -37,32 +37,6 @@ def grade_to_score(status_col) -> F.Column:
     )
 
 
-STATUS_ORDINAL = {"needs_improvement": 0, "ok": 1, "good": 2}
-
-
-def status_ordinal(status_col) -> F.Column:
-    return (
-        F.when(status_col == "good", F.lit(2))
-        .when(status_col == "ok", F.lit(1))
-        .otherwise(F.lit(0))
-    )
-
-
-def best_status_per_group(df: DataFrame, group_cols: list[str], status_col: str = "status") -> DataFrame:
-    """Any-semantics roll-up: overall = good if ANY member good, else ok
-    if any ok, else needs_improvement (the reference's dependency-status
-    fold, /root/reference/bin/analyze_joss.py:288-298). Ordinal-encode,
-    max per group, decode."""
-    enc = status_ordinal(F.col(status_col))
-    agg = df.groupBy(*group_cols).agg(F.max(enc).alias("_ord"))
-    dec = (
-        F.when(F.col("_ord") == 2, F.lit("good"))
-        .when(F.col("_ord") == 1, F.lit("ok"))
-        .otherwise(F.lit("needs_improvement"))
-    )
-    return agg.select(*group_cols, dec.alias("overall_status"))
-
-
 def partition_report(verdict_counts: DataFrame) -> DataFrame:
     """Roll per-(partition, check) pass rates up to a scored report row
     per partition: one graded status per check → summed/normalized score

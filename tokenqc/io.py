@@ -23,6 +23,7 @@ plus the workDir-keyed resume cache (/root/reference/nextflow.config:14).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.errors import AnalysisException
@@ -31,8 +32,10 @@ from pyspark.sql import functions as F
 
 _NS_CONF = "spark.tokenqc.iceberg.namespace"
 
-#: Data columns of the runner's result tables. The writers produce these
-#: columns, and the reader pins them, so a read-back infers nothing.
+#: Data columns of the runner's result tables: the one description of
+#: them. The writers produce these columns (`write_batch_rows` derives its
+#: Spark and Arrow schemas from here), and the reader pins them, so a
+#: read-back infers nothing.
 TABLE_SCHEMAS = {
     "violations": (
         "partition_id int, doc_id string, check_name string, "
@@ -165,20 +168,19 @@ def write_batch(df: DataFrame, base_dir: str, table: str, run_id: str, batch: in
     return path
 
 
-def append_state(df: DataFrame, base_dir: str, run_id: str, batch: int) -> str:
-    """qc_state rows for one batch (same idempotent overwrite-by-batch)."""
-    return write_batch(df, base_dir, "qc_state", run_id, batch)
+@functools.cache
+def _row_schemas(table: str):
+    """(Spark StructType, Arrow schema) of a `TABLE_SCHEMAS` table, both
+    derived from its DDL. Cached: parsing the DDL is a JVM round trip."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(TABLE_SCHEMAS[table])
+    return struct, to_arrow_schema(struct)
 
 
 def write_batch_rows(
-    spark: SparkSession,
-    rows: list,
-    ddl: str,
-    arrow_schema,
-    base_dir: str,
-    table: str,
-    run_id: str,
-    batch: int,
+    spark: SparkSession, rows: list, base_dir: str, table: str, run_id: str, batch: int
 ) -> str:
     """Driver-side commit of a BOUNDED row set (verdicts, qc_state —
     n_partitions × checks rows by construction, never data-sized).
@@ -194,8 +196,10 @@ def write_batch_rows(
     and non-file schemes (hdfs://, s3a://) keep the Spark write path:
     their commit protocols must go through the catalog/FS committer.
 
-    `rows` are tuples (or Rows) field-aligned with `arrow_schema`;
-    `ddl` is the Spark schema for the fallback frame.
+    `rows` are tuples (or Rows) field-aligned with `TABLE_SCHEMAS[table]`,
+    the one description of the table that both write paths use; its
+    timestamps are tz-aware in Arrow (isAdjustedToUTC), so Spark reads
+    them as TimestampType.
 
     Local-vs-remote is decided by resolving the path's scheme through
     the Hadoop FileSystem API (`_local_file_path`), NOT by string
@@ -207,10 +211,11 @@ def write_batch_rows(
     for qc_state's resume protocol to trip over (it sees an empty batch
     dir, which reads as absent and re-validates).
     """
+    struct, schema = _row_schemas(table)
     local = None if use_iceberg(spark) else _local_file_path(spark, base_dir)
     if local is None:
         return write_batch(
-            spark.createDataFrame(rows, ddl).coalesce(1), base_dir, table, run_id, batch
+            spark.createDataFrame(rows, struct).coalesce(1), base_dir, table, run_id, batch
         )
     import shutil
 
@@ -220,7 +225,6 @@ def write_batch_rows(
     path = os.path.join(local, table, f"run_id={run_id}", f"batch={batch}")
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
-    schema = pa.schema(arrow_schema)
     cols = list(zip(*rows)) if rows else [[] for _ in schema]
     tbl = pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema

@@ -12,7 +12,6 @@ violation examples per check — never raw violations.
 from __future__ import annotations
 
 import html as _html
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -58,123 +57,16 @@ def top_violation_examples(violations: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def text_qc_rows(
-    repetition: DataFrame | None = None, pii: DataFrame | None = None
-) -> list[dict]:
-    """Corpus text-QC gates rolled up for the report: one aggregate job
-    per provided frame (outputs of textqc.repetition_stats /
-    textqc.pii_flags), one summary row each — driver-bounded."""
-    rows: list[dict] = []
-    if repetition is not None:
-        r = repetition.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("repetitive").cast("int")).alias("k"),
-            F.round(F.avg("top_word_frac"), 4).alias("avg_top"),
-            F.round(F.avg("dup_2gram_frac"), 4).alias("avg_dup"),
-        ).first()
-        rows.append({
-            "gate": "repetition", "n_docs": r["n"], "n_flagged": int(r["k"] or 0),
-            "detail": f"avg top_word_frac={r['avg_top']}, avg dup_2gram_frac={r['avg_dup']}",
-        })
-    if pii is not None:
-        count_cols = [c for c in pii.columns if c.startswith("n_")]
-        p = pii.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("has_pii").cast("int")).alias("k"),
-            *[F.sum(c).alias(c) for c in count_cols],
-        ).first()
-        detail = ", ".join(f"{c}={int(p[c] or 0)}" for c in count_cols)
-        rows.append({
-            "gate": "pii", "n_docs": p["n"], "n_flagged": int(p["k"] or 0),
-            "detail": detail,
-        })
-    return rows
-
-
-def pack_stats_row(spans: DataFrame, cap: int) -> dict:
-    """Packing summary from a chunk_spans output (one aggregate over the
-    span rows, grouped only in-aggregate — a single bounded row)."""
-    full = spans.groupBy("pack_id").agg(F.sum("len").alias("t"))
-    r = full.agg(
-        F.count(F.lit(1)).alias("n_packs"),
-        F.sum((F.col("t") == cap).cast("int")).alias("n_full"),
-        F.sum("t").alias("n_tokens"),
-    ).first()
-    return {
-        "cap": cap,
-        "n_packs": r["n_packs"],
-        "n_full_packs": int(r["n_full"] or 0),
-        "n_tokens": int(r["n_tokens"] or 0),
-    }
-
-
-def load_scale_evidence(bench_dir: str | None = None) -> dict | None:
-    """Summarize the repo's measured scale evidence
-    (BENCH/scaling_result.json + BENCH/skew_result.json) into rows for
-    the HTML report, so the run artifact carries its own scale story
-    (r4 verdict #8). Returns None when neither file exists (e.g. a
-    --py-files deployment without the bench artifacts)."""
-    import json as _json
-
-    bench_dir = bench_dir or os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH"
-    )
-    out: dict = {}
-    try:
-        with open(os.path.join(bench_dir, "scaling_result.json")) as f:
-            scal = _json.load(f)
-        pairs = scal.get("pairs", [])
-        effs = sorted(p["efficiency"] for p in pairs if p.get("efficiency"))
-        if effs:
-            out["scaling"] = {
-                "unit": scal.get("unit", ""),
-                "sf": scal.get("sf"),
-                "n_pairs": len(effs),
-                "median_efficiency": effs[len(effs) // 2],
-                "min_efficiency": effs[0],
-                "pairs_ge_080": sum(1 for e in effs if e >= 0.8),
-            }
-    except (OSError, ValueError, KeyError):
-        pass
-    try:
-        with open(os.path.join(bench_dir, "skew_result.json")) as f:
-            skew = _json.load(f)
-        rows = []
-        for run in skew.get("runs", []):
-            for name, v in run.get("variants", {}).items():
-                if not name.startswith("enum"):
-                    continue
-                rows.append({
-                    "hot_frac": run.get("hot_frac"),
-                    "variant": name,
-                    "wall_sec": v.get("wall_sec"),
-                    "max_task_ms": v.get("max_task_ms"),
-                    "p50_task_ms": v.get("p50_task_ms"),
-                })
-        if rows:
-            out["skew"] = rows
-    except (OSError, ValueError, KeyError):
-        pass
-    return out or None
-
-
 def render_html(
     run_id: str,
     report: DataFrame | None,
     verdicts: DataFrame | None,
     violations: DataFrame | None,
-    js_drift: DataFrame | None = None,
-    text_qc: list[dict] | None = None,
-    pack_stats: dict | None = None,
-    scale_evidence: dict | None = None,
     snapshot_diff: DataFrame | None = None,
 ) -> str:
-    """Assemble the report page from the run's result frames.
-
-    Optional round-3/4 operator sections: `js_drift` (a
-    drift.js_divergence output — sources rows), `text_qc`
-    (text_qc_rows summary), `pack_stats` (pack_stats_row footer),
-    `scale_evidence` (load_scale_evidence summary)."""
+    """Assemble the report page from the run's result frames, plus a
+    snapshot-diff section when `snapshot_diff` (a snapshot.table_diff
+    output) is given."""
     parts = [
         "<html><head><title>tokenqc run report</title>",
         f"<style>{_STYLE}</style></head><body>",
@@ -214,16 +106,6 @@ def render_html(
         ex = [r.asDict() for r in top_violation_examples(violations).orderBy("check_name", F.desc("doc_id")).collect()]
         parts.append("<h2>Top violation examples per check</h2>")
         parts.append(_table(ex, ["check_name", "doc_id", "observed", "expected"]))
-    if js_drift is not None:
-        rows = [r.asDict() for r in js_drift.orderBy("source").collect()]
-        parts.append("<h2>JS-divergence drift (per source)</h2>")
-        parts.append(_table(rows, ["source", "n_rows", "js_divergence", "status"]))
-    if text_qc:
-        parts.append("<h2>Corpus text QC (repetition / PII)</h2>")
-        parts.append(_table(text_qc, ["gate", "n_docs", "n_flagged", "detail"]))
-    if pack_stats:
-        parts.append("<h2>Packing summary</h2>")
-        parts.append(_table([pack_stats], ["cap", "n_packs", "n_full_packs", "n_tokens"]))
     if snapshot_diff is not None:
         rows = [r.asDict() for r in snapshot_diff.orderBy("key").collect()]
         bad = sum(1 for r in rows if r["verdict"] not in ("STABLE",))
@@ -235,28 +117,6 @@ def render_html(
             f'<p><span class="score">{len(rows) - bad}/{len(rows)}</span> '
             "keys STABLE.</p>"
         )
-    if scale_evidence:
-        parts.append("<h2>Scale evidence (measured)</h2>")
-        scaling = scale_evidence.get("scaling")
-        if scaling:
-            parts.append(
-                f"<p>Throughput scaling ({_html.escape(str(scaling['unit']))}, "
-                f"sf={scaling['sf']}): median efficiency "
-                f'<span class="score">{scaling["median_efficiency"]:.3f}</span> '
-                f"over {scaling['n_pairs']} pairs "
-                f"(min {scaling['min_efficiency']:.3f}; "
-                f"{scaling['pairs_ge_080']}/{scaling['n_pairs']} ≥ 0.80, "
-                "the north-rule bar).</p>"
-            )
-        skew_rows = scale_evidence.get("skew")
-        if skew_rows:
-            parts.append(
-                "<p>Planted-skew dup-enumeration (hot key holding the given "
-                "row fraction; max/p50 task time is the cluster predictor):</p>"
-            )
-            parts.append(
-                _table(skew_rows, ["hot_frac", "variant", "wall_sec", "max_task_ms", "p50_task_ms"])
-            )
     parts.append("</body></html>")
     return "\n".join(parts)
 

@@ -32,7 +32,9 @@ batch is a commit unit, not a compute unit.
    pass over the fact table computes every row-level facet
    (completeness, structural, format, referential-via-broadcast) with
    the invariant hash join fused in (the reference reduced to one row
-   per doc_id), unioned with the uniqueness and degeneracy rows and
+   per doc_id) in every configuration, an invariant-only run included,
+   so an invariant row reads the same whatever else runs. It is
+   unioned with the uniqueness and degeneracy rows and
    clustered by partition_id into one persisted frame. It holds
    violation rows only, never input rows, and spills like any cached
    frame;
@@ -85,40 +87,13 @@ from tokenqc.checks import (
     invariant,
     referential,
     scoring,
-    stats,
     uniqueness,
 )
 from tokenqc.schema import FAIL, PASS, UNKNOWN
 
 TABLES = ("violations", "verdicts", "qc_state")
 
-_VERDICT_SCHEMA = qio.TABLE_SCHEMAS["verdicts"]
-_STATE_SCHEMA = qio.TABLE_SCHEMAS["qc_state"]
 _VerdictRow = Row("partition_id", "check_name", "status", "n_rows", "n_viol", "details")
-
-
-def _arrow_fields(kind: str):
-    import pyarrow as pa
-
-    if kind == "verdicts":
-        return [
-            pa.field("partition_id", pa.int32()),
-            pa.field("check_name", pa.string()),
-            pa.field("status", pa.string()),
-            pa.field("n_rows", pa.int64()),
-            pa.field("n_viol", pa.int64()),
-            pa.field("details", pa.string()),
-        ]
-    return [
-        pa.field("partition_id", pa.int32()),
-        pa.field("status", pa.string()),
-        pa.field("n_rows", pa.int64()),
-        pa.field("n_viol", pa.int64()),
-        pa.field("wall_ms", pa.int64()),
-        # tz-aware (isAdjustedToUTC) so Spark reads TimestampType (LTZ),
-        # identical to what its own writer produced before the fast path
-        pa.field("finished_at", pa.timestamp("us", tz="UTC")),
-    ]
 
 
 @dataclass
@@ -141,13 +116,14 @@ def _mark_timing(timings: dict[str, float], name: str, start: float) -> float:
 
 def _source_verdicts(family: str, frame: DataFrame, stats: tuple[str, ...]) -> list[Row]:
     """Run-level verdict rows (partition_id = -1) of a per-source table,
-    one per source, named `<family>:<source>`. `details` holds the
-    `stats` columns as JSON and leaves NULL ones out, as Spark's to_json
-    does."""
+    one per source, named `<family>:<source>` (a NULL source renders as
+    `NULL`, as in violation rows: a NULL check_name would never match the
+    read-back's run-level semi-join). `details` holds the `stats` columns
+    as JSON and leaves NULL ones out, as Spark's to_json does."""
     return [
         _VerdictRow(
             -1,
-            None if r["source"] is None else f"{family}:{r['source']}",
+            f"{family}:{'NULL' if r['source'] is None else r['source']}",
             r["status"],
             r["n_rows"],
             0,
@@ -314,7 +290,7 @@ class QCRunner:
             # side across the whole run)
             facets = _row_level_facets(cfg, with_referential=has_ref_dim)
             want_invariant = "invariant" in cfg.checks and reference_tokens is not None
-            if facets:
+            if facets or want_invariant:
                 try:
                     extra = (
                         [F.xxhash64("tokens").alias("__tok_hash")] if want_invariant else []
@@ -344,11 +320,6 @@ class QCRunner:
                         ["invariant"] if want_invariant else []
                     ):
                         failed[c] = repr(e)
-            elif want_invariant:
-                try:
-                    viol_parts.append(invariant.violations(pdf, reference_tokens, cfg))
-                except Exception as e:
-                    errors["invariant"] = failed["invariant"] = repr(e)
             if not viol_parts:
                 viol_parts.append(spark.createDataFrame([], qio.TABLE_SCHEMAS["violations"]))
             viol_all = viol_parts[0]
@@ -405,26 +376,15 @@ class QCRunner:
             # missing their input, not errored
             skip = {"drift", "token_drift", *dict(missing), *failed}
             active = [c for c in cfg.checks if c not in skip]
-            # Phase attribution is OPT-IN: materializing the persisted frame
-            # before the first sink splits compute from commit (the write
-            # otherwise absorbs the whole lazy plan), but costs an extra
-            # cache-read pass, so the default is the single fused
-            # compute+write pass with a combined mark.
-            detail = os.environ.get("TOKENQC_PHASE_DETAIL") == "1"
             for i, parts in enumerate(batches):
                 batch = batch_start + i
                 t0 = t = time.monotonic()
                 phase(batch, "violations")
-                if detail and i == 0:
-                    viol_all.count()
-                    t = _mark_timing(timings, "violations_compute", t)
                 viol = viol_all if len(batches) == 1 else viol_all.where(
                     F.col("partition_id").isin(parts)
                 )
                 qio.write_batch(viol, self.out_dir, "violations", run_id, batch)
-                t = _mark_timing(
-                    timings, "violations_write" if detail else "violations_compute_write", t
-                )
+                t = _mark_timing(timings, "violations_compute_write", t)
                 if i == 0:
                     side_thread.join()
                     t = _mark_timing(timings, "side_jobs_join", t)
@@ -471,7 +431,7 @@ class QCRunner:
         t = time.monotonic()
         frames = {}
         for table in TABLES:
-            cur = self._read_current(run_id, table)
+            cur = qio.read_current(self.spark, self.out_dir, table, run_id)
             frames[table] = cur if cur is not None else self.spark.createDataFrame(
                 [], f"{qio.TABLE_SCHEMAS[table]}, {qio.PARTITION_SCHEMA}"
             )
@@ -485,13 +445,6 @@ class QCRunner:
             errors=errors,
             timings=timings,
         )
-
-    # ------------------------------------------------------------------
-    def _read_current(self, run_id: str, table: str) -> DataFrame | None:
-        """Latest-committed-batch view — see io.read_current (hoisted
-        there so the runner and report.diff_runs share one
-        implementation of the supersede semantics)."""
-        return qio.read_current(self.spark, self.out_dir, table, run_id)
 
     # ------------------------------------------------------------------
     def _resume_point(self, run_id: str) -> tuple[set[int], set[int]]:
@@ -555,10 +508,7 @@ class QCRunner:
         ]
         verdict_rows += run_level
         t = _mark_timing(timings, "verdicts_plan", t)
-        qio.write_batch_rows(
-            self.spark, verdict_rows, _VERDICT_SCHEMA, _arrow_fields("verdicts"),
-            self.out_dir, "verdicts", run_id, batch,
-        )
+        qio.write_batch_rows(self.spark, verdict_rows, self.out_dir, "verdicts", run_id, batch)
         t = _mark_timing(timings, "verdicts_write", t)
 
         # --- qc_state lineage rows (written LAST: a state row for a
@@ -590,16 +540,13 @@ class QCRunner:
             )
             for pid, s in sorted(per_part.items())
         ]
-        qio.write_batch_rows(
-            self.spark, state_rows, _STATE_SCHEMA, _arrow_fields("state"),
-            self.out_dir, "qc_state", run_id, batch,
-        )
+        qio.write_batch_rows(self.spark, state_rows, self.out_dir, "qc_state", run_id, batch)
         _mark_timing(timings, "state_write", t)
 
     # ------------------------------------------------------------------
     def report(self, run_id: str) -> DataFrame | None:
         """Scored per-partition report (analyze_joss.py:505-508 semantics)."""
-        verd = self._read_current(run_id, "verdicts")
+        verd = qio.read_current(self.spark, self.out_dir, "verdicts", run_id)
         if verd is None:
             return None
         return scoring.partition_report(
@@ -608,39 +555,18 @@ class QCRunner:
             )
         )
 
-    def stats_profile(self, sequences: DataFrame) -> DataFrame:
-        return stats.profile(sequences, self.cfg)
-
-    def write_report(
-        self,
-        run_id: str,
-        js_drift: DataFrame | None = None,
-        text_qc: list | None = None,
-        pack_stats: dict | None = None,
-        snapshot_diff: DataFrame | None = None,
-    ) -> str | None:
+    def write_report(self, run_id: str, snapshot_diff: DataFrame | None = None) -> str | None:
         """Render the run's human-readable HTML artifact (reference
         analogue: test-results/POT_ai_analysis.html) to
         <out_dir>/reports/run_id=<id>/report.html; None if nothing ran.
-
-        The optional sections surface the corpus-level operators that
-        run OUTSIDE the check families: a drift.js_divergence frame,
-        report.text_qc_rows (repetition/PII roll-up) and
-        report.pack_stats_row (packing footer)."""
-        import os
-
+        `snapshot_diff` (a snapshot.table_diff frame) adds its section."""
         from tokenqc import report as qreport
 
         rep = self.report(run_id)
         if rep is None:
             return None
-        verd = self._read_current(run_id, "verdicts")
-        viol = self._read_current(run_id, "violations")
-        html = qreport.render_html(
-            run_id, rep, verd, viol,
-            js_drift=js_drift, text_qc=text_qc, pack_stats=pack_stats,
-            scale_evidence=qreport.load_scale_evidence(),
-            snapshot_diff=snapshot_diff,
-        )
+        verd = qio.read_current(self.spark, self.out_dir, "verdicts", run_id)
+        viol = qio.read_current(self.spark, self.out_dir, "violations", run_id)
+        html = qreport.render_html(run_id, rep, verd, viol, snapshot_diff=snapshot_diff)
         path = os.path.join(self.out_dir, "reports", f"run_id={run_id}", "report.html")
         return qreport.write_text(self.spark, path, html)

@@ -1,9 +1,11 @@
-"""Fixed StructType schemas for every engine table.
+"""Fixed StructType schemas for the engine's input tables.
 
 The reference is stringly-typed (CSV rows, positional Nextflow tuples,
 JSON — see /root/reference/modules/ProcessRepo.nf:85 and
 bin/analyze_joss.py:510-515); the engine replaces that with explicit,
-enforced columnar schemas (SURVEY.md section 1.3).
+enforced columnar schemas (SURVEY.md section 1.3). The result tables
+(violations, verdicts, qc_state) are described once, in
+`io.TABLE_SCHEMAS`.
 """
 
 from __future__ import annotations
@@ -50,47 +52,7 @@ REFERENCE_TOKENS = T.StructType(
     ]
 )
 
-# ---- outputs ---------------------------------------------------------------
-# Verdict rows: the status-CSV row (ProcessRepo.nf:85) + scored criteria
-# report (analyze_joss.py:510-515) merged into one long-format table.
-VERDICTS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("check_name", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # PASS | FAIL | UNKNOWN
-        T.StructField("metrics", T.MapType(T.StringType(), T.DoubleType()), True),
-        T.StructField("details", T.StringType(), True),
-    ]
-)
-
-# Violation rows: the reference's `issues`/`details` lists
-# (analyze_joss.py:216-219) as first-class rows.
-VIOLATIONS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("doc_id", T.StringType(), True),
-        T.StructField("check_name", T.StringType(), False),
-        T.StructField("observed", T.StringType(), True),
-        T.StructField("expected", T.StringType(), True),
-    ]
-)
-
-# Checkpoint/lineage table: the engine's explicit replacement for
-# Nextflow's workDir-based `-resume` (nextflow.config:14).
-QC_STATE = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_viol", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("finished_at", T.TimestampType(), False),
-    ]
-)
-
+# ---- verdict statuses ------------------------------------------------------
 PASS = "PASS"
 FAIL = "FAIL"
 UNKNOWN = "UNKNOWN"
