@@ -1,9 +1,10 @@
-"""Oracle harness: engine checks as (spark, sf_dir) queries + DuckDB SQL.
+"""Oracle harness of the corpusops sequence operators: (spark, sf_dir)
+queries + DuckDB SQL, registered in corpusops/surface.py.
 
-The driver's correctness gate runs each query in Spark AND its ANSI-SQL
-twin in DuckDB over the same parquet, comparing row counts, schemas and
-order-insensitive value hashes. To make the *engine's own gates* (not
-just TPC-H lookalikes) oracle-checkable, this module derives a
+tests/test_entry.py runs each query in Spark AND its ANSI-SQL twin in
+DuckDB over the same parquet, comparing row counts, schemas and
+order-insensitive value hashes. To make the operators oracle-checkable
+on a real tokens array column, this module derives a
 `sequences(doc_id, tokens, n_tok, source)` table **deterministically from
 the `orders` table with pure SQL arithmetic** — the same modular
 planting rules as tokenqc.synth, keyed on a dense row number — so DuckDB
@@ -30,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tokenqc.checks import base as cb
-from tokenqc.checks import completeness, format as format_check, referential, structural
 
 N_PART = 16
 CFG = cb.CheckConfig(n_partitions=N_PART)
@@ -144,250 +144,9 @@ WITH base AS (
 )
 """
 
-# per-facet violation predicates in portable SQL (sz stands in for
-# size(tokens): NULL sz == NULL tokens, 0 == empty)
-_FACET_SQL = {
-    ("completeness", "null_doc_id"): "doc_id IS NULL",
-    ("completeness", "null_tokens"): "sz IS NULL",
-    ("completeness", "empty_tokens"): "sz = 0",
-    ("completeness", "null_n_tok"): "n_tok IS NULL",
-    ("completeness", "null_source"): "source IS NULL",
-    ("structural", "ntok_mismatch"): "sz IS NOT NULL AND n_tok IS NOT NULL AND n_tok <> sz",
-    ("format", "bad_doc_id"): "doc_id IS NOT NULL AND NOT regexp_matches(doc_id, '^doc-[0-9]{8}$')",
-    ("referential", "unknown_source"): "source IS NOT NULL AND source NOT IN ('web','books','code','wiki')",
-}
-
-
-def _facet_count_sql() -> str:
-    """UNION ALL of per-check violation counts per partition."""
-    checks: dict[str, list[str]] = {}
-    for (check, _facet), pred in _FACET_SQL.items():
-        checks.setdefault(check, []).append(pred)
-    parts = [
-        f"SELECT partition_id, '{check}' AS check_name, "
-        + "CAST(" + " + ".join(f"sum(CASE WHEN {p} THEN 1 ELSE 0 END)" for p in preds)
-        + " AS BIGINT) AS n_viol FROM seq GROUP BY partition_id"
-        for check, preds in sorted(checks.items())
-    ]
-    return SEQ_CTE + " UNION ALL ".join(parts)
-
-
-def _spark_row_facets(df: DataFrame, allowed: DataFrame) -> tuple[DataFrame, list[cb.Facet]]:
-    df = referential.attach(df, allowed)
-    facets = (
-        completeness.facets(CFG)
-        + structural.facets(CFG)
-        + format_check.facets(CFG)
-        + referential.facets(CFG)
-    )
-    return df, facets
-
-
-def _allowed_sources_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(s, True) for s in ["web", "books", "code", "wiki"]], "source string, active boolean"
-    )
-
-
 # ---------------------------------------------------------------------------
 # queries (engine side) + oracle SQL, in registration order
 # ---------------------------------------------------------------------------
-def q_seq_violation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(partition, check) violation counts from the fused row-level pass."""
-    seq = derive_sequences(spark, sf_dir)
-    df, facets = _spark_row_facets(seq, _allowed_sources_df(spark))
-    viol = cb.assemble_violations(df, facets)
-    return viol.groupBy("partition_id", "check_name").agg(
-        F.count(F.lit(1)).alias("n_viol")
-    )
-
-
-def oracle_seq_violation_counts() -> str:
-    # DuckDB side counts only partitions that HAVE violations; align by
-    # filtering zero rows (Spark's explode drops clean partitions too).
-    return (
-        "SELECT partition_id, check_name, n_viol FROM ("
-        + _facet_count_sql()
-        + ") t WHERE n_viol > 0"
-    )
-
-
-def q_seq_format_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact (partition_id, doc_id) rows flagged by the format gate."""
-    seq = derive_sequences(spark, sf_dir)
-    f = format_check.facets(CFG)[0]
-    return seq.where(f.cond).select("partition_id", "doc_id")
-
-
-def oracle_seq_format_violations() -> str:
-    return SEQ_CTE + (
-        "SELECT partition_id, doc_id FROM seq "
-        "WHERE doc_id IS NOT NULL AND NOT regexp_matches(doc_id, '^doc-[0-9]{8}$')"
-    )
-
-
-def q_seq_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate doc_id keys (engine's shuffle-heavy gate), key-level."""
-    from tokenqc.checks import uniqueness
-
-    seq = derive_sequences(spark, sf_dir)
-    return uniqueness.violations(seq, CFG).select("doc_id", "observed")
-
-
-def oracle_seq_uniqueness() -> str:
-    return SEQ_CTE + (
-        "SELECT doc_id, 'count=' || CAST(count(*) AS VARCHAR) AS observed "
-        "FROM seq WHERE doc_id IS NOT NULL GROUP BY doc_id HAVING count(*) > 1"
-    )
-
-
-def q_seq_dup_surplus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate-only duplicate consumer form (uniqueness.enumerate_counts,
-    r5): per dup key the exact surplus-row total, computed without ever
-    shuffling the table by key — at 10^12 rows the enumerated listing is
-    itself terabytes; this is the bounded contract reports join against."""
-    from tokenqc.checks import uniqueness
-
-    seq = derive_sequences(spark, sf_dir)
-    return (
-        uniqueness.enumerate_counts(seq, CFG)
-        .groupBy("doc_id")
-        .agg(F.sum("n_surplus").cast("long").alias("n_surplus"))
-    )
-
-
-def q_seq_dup_rows_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level dup listing through the adaptive dispatcher
-    (uniqueness.enumerate_rows_auto, r5): the sampled probe picks the
-    formulation, and the emitted multiset must match the window form's
-    exactly — verified per key against the closed-form surplus count."""
-    from tokenqc.checks import uniqueness
-
-    seq = derive_sequences(spark, sf_dir)
-    return (
-        uniqueness.enumerate_rows_auto(seq, CFG)
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_surplus"))
-    )
-
-
-def oracle_seq_dup_surplus() -> str:
-    return SEQ_CTE + (
-        "SELECT doc_id, count(*) - 1 AS n_surplus "
-        "FROM seq WHERE doc_id IS NOT NULL GROUP BY doc_id HAVING count(*) > 1"
-    )
-
-
-def q_seq_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rogue-source rows via broadcast left-anti semantics, per partition."""
-    seq = derive_sequences(spark, sf_dir)
-    df, _ = _spark_row_facets(seq, _allowed_sources_df(spark))
-    bad = df.where(referential.facets(CFG)[0].cond)
-    return bad.groupBy("partition_id", "source").agg(F.count(F.lit(1)).alias("n_viol"))
-
-
-def oracle_seq_referential() -> str:
-    return SEQ_CTE + (
-        "SELECT partition_id, source, count(*) AS n_viol FROM seq "
-        "WHERE source IS NOT NULL AND source NOT IN ('web','books','code','wiki') "
-        "GROUP BY partition_id, source"
-    )
-
-
-def q_seq_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: per-(partition, check) PASS/FAIL verdicts at threshold 0,
-    every (partition × row-level check) present — the engine's status row
-    (ProcessRepo.nf:85 analogue)."""
-    seq = derive_sequences(spark, sf_dir)
-    df, facets = _spark_row_facets(seq, _allowed_sources_df(spark))
-    aggs = []
-    checks = sorted({f.check for f in facets})
-    for check in checks:
-        conds = [f.cond for f in facets if f.check == check]
-        any_c = conds[0]
-        for c in conds[1:]:
-            any_c = any_c | c
-        aggs.append(F.sum(any_c.cast("long")).alias(check))
-    counts = df.groupBy("partition_id").agg(F.count(F.lit(1)).alias("n_rows"), *aggs)
-    long = counts.select(
-        "partition_id",
-        "n_rows",
-        F.explode(
-            F.map_from_arrays(
-                F.array(*[F.lit(c) for c in checks]),
-                F.array(*[F.col(c) for c in checks]),
-            )
-        ).alias("check_name", "n_viol"),
-    )
-    return long.select(
-        "partition_id",
-        "check_name",
-        F.col("n_viol").cast("long").alias("n_viol"),
-        F.when(F.col("n_viol") == 0, F.lit("PASS")).otherwise(F.lit("FAIL")).alias("status"),
-    )
-
-
-def oracle_seq_verdicts() -> str:
-    # count rows where ANY facet of the check fires (a row with two null
-    # fields is one violating row for completeness, not two)
-    checks: dict[str, list[str]] = {}
-    for (check, _facet), pred in _FACET_SQL.items():
-        checks.setdefault(check, []).append(pred)
-    parts = [
-        f"SELECT partition_id, '{check}' AS check_name, "
-        + "CAST(sum(CASE WHEN " + " OR ".join(f"({p})" for p in preds)
-        + " THEN 1 ELSE 0 END) AS BIGINT) AS n_viol FROM seq GROUP BY partition_id"
-        for check, preds in sorted(checks.items())
-    ]
-    return (
-        SEQ_CTE
-        + "SELECT partition_id, check_name, n_viol, "
-        + "CASE WHEN n_viol = 0 THEN 'PASS' ELSE 'FAIL' END AS status FROM ("
-        + " UNION ALL ".join(parts)
-        + ") t"
-    )
-
-
-def q_seq_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-array-equality invariant: engine join vs closed-form oracle."""
-    from tokenqc.checks import invariant
-
-    seq = derive_sequences(spark, sf_dir, with_ref=True)
-    # drop duplicated ids from the reference side (unique-by-key contract)
-    ref = (
-        seq.where(F.col("doc_id").isNotNull())
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("c"), F.first("tokens_ref").alias("tokens_ref"))
-        .where(F.col("c") == 1)
-        .select("doc_id", "tokens_ref")
-    )
-    return invariant.violations(seq, ref, CFG).select("doc_id")
-
-
-def oracle_seq_invariant() -> str:
-    # mismatches = perturbation rule rows with nonempty tokens, excluding
-    # doc_ids that appear more than once (dropped from the reference side)
-    return SEQ_CTE + (
-        "SELECT doc_id FROM seq WHERE rn % 503 = 9 AND sz IS NOT NULL AND sz > 0 "
-        "AND doc_id IS NOT NULL "
-        "AND doc_id IN (SELECT doc_id FROM seq WHERE doc_id IS NOT NULL "
-        "GROUP BY doc_id HAVING count(*) = 1)"
-    )
-
-
-def q_seq_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source n_tok bucket histogram (drift's distributed reduction)."""
-    from tokenqc.checks import drift
-
-    seq = derive_sequences(spark, sf_dir)
-    return drift.observed_histogram(seq, CFG).withColumnRenamed("cnt", "cnt")
-
-
-def oracle_seq_histogram() -> str:
-    return SEQ_CTE + (
-        "SELECT source, CAST(floor(n_tok / 64) AS INTEGER) AS bucket, count(*) AS cnt "
-        "FROM seq WHERE source IS NOT NULL AND n_tok > 0 GROUP BY source, bucket"
-    )
 
 
 def q_seq_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,41 +180,6 @@ def oracle_seq_stats() -> str:
         "count(DISTINCT doc_id) AS distinct_doc_id, "
         "CAST(sum(n_tok) AS BIGINT) AS total_tokens "
         "FROM seq GROUP BY source"
-    )
-
-
-def q_seq_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Score roll-up per partition (analyze_joss.py:505-508 semantics)."""
-    from tokenqc.checks import scoring
-
-    verd = q_seq_verdicts(spark, sf_dir)
-    counts = verd.join(
-        derive_sequences(spark, sf_dir).groupBy("partition_id").agg(F.count(F.lit(1)).alias("n_rows")),
-        on="partition_id",
-    ).select("partition_id", "check_name", "n_rows", "n_viol")
-    return scoring.partition_report(counts)
-
-
-def oracle_seq_scores() -> str:
-    checks: dict[str, list[str]] = {}
-    for (check, _facet), pred in _FACET_SQL.items():
-        checks.setdefault(check, []).append(pred)
-    union = " UNION ALL ".join(
-        f"SELECT partition_id, '{check}' AS check_name, "
-        + "CAST(sum(CASE WHEN " + " OR ".join(f"({p})" for p in preds)
-        + " THEN 1 ELSE 0 END) AS BIGINT) AS n_viol FROM seq GROUP BY partition_id"
-        for check, preds in sorted(checks.items())
-    )
-    return SEQ_CTE + (
-        ", verd AS (" + union + "), "
-        "tot AS (SELECT partition_id, count(*) AS n_rows FROM seq GROUP BY partition_id), "
-        "graded AS (SELECT v.partition_id, "
-        "CASE WHEN (1.0 - CAST(v.n_viol AS DOUBLE)/t.n_rows) >= 0.9 THEN 1.0 "
-        "     WHEN (1.0 - CAST(v.n_viol AS DOUBLE)/t.n_rows) >= 0.7 THEN 0.5 "
-        "     ELSE 0.0 END AS score "
-        "FROM verd v JOIN tot t ON v.partition_id = t.partition_id) "
-        "SELECT partition_id, count(*) AS n_checks, sum(score) AS total_score, "
-        "sum(score)/count(*) AS overall_score FROM graded GROUP BY partition_id"
     )
 
 
@@ -517,205 +241,8 @@ def oracle_seq_heavy_hitters() -> str:
     )
 
 
-def q_seq_drift_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL drift gate — observed histograms, driver-side chi2/KS
-    p-values, threshold decision — reduced to its deterministic output
-    (source, status, n_rows) so DuckDB can oracle it: web as its own
-    baseline must PASS, far-off sources FAIL, thin sources UNKNOWN."""
-    from tokenqc.checks import drift
-
-    seq = derive_sequences(spark, sf_dir)
-    hist = drift.observed_histogram(seq, CFG)
-    total = hist.where("source = 'web'").groupBy().sum("cnt").first()[0]
-    base = hist.where("source = 'web'").selectExpr(
-        "bucket", f"cnt / {total} as p"
-    )
-    srcs = seq.where("source is not null").select("source").distinct()
-    base_all = srcs.crossJoin(base)
-    return drift.verdicts(seq, base_all, CFG).select("source", "status", "n_rows")
-
-
-def _chi2_critical(alpha: float, dof: int) -> float:
-    """Inverse of drift.chi2_sf by bisection — the FAIL boundary
-    chi2_p < alpha becomes the SQL-expressible chi2 > critical."""
-    from tokenqc.checks.drift import chi2_sf
-
-    lo, hi = 0.0, 10.0
-    while chi2_sf(hi, dof) > alpha:
-        hi *= 2
-    for _ in range(200):
-        mid = (lo + hi) / 2
-        if chi2_sf(mid, dof) > alpha:
-            lo = mid
-        else:
-            hi = mid
-    return (lo + hi) / 2
-
-
-def _ks_lambda_critical(alpha: float) -> float:
-    """Solve Q_KS(lam) = alpha: ks_p < alpha ⟺ lam > this constant."""
-    from tokenqc.checks.drift import ks_pvalue
-
-    # ks_pvalue(d, n) = Q((sqrt(n)+.12+.11/sqrt(n))*d); invert on lam by
-    # evaluating at n=1, d=lam/(1+0.12+0.11)
-    def q(lam: float) -> float:
-        return ks_pvalue(lam / (1.0 + 0.12 + 0.11), 1.0)
-
-    lo, hi = 0.3, 5.0
-    for _ in range(200):
-        mid = (lo + hi) / 2
-        if q(mid) > alpha:
-            lo = mid
-        else:
-            hi = mid
-    return (lo + hi) / 2
-
-
-def oracle_seq_drift_verdicts() -> str:
-    """Status oracle for the full drift gate: replicates
-    drift.drift_stats_pdf's chi-square (over the baseline support, obs
-    filled 0), binned-KS D with the finite-n lambda correction, and
-    out-of-support mass — with the p-value thresholds precomputed as
-    critical values (chi2 per dof, one KS lambda constant)."""
-    alpha, min_rows, out_max = (
-        float(CFG.drift_alpha),
-        int(CFG.min_drift_rows),
-        float(CFG.drift_out_frac_max),
-    )
-    crit_rows = ", ".join(
-        f"({d}, {_chi2_critical(alpha, d):.10f})" for d in range(1, 129)
-    )
-    lam_crit = _ks_lambda_critical(alpha)
-    return SEQ_CTE + (
-        ", hist AS (SELECT source, CAST(floor(n_tok/64) AS INTEGER) AS bucket, "
-        "    CAST(count(*) AS DOUBLE) AS cnt FROM seq "
-        "    WHERE source IS NOT NULL AND n_tok > 0 GROUP BY 1, 2), "
-        "wb AS (SELECT bucket, cnt FROM hist WHERE source = 'web'), "
-        "grid AS (SELECT s.source, w.bucket, w.cnt / (SELECT sum(cnt) FROM wb) AS p "
-        "    FROM (SELECT DISTINCT source FROM seq WHERE source IS NOT NULL) s "
-        "    CROSS JOIN wb w), "
-        "j AS (SELECT g.source, g.bucket, g.p, coalesce(h.cnt, 0) AS obs "
-        "    FROM grid g LEFT JOIN hist h ON h.source = g.source AND h.bucket = g.bucket), "
-        "tot AS (SELECT source, sum(cnt) AS n FROM hist GROUP BY source), "
-        "nin AS (SELECT source, sum(obs) AS n_in, count(*) - 1 AS dof FROM j GROUP BY source), "
-        "chi AS (SELECT j.source, "
-        "    sum(pow(j.obs - nin.n_in * j.p, 2) / (nin.n_in * j.p)) AS chi2 "
-        "    FROM j JOIN nin USING(source) GROUP BY j.source), "
-        "cum AS (SELECT source, bucket, "
-        "    sum(obs) OVER (PARTITION BY source ORDER BY bucket) AS cobs, "
-        "    sum(p) OVER (PARTITION BY source ORDER BY bucket) AS cp "
-        "    FROM j), "
-        "ks AS (SELECT c.source, max(abs(c.cobs / nin.n_in - c.cp)) AS ks_d "
-        "    FROM cum c JOIN nin USING(source) GROUP BY c.source), "
-        f"crit(dof, cv) AS (VALUES {crit_rows}), "
-        "fin AS (SELECT t.source, t.n, nin.n_in, chi.chi2, ks.ks_d, "
-        "    (t.n - nin.n_in) / t.n AS out_frac, crit.cv "
-        "    FROM tot t JOIN nin USING(source) JOIN chi USING(source) "
-        "    JOIN ks USING(source) JOIN crit ON crit.dof = nin.dof) "
-        "SELECT source, "
-        f"CASE WHEN n < {min_rows} THEN 'UNKNOWN' "
-        f"     WHEN chi2 > cv "
-        f"       OR (sqrt(n_in) + 0.12 + 0.11 / sqrt(n_in)) * ks_d > {lam_crit:.10f} "
-        f"       OR out_frac > {out_max} THEN 'FAIL' "
-        "      ELSE 'PASS' END AS status, "
-        "CAST(n AS BIGINT) AS n_rows FROM fin"
-    )
-
-
-def q_seq_drift_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drift statistics per source vs a baseline derived in-SQL: the
-    baseline histogram is the observed histogram of the *web* source
-    (scaled to probabilities) applied to every source — so web must match
-    itself (chi2 ~ 0) and other sources show their true distance. The
-    chi-square/KS arithmetic here mirrors drift.drift_stats_pdf on the
-    support of the baseline; rounded to 4 decimals for cross-engine float
-    stability."""
-    from tokenqc.checks import drift
-
-    seq = derive_sequences(spark, sf_dir)
-    hist = drift.observed_histogram(seq, CFG)
-    base = (
-        hist.where(F.col("source") == "web")
-        .select("bucket", F.col("cnt").alias("bc"))
-    )
-    tot = base.agg(F.sum("bc").alias("bt")).crossJoin(
-        hist.groupBy("source").agg(F.sum("cnt").alias("n"))
-    )
-    j = (
-        hist.join(base, on="bucket", how="inner")  # support of baseline only
-        .join(tot, on="source")
-        .withColumn("e", F.col("n") * F.col("bc") / F.col("bt"))
-    )
-    return (
-        j.groupBy("source")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_in"),
-            F.round(F.sum((F.col("cnt") - F.col("e")) ** 2 / F.col("e")), 4).alias("chi2"),
-        )
-    )
-
-
-def oracle_seq_drift_stats() -> str:
-    return SEQ_CTE + (
-        ", hist AS (SELECT source, CAST(floor(n_tok/64) AS INTEGER) AS bucket, count(*) AS cnt "
-        "  FROM seq WHERE source IS NOT NULL AND n_tok > 0 GROUP BY source, bucket), "
-        "bhist AS (SELECT bucket, cnt AS bc FROM hist WHERE source = 'web'), "
-        "tot AS (SELECT h.source, sum(h.cnt) AS n, (SELECT sum(bc) FROM bhist) AS bt "
-        "  FROM hist h GROUP BY h.source) "
-        "SELECT h.source, CAST(sum(h.cnt) AS BIGINT) AS n_in, "
-        "round(sum(pow(h.cnt - t.n * b.bc / t.bt, 2) / (t.n * b.bc / t.bt)), 4) AS chi2 "
-        "FROM hist h JOIN bhist b ON h.bucket = b.bucket JOIN tot t ON h.source = t.source "
-        "GROUP BY h.source"
-    )
-
-
-def q_seq_drift_js(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JS-divergence drift gate (the information-theoretic twin of the
-    chi2/KS verdicts): baseline = web's own histogram as probabilities,
-    applied to every source. web must measure exactly 0; the off-shape
-    spam9 source (0.013 bits) FAILs at the 0.001 threshold while the
-    near-identical books/code/wiki (~5e-05) PASS — so both the statistic
-    and the verdict logic carry real variance. Entirely JVM-side: no
-    pandas, one full-outer join of two aggregated histograms."""
-    from tokenqc.checks import drift
-
-    seq = derive_sequences(spark, sf_dir)
-    hist = drift.observed_histogram(seq, CFG)
-    web = hist.where(F.col("source") == "web").select("bucket", "cnt")
-    wtot = web.agg(F.sum("cnt").alias("bt"))
-    base = (
-        hist.select("source").distinct()
-        .crossJoin(web.crossJoin(wtot).select("bucket", (F.col("cnt") / F.col("bt")).alias("p")))
-    )
-    return drift.js_divergence(seq, base, CFG, js_max=0.001)
-
-
-def oracle_seq_drift_js() -> str:
-    return SEQ_CTE + (
-        ", hist AS (SELECT source, CAST(floor(n_tok/64) AS INTEGER) AS bucket, count(*) AS cnt "
-        "  FROM seq WHERE source IS NOT NULL AND n_tok > 0 GROUP BY source, bucket), "
-        "wt AS (SELECT sum(cnt) AS bt FROM hist WHERE source = 'web'), "
-        "jsbase AS (SELECT s.source, h.bucket, h.cnt * 1.0 / (SELECT bt FROM wt) AS p "
-        "  FROM (SELECT DISTINCT source FROM hist) s, "
-        "       (SELECT bucket, cnt FROM hist WHERE source = 'web') h), "
-        "tot AS (SELECT source, sum(cnt) AS n FROM hist GROUP BY source), "
-        "obs AS (SELECT h.source, h.bucket, h.cnt * 1.0 / t.n AS q, t.n AS n "
-        "  FROM hist h JOIN tot t USING (source)), "
-        "j AS (SELECT coalesce(o.source, b.source) AS source, coalesce(o.q, 0) AS q, "
-        "             coalesce(b.p, 0) AS p, o.n AS n "
-        "  FROM obs o FULL OUTER JOIN jsbase b ON o.source = b.source AND o.bucket = b.bucket) "
-        "SELECT source, CAST(coalesce(max(n), 0) AS BIGINT) AS n_rows, "
-        "round(0.5*sum(CASE WHEN q > 0 THEN q*log2(2*q/(p+q)) ELSE 0 END) "
-        "    + 0.5*sum(CASE WHEN p > 0 THEN p*log2(2*p/(p+q)) ELSE 0 END), 6) AS js_divergence, "
-        "CASE WHEN round(0.5*sum(CASE WHEN q > 0 THEN q*log2(2*q/(p+q)) ELSE 0 END) "
-        "    + 0.5*sum(CASE WHEN p > 0 THEN p*log2(2*p/(p+q)) ELSE 0 END), 6) > 0.001 "
-        "     THEN 'FAIL' ELSE 'PASS' END AS status "
-        "FROM j GROUP BY source"
-    )
-
-
 def q_seq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index drift gate (drift.psi_from_histograms,
+    """Population Stability Index drift gate (checks.psi_from_histograms,
     warn=0.05 / fail=0.5): baseline = web's histogram applied to every
     source except code (withheld -> UNKNOWN). books is planted with a
     +512 n_tok shift, pushing its whole histogram 8 buckets off the
@@ -724,6 +251,7 @@ def q_seq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     [0.05, 0.5) -> WARN, wiki tracks web -> PASS — all four statuses
     from one plant. The gate grades on the 6-decimal-rounded statistic,
     so Spark and DuckDB verdicts agree exactly at any scale."""
+    from corpusops import checks
     from tokenqc.checks import drift
 
     seq = derive_sequences(spark, sf_dir)
@@ -745,7 +273,7 @@ def q_seq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return drift.psi_from_histograms(hist, base, psi_warn=0.05, psi_fail=0.5)
+    return checks.psi_from_histograms(hist, base, psi_warn=0.05, psi_fail=0.5)
 
 
 def oracle_seq_drift_psi() -> str:
@@ -775,71 +303,6 @@ def oracle_seq_drift_psi() -> str:
         f"     WHEN round({psi}, 6) >= 0.5 THEN 'FAIL' "
         f"     WHEN round({psi}, 6) >= 0.05 THEN 'WARN' "
         "     ELSE 'PASS' END AS status "
-        "FROM j GROUP BY source"
-    )
-
-
-def q_seq_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TOKEN-unigram drift gate (drift.token_histogram +
-    js_from_histograms): JS divergence per source between token-id
-    residue distributions and a web-derived baseline — drift over what
-    the sequences CONTAIN, where seq_drift_js drifts over how long they
-    are. spam9's token stream is planted parity-degenerate (every id
-    forced even, a collapsed-decoder artifact), so its residue histogram
-    puts zero mass on odd buckets and must FAIL; books/wiki track web's
-    residue shape and PASS; code is withheld from the baseline and must
-    grade UNKNOWN. n_rows counts tokens (the histogram's unit)."""
-    from tokenqc.checks import drift
-
-    seq = derive_sequences(spark, sf_dir)
-    planted = seq.withColumn(
-        "tokens",
-        F.when(
-            F.col("source") == "spam9",
-            F.transform(F.col("tokens"), lambda t: t - F.pmod(t, F.lit(2))),
-        ).otherwise(F.col("tokens")),
-    )
-    hist = drift.token_histogram(planted, n_buckets=64)
-    web = hist.where(F.col("source") == "web").select("bucket", "cnt")
-    wtot = web.agg(F.sum("cnt").alias("bt"))
-    base = (
-        hist.select("source").distinct()
-        .where(F.col("source") != "code")
-        .crossJoin(
-            web.crossJoin(wtot).select(
-                "bucket", (F.col("cnt") / F.col("bt")).alias("p")
-            )
-        )
-    )
-    return drift.js_from_histograms(hist, base, js_max=0.01)
-
-
-def oracle_seq_token_drift() -> str:
-    return SEQ_CTE + (
-        ", tk AS (SELECT source, CAST((u * 31 + rn) % 50257 AS INTEGER) AS tok0 "
-        "  FROM (SELECT rn, source, unnest(range(1, CAST(sz AS BIGINT) + 1)) AS u "
-        "        FROM seq WHERE source IS NOT NULL AND sz IS NOT NULL AND sz > 0)), "
-        "tok AS (SELECT source, "
-        "  CASE WHEN source = 'spam9' THEN tok0 - (tok0 % 2) ELSE tok0 END AS tok FROM tk), "
-        "hist AS (SELECT source, CAST(tok % 64 AS INTEGER) AS bucket, count(*) AS cnt "
-        "  FROM tok GROUP BY 1, 2), "
-        "wt AS (SELECT sum(cnt) AS bt FROM hist WHERE source = 'web'), "
-        "jsbase AS (SELECT s.source, h.bucket, h.cnt * 1.0 / (SELECT bt FROM wt) AS p "
-        "  FROM (SELECT DISTINCT source FROM hist WHERE source <> 'code') s, "
-        "       (SELECT bucket, cnt FROM hist WHERE source = 'web') h), "
-        "tot AS (SELECT source, sum(cnt) AS n FROM hist GROUP BY source), "
-        "obs AS (SELECT h.source, h.bucket, h.cnt * 1.0 / t.n AS q, t.n AS n "
-        "  FROM hist h JOIN tot t USING (source)), "
-        "j AS (SELECT coalesce(o.source, b.source) AS source, coalesce(o.q, 0) AS q, "
-        "             b.p AS pn, coalesce(b.p, 0) AS p, o.n AS n "
-        "  FROM obs o FULL OUTER JOIN jsbase b ON o.source = b.source AND o.bucket = b.bucket) "
-        "SELECT source, CAST(coalesce(max(n), 0) AS BIGINT) AS n_rows, "
-        "round(0.5*sum(CASE WHEN q > 0 THEN q*log2(2*q/(p+q)) ELSE 0 END) "
-        "    + 0.5*sum(CASE WHEN p > 0 THEN p*log2(2*p/(p+q)) ELSE 0 END), 6) AS js_divergence, "
-        "CASE WHEN max(CASE WHEN pn IS NOT NULL THEN 1 ELSE 0 END) = 0 THEN 'UNKNOWN' "
-        "     WHEN round(0.5*sum(CASE WHEN q > 0 THEN q*log2(2*q/(p+q)) ELSE 0 END) "
-        "    + 0.5*sum(CASE WHEN p > 0 THEN p*log2(2*p/(p+q)) ELSE 0 END), 6) > 0.01 "
-        "     THEN 'FAIL' ELSE 'PASS' END AS status "
         "FROM j GROUP BY source"
     )
 
@@ -879,259 +342,6 @@ def oracle_seq_token_contamination() -> str:
         "sum(CASE WHEN b.v IS NOT NULL THEN 1 ELSE 0 END) >= 1 AS contaminated "
         "FROM train t LEFT JOIN bench b ON t.v = b.v GROUP BY t.rn"
     )
-
-
-# ---------------------------------------------------------------------------
-# token-array lints (checks/tokens.py) — planted anomalies + oracle
-# ---------------------------------------------------------------------------
-# Lint parameters for the oracle query. The planting rules below are part
-# of the determinism contract: both engines compute the FINAL per-position
-# token value with the same priority-ordered CASE, so the oracle is an
-# exact independent simulation (it re-derives max-run with gaps-and-islands
-# SQL, not the engine's fold).
-TOKEN_VOCAB = 50000   # < generator modulus 50257 so planted ids are OOB
-TOKEN_BOS = 17
-TOKEN_EOS = 29
-TOKEN_MAX_RUN = 5
-
-# planting rules (rn-modular, like every other rule in this module):
-#   rn % 89 = 17 and sz >= 6 : positions 2..6 := (rn+62) % 50257  (5-run)
-#   rn % 101 = 47 and sz >= 2: position 2 := 50000 + rn % 257     (OOB)
-#   rn % 73 = 21 and sz >= 4 : position 3 := BOS                  (interior)
-#   rn % 79 = 23 and sz >= 5 : position 4 := EOS                  (interior)
-#   rn % 71 = 3              : position 1 := BOS      (LEGAL — must not flag)
-#   rn % 83 = 2              : position sz := EOS     (LEGAL — must not flag)
-
-
-def plant_token_anomalies(df: DataFrame) -> DataFrame:
-    """Apply the module-contract planting rules to the tokens array.
-
-    One JVM-side ``transform`` over the existing array — no shuffle, no
-    Python. Natural values can't trigger the lints at small rn (ids are
-    (x*31+rn) % 50257, so OOB/BOS/EOS hits need rn ≳ 19k and identical
-    neighbours never occur: consecutive ids differ by 31 mod 50257), so
-    planting is what makes the facets non-vacuous at test scale.
-
-    sz is recomputed from rn in closed form (the module contract) rather
-    than via ``F.size("tokens")``: the derived tokens column is an
-    expression, and Catalyst inlines it at every use site — a size() call
-    INSIDE the per-element lambda would rebuild the whole array per
-    element (O(n²) per row; measured minutes at sf0.001).
-    """
-    rn = F.col("rn")
-    sz = (
-        F.when(rn % 233 == 5, F.lit(None).cast("int"))
-        .when(rn % 239 == 6, F.lit(0))
-        .otherwise(((rn * 7919) % 997 + 1).cast("int"))
-    )
-    mod = F.lit(50257)
-
-    def val(t, i):
-        x = i + F.lit(1)  # 1-indexed position
-        return (
-            F.when((rn % 89 == 17) & (sz >= 6) & (x >= 2) & (x <= 6), (rn + 62) % mod)
-            .when((rn % 101 == 47) & (sz >= 2) & (x == 2), F.lit(TOKEN_VOCAB) + rn % 257)
-            .when((rn % 73 == 21) & (sz >= 4) & (x == 3), F.lit(TOKEN_BOS))
-            .when((rn % 79 == 23) & (sz >= 5) & (x == 4), F.lit(TOKEN_EOS))
-            .when((x == 1) & (rn % 71 == 3), F.lit(TOKEN_BOS))
-            .when((x == sz) & (rn % 83 == 2), F.lit(TOKEN_EOS))
-            .otherwise(t)
-            .cast("int")
-        )
-
-    return df.withColumn("tokens", F.transform("tokens", val))
-
-
-def q_seq_token_lints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-array lint violations (checks/tokens.py): id domain, special-
-    token layout, degenerate runs — the payload-domain gates the reference
-    applies to each tool's fields (/root/reference/main.nf:62-66, bin/analyze_joss.py:199-266)
-    re-expressed over a pre-tokenized corpus. All four facets ride the
-    single narrow scan (higher-order array functions, zero Python)."""
-    from tokenqc.checks import tokens as token_lints
-
-    seq = plant_token_anomalies(derive_sequences(spark, sf_dir))
-    cfg = cb.CheckConfig(
-        n_partitions=N_PART,
-        vocab_size=TOKEN_VOCAB,
-        bos_id=TOKEN_BOS,
-        eos_id=TOKEN_EOS,
-        max_token_run=TOKEN_MAX_RUN,
-    )
-    return cb.assemble_violations(seq, token_lints.facets(cfg))
-
-
-def oracle_seq_token_lints() -> str:
-    """Independent DuckDB simulation: per-position values via
-    generate_series + the contract CASE, max-run via gaps-and-islands."""
-    return SEQ_CTE + """
-, pos AS (
-  SELECT rn, partition_id, doc_id, sz,
-    unnest(generate_series(1, CAST(sz AS BIGINT))) AS x
-  FROM seq WHERE sz IS NOT NULL AND sz >= 1
-), toks AS (
-  SELECT rn, partition_id, doc_id, sz, x,
-    CAST(CASE
-      WHEN rn % 89 = 17 AND sz >= 6 AND x BETWEEN 2 AND 6 THEN (rn + 62) % 50257
-      WHEN rn % 101 = 47 AND sz >= 2 AND x = 2 THEN 50000 + rn % 257
-      WHEN rn % 73 = 21 AND sz >= 4 AND x = 3 THEN 17
-      WHEN rn % 79 = 23 AND sz >= 5 AND x = 4 THEN 29
-      WHEN x = 1 AND rn % 71 = 3 THEN 17
-      WHEN x = sz AND rn % 83 = 2 THEN 29
-      ELSE (x * 31 + rn) % 50257
-    END AS INTEGER) AS v
-  FROM pos
-), oob_bad AS (
-  SELECT rn, partition_id, doc_id, x, v,
-    row_number() OVER (PARTITION BY rn ORDER BY x) AS r,
-    count(*) OVER (PARTITION BY rn) AS n_bad
-  FROM toks WHERE v >= 50000
-), oob AS (
-  SELECT partition_id, doc_id,
-    'oob_token: ' || CAST(max(n_bad) AS VARCHAR) || '@' ||
-      string_agg(CAST(v AS VARCHAR), ',' ORDER BY x) AS observed,
-    'all tokens in [0, 50000)' AS expected
-  FROM oob_bad WHERE r <= 3 GROUP BY rn, partition_id, doc_id
-), bos AS (
-  SELECT partition_id, doc_id,
-    'bos_interior: ' || CAST(min(x) AS VARCHAR) AS observed,
-    'bos id 17 only at position 0' AS expected
-  FROM toks WHERE x >= 2 AND v = 17 GROUP BY rn, partition_id, doc_id
-), eos AS (
-  SELECT partition_id, doc_id,
-    'eos_interior: ' || CAST(min(x) AS VARCHAR) AS observed,
-    'eos id 29 only at final position' AS expected
-  FROM toks WHERE x <= sz - 1 AND v = 29 GROUP BY rn, partition_id, doc_id
-), islands AS (
-  SELECT rn, partition_id, doc_id, v,
-    x - row_number() OVER (PARTITION BY rn, v ORDER BY x) AS island
-  FROM toks
-), runlen AS (
-  SELECT rn, partition_id, doc_id, count(*) AS len
-  FROM islands GROUP BY rn, partition_id, doc_id, v, island
-), runmax AS (
-  SELECT rn, partition_id, doc_id, max(len) AS mr
-  FROM runlen GROUP BY rn, partition_id, doc_id
-), runs AS (
-  SELECT partition_id, doc_id,
-    'long_run: ' || CAST(mr AS VARCHAR) AS observed,
-    'max identical-token run < 5' AS expected
-  FROM runmax WHERE mr >= 5
-)
-SELECT partition_id, doc_id, 'tokens' AS check_name, observed, expected FROM oob
-UNION ALL SELECT partition_id, doc_id, 'tokens', observed, expected FROM bos
-UNION ALL SELECT partition_id, doc_id, 'tokens', observed, expected FROM eos
-UNION ALL SELECT partition_id, doc_id, 'tokens', observed, expected FROM runs
-"""
-
-
-def q_seq_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-sequence token unigram entropy gate (degeneracy.token_entropy):
-    the degenerate-text detector — planted rule rn % 97 = 11 collapses
-    the whole array to its first token (entropy 0, flagged), every
-    clean sequence has all-distinct tokens by the generator contract
-    (31*997 < 50257: no wraparound) so its entropy is ln(sz). The
-    oracle does NOT use that closed form — it re-derives per-position
-    values and counts independently (the token-lints pattern)."""
-    from tokenqc.checks import degeneracy
-
-    seq = derive_sequences(spark, sf_dir)
-    planted = seq.withColumn(
-        "tokens",
-        F.when(
-            (F.col("rn") % 97 == 11) & F.col("tokens").isNotNull() & (F.size("tokens") > 0),
-            F.array_repeat(F.element_at("tokens", 1), F.size("tokens")),
-        ).otherwise(F.col("tokens")),
-    )
-    return degeneracy.token_entropy(planted, id_col="rn")
-
-
-def oracle_seq_token_entropy() -> str:
-    """Independent DuckDB re-simulation: per-position values via
-    generate_series + the planting CASE, counts via GROUP BY."""
-    return SEQ_CTE + """
-, pos AS (
-  SELECT rn, sz, unnest(generate_series(1, CAST(sz AS BIGINT))) AS x
-  FROM seq WHERE sz IS NOT NULL AND sz >= 1
-), toks AS (
-  SELECT rn, sz,
-    CASE WHEN rn % 97 = 11 THEN (1 * 31 + rn) % 50257
-         ELSE (x * 31 + rn) % 50257 END AS v
-  FROM pos
-), cnt AS (
-  SELECT rn, sz, v, count(*) AS c FROM toks GROUP BY rn, sz, v
-), e AS (
-  SELECT rn, CAST(max(sz) AS INTEGER) AS n_tok,
-    CAST(count(*) AS INTEGER) AS n_distinct,
-    sum(-(c * 1.0 / sz) * ln(c * 1.0 / sz)) AS ent
-  FROM cnt GROUP BY rn
-)
-SELECT rn, n_tok, n_distinct, round(ent, 6) AS entropy,
-  round(n_distinct * 1.0 / n_tok, 6) AS distinct_ratio,
-  (round(ent, 6) < 1.5) AS low_entropy
-FROM e
-"""
-
-
-def q_seq_token_kgram_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-document duplicated k-gram fraction
-    (degeneracy.token_kgram_repetition, k=8): planted rule rn % 103 = 17
-    tiles the sequence with a period-4 cycle — unigram entropy stays
-    ln(4) (the entropy gate passes it at its default threshold region)
-    but every window repeats, so dup_kgram_frac → 1 and the row flags.
-    Clean sequences have all-distinct tokens by the generator contract,
-    hence all-distinct windows and frac 0. The oracle does NOT use
-    either closed form — it re-derives per-position values and counts
-    DISTINCT actual 8-token windows (no hashing at all), so the Spark
-    side's 64-bit window hash is independently certified."""
-    from tokenqc.checks import degeneracy
-
-    seq = derive_sequences(spark, sf_dir)
-    sz = F.size("tokens")
-    tiled = F.transform(
-        F.sequence(F.lit(1), sz),
-        lambda x: (((x - 1) % 4 + 1) * 31 + F.col("rn")) % 50257,
-    ).cast("array<int>")
-    planted = seq.withColumn(
-        "tokens",
-        F.when(
-            (F.col("rn") % 103 == 17) & F.col("tokens").isNotNull() & (sz > 0),
-            tiled,
-        ).otherwise(F.col("tokens")),
-    )
-    return degeneracy.token_kgram_repetition(planted, id_col="rn")
-
-
-def oracle_seq_token_kgram_rep() -> str:
-    """Independent DuckDB re-simulation: per-position values via
-    generate_series + the planting CASE, windows as actual list slices,
-    distinctness via count(DISTINCT list) — hash-free."""
-    return SEQ_CTE + """
-, pos AS (
-  SELECT rn, sz, unnest(generate_series(1, CAST(sz AS BIGINT))) AS x
-  FROM seq WHERE sz IS NOT NULL AND sz >= 8
-), toks AS (
-  SELECT rn, sz, x,
-    CASE WHEN rn % 103 = 17 THEN (((x - 1) % 4 + 1) * 31 + rn) % 50257
-         ELSE (x * 31 + rn) % 50257 END AS v
-  FROM pos
-), arrs AS (
-  SELECT rn, max(sz) AS sz, list(v ORDER BY x) AS toks FROM toks GROUP BY rn
-), wins AS (
-  SELECT rn, sz, toks[CAST(x AS INTEGER):CAST(x + 7 AS INTEGER)] AS kg
-  FROM arrs, LATERAL (
-    SELECT unnest(generate_series(1, CAST(sz - 7 AS BIGINT))) AS x
-  ) g
-), st AS (
-  SELECT rn, max(sz) AS sz, count(*) AS n_win, count(DISTINCT kg) AS n_dist
-  FROM wins GROUP BY rn
-)
-SELECT rn, CAST(sz AS INTEGER) AS n_tok, CAST(n_win AS INTEGER) AS n_kgrams,
-  CAST(n_dist AS INTEGER) AS n_distinct_kgrams,
-  round(1.0 - n_dist * 1.0 / n_win, 6) AS dup_kgram_frac,
-  (round(1.0 - n_dist * 1.0 / n_win, 6) > 0.2) AS repetitive
-FROM st
-"""
 
 
 def q_seq_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1249,127 +459,6 @@ SELECT s.rn, CAST(s.sz AS INTEGER) AS n_tok,
   coalesce(a.tokens_md5, md5('')) AS tokens_md5
 FROM seq s LEFT JOIN agg a USING (rn)
 WHERE s.rn % 3 = 0 AND s.sz IS NOT NULL
-"""
-
-
-def q_seq_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structural snapshot diff (checks/snapshot.table_diff) between two
-    deterministic versions of the sequences table, planted to hit every
-    verdict branch at sf0.001 and sf0.01:
-      - baseline drops every rn % 23 = 0 row and the whole *books*
-        source -> books is NEW_KEY, everything else grew ~4.3% (STABLE);
-      - baseline adds a relabeled *legacy* slice (rn % 29 = 0) absent
-        from current -> DROPPED_KEY;
-      - current drops 1/5 of *code* rows (> the 1/23 baseline trim) ->
-        SHRUNK;
-      - current double-ingests the *spam9* slice -> ~+109% -> GROWN;
-      - NULL sources ride under the __null__ sentinel key.
-    Only the key column is projected — the diff never touches tokens."""
-    from tokenqc.checks import snapshot
-
-    seq = derive_sequences(spark, sf_dir).select("rn", "source")
-    src = F.col("source")
-    cur = seq.where(
-        ~(src.isNotNull() & (src == "code") & (F.col("rn") % 5 == 0))
-    ).unionAll(seq.where(src.isNotNull() & (src == "spam9")))
-    base = seq.where(
-        (F.col("rn") % 23 != 0) & (src.isNull() | (src != "books"))
-    ).unionAll(
-        seq.where(F.col("rn") % 29 == 0).select("rn", F.lit("legacy").alias("source"))
-    )
-    return snapshot.table_diff(cur, base, key_col="source")
-
-
-def oracle_seq_snapshot_diff() -> str:
-    return SEQ_CTE + """
-, slim AS (SELECT rn, source FROM seq)
-, cur AS (
-  SELECT coalesce(source, '__null__') AS key FROM slim
-  WHERE NOT (source IS NOT NULL AND source = 'code' AND rn % 5 = 0)
-  UNION ALL
-  SELECT source AS key FROM slim WHERE source = 'spam9'
-), basex AS (
-  SELECT coalesce(source, '__null__') AS key FROM slim
-  WHERE rn % 23 <> 0 AND (source IS NULL OR source <> 'books')
-  UNION ALL
-  SELECT 'legacy' AS key FROM slim WHERE rn % 29 = 0
-), c AS (SELECT key, count(*) AS n_cur FROM cur GROUP BY key)
-, b AS (SELECT key, count(*) AS n_base FROM basex GROUP BY key)
-, j AS (
-  SELECT coalesce(c.key, b.key) AS key, n_cur, n_base,
-    coalesce(n_cur, 0) - coalesce(n_base, 0) AS delta
-  FROM c FULL OUTER JOIN b ON c.key = b.key
-), d AS (
-  SELECT key, n_cur, n_base, delta,
-    CASE WHEN n_base IS NOT NULL THEN delta * 1000000 // n_base END AS delta_ppm
-  FROM j
-)
-SELECT key, n_cur, n_base, CAST(delta AS BIGINT) AS delta,
-  CAST(delta_ppm AS BIGINT) AS delta_ppm,
-  CASE WHEN n_base IS NULL THEN 'NEW_KEY'
-       WHEN n_cur IS NULL THEN 'DROPPED_KEY'
-       WHEN delta < 0 THEN 'SHRUNK'
-       WHEN delta_ppm > 500000 THEN 'GROWN'
-       ELSE 'STABLE' END AS verdict
-FROM d
-"""
-
-
-def q_seq_row_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-granularity snapshot diff (checks/snapshot.row_diff) over
-    the SAME two planted snapshot versions as seq_snapshot_diff, with
-    rn as the row identity: books is all-added with NO baseline ->
-    churn_ppm NULL; legacy is all-removed -> churn exactly 10^6; code
-    churns both ways (1/5 removed, 1/23 added back); and spam9's
-    double-ingest — GROWN in table_diff — collapses under DISTINCT to
-    zero added rows here, pinning the complementarity of the two
-    diffs."""
-    from tokenqc.checks import snapshot
-
-    seq = derive_sequences(spark, sf_dir).select("rn", "source")
-    src = F.col("source")
-    cur = seq.where(
-        ~(src.isNotNull() & (src == "code") & (F.col("rn") % 5 == 0))
-    ).unionAll(seq.where(src.isNotNull() & (src == "spam9")))
-    base = seq.where(
-        (F.col("rn") % 23 != 0) & (src.isNull() | (src != "books"))
-    ).unionAll(
-        seq.where(F.col("rn") % 29 == 0).select("rn", F.lit("legacy").alias("source"))
-    )
-    return snapshot.row_diff(cur, base, digest_col="rn", key_col="source")
-
-
-def oracle_seq_row_diff() -> str:
-    return SEQ_CTE + """
-, slim AS (SELECT rn, source FROM seq)
-, cur AS (
-  SELECT DISTINCT key, rn FROM (
-    SELECT coalesce(source, '__null__') AS key, rn FROM slim
-    WHERE NOT (source IS NOT NULL AND source = 'code' AND rn % 5 = 0)
-    UNION ALL
-    SELECT source AS key, rn FROM slim WHERE source = 'spam9') u
-), basex AS (
-  SELECT DISTINCT key, rn FROM (
-    SELECT coalesce(source, '__null__') AS key, rn FROM slim
-    WHERE rn % 23 <> 0 AND (source IS NULL OR source <> 'books')
-    UNION ALL
-    SELECT 'legacy' AS key, rn FROM slim WHERE rn % 29 = 0) u
-), j AS (
-  SELECT coalesce(c.key, b.key) AS key,
-    CASE WHEN c.rn IS NOT NULL AND b.rn IS NULL THEN 1 ELSE 0 END AS a,
-    CASE WHEN b.rn IS NOT NULL AND c.rn IS NULL THEN 1 ELSE 0 END AS r,
-    CASE WHEN c.rn IS NOT NULL AND b.rn IS NOT NULL THEN 1 ELSE 0 END AS k
-  FROM cur c FULL OUTER JOIN basex b ON c.key = b.key AND c.rn = b.rn
-), agg AS (
-  SELECT key, CAST(sum(a) AS BIGINT) AS n_added,
-    CAST(sum(r) AS BIGINT) AS n_removed,
-    CAST(sum(k) AS BIGINT) AS n_common
-  FROM j GROUP BY key
-)
-SELECT key, n_added, n_removed, n_common,
-  CASE WHEN n_removed + n_common > 0
-       THEN (n_added + n_removed) * 1000000 // (n_removed + n_common) END AS churn_ppm
-FROM agg
 """
 
 
@@ -1627,13 +716,13 @@ SELECT rn, source, q FROM (
 
 
 def q_seq_ntok_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust length-outlier gate (stats.robust_outliers): planted rule
+    """Robust length-outlier gate (checks.robust_outliers): planted rule
     rn % 131 = 19 inflates n_tok to 50000 + rn % 7 — far outside the
     Tukey fence of the near-uniform 1..997 base (q3 + 3·IQR ≈ 2200) —
     while every natural row stays inside. The oracle re-derives the
     discrete quantiles, fences and membership with its own window
     cumulative walk."""
-    from tokenqc.checks import stats
+    from corpusops import checks
 
     seq = derive_sequences(spark, sf_dir)
     planted = seq.withColumn(
@@ -1642,7 +731,7 @@ def q_seq_ntok_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rn") % 131 == 19, (F.lit(50000) + F.col("rn") % 7).cast("int")
         ).otherwise(F.col("n_tok")),
     )
-    return stats.robust_outliers(planted, id_col="rn")
+    return checks.robust_outliers(planted, id_col="rn")
 
 
 def oracle_seq_ntok_outliers() -> str:

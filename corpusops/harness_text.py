@@ -1092,43 +1092,6 @@ def oracle_doc_contamination() -> str:
     )
 
 
-def q_top_violation_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 violation examples per check (window top-k for reports)."""
-    from corpusops import harness as H
-    from tokenqc.checks import base as cb
-
-    seq = H.derive_sequences(spark, sf_dir)
-    df, facets = H._spark_row_facets(seq, H._allowed_sources_df(spark))
-    viol = cb.assemble_violations(df, facets).where(F.col("doc_id").isNotNull())
-    w = Window.partitionBy("check_name").orderBy(F.desc("doc_id"))
-    return (
-        viol.select("check_name", "doc_id")
-        .distinct()
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("check_name", "doc_id", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-def oracle_top_violation_examples() -> str:
-    from corpusops.harness import SEQ_CTE, _FACET_SQL
-
-    preds = {}
-    for (check, _f), pred in _FACET_SQL.items():
-        preds.setdefault(check, []).append(pred)
-    union = " UNION ALL ".join(
-        f"SELECT DISTINCT '{check}' AS check_name, doc_id FROM seq "
-        + "WHERE doc_id IS NOT NULL AND (" + " OR ".join(f"({p})" for p in ps) + ")"
-        for check, ps in sorted(preds.items())
-    )
-    return SEQ_CTE + (
-        ", viol AS (" + union + ") "
-        "SELECT check_name, doc_id, CAST(row_number() OVER "
-        "(PARTITION BY check_name ORDER BY doc_id DESC) AS INTEGER) AS rk "
-        "FROM viol QUALIFY rk <= 3"
-    )
-
-
 # ---------------------------------------------------------------------------
 # round-3 additions: repetition filter, PII detect/scrub, sequence packing
 # ---------------------------------------------------------------------------
@@ -2111,7 +2074,7 @@ def oracle_embed_quantize() -> str:
 
 
 def q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-snapshot drift (drift.embedding_drift, z_max=3):
+    """Embedding-snapshot drift (checks.embedding_drift, z_max=3):
     current = the store with dimension 3 planted +0.5 (an embedding-
     model swap signature) and an appended 65th value for every 11th
     vector (a width change -> NEW_DIM); baseline = the unshifted store
@@ -2132,9 +2095,9 @@ def q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(shifted),
     )
     base = emb.where(F.pmod(F.col("vec_id"), F.lit(5)) != 4)
-    from tokenqc.checks import drift as drift_mod
+    from corpusops import checks
 
-    return drift_mod.embedding_drift(cur, base, z_max=3.0)
+    return checks.embedding_drift(cur, base, z_max=3.0)
 
 
 def oracle_embed_drift() -> str:

@@ -237,11 +237,12 @@ def streaming_drift(
 
     ``stat`` selects the grading formula over the SAME state: "js"
     (drift.js_from_histograms, binary gate at `js_max`) or "psi"
-    (drift.psi_from_histograms, graded PASS/WARN/FAIL at
+    (corpusops.checks.psi_from_histograms, graded PASS/WARN/FAIL at
     `psi_warn`/`psi_fail`) — both shared with the batch gates, so
     stream and batch verdicts stay definitionally identical per
     statistic.
     """
+    from corpusops import checks as co_checks
     from tokenqc.checks import drift as drift_mod
 
     if stat not in ("js", "psi"):
@@ -266,7 +267,7 @@ def streaming_drift(
             "source", F.posexplode("hist").alias("bucket", "cnt")
         ).where(F.col("cnt") > 0)
         if stat == "psi":
-            verdicts = drift_mod.psi_from_histograms(
+            verdicts = co_checks.psi_from_histograms(
                 hist, clamped_base, psi_warn, psi_fail
             )
         else:

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from tokenqc.checks import base as cb
 from tokenqc.checks import completeness, format as format_check, invariant, referential, structural, uniqueness
+from tokenqc.checks import degeneracy
 
 CFG = cb.CheckConfig(n_partitions=16)
 
@@ -223,29 +224,6 @@ def test_enumerate_rows_auto_dispatch(spark, tables):
     assert got == want and want["hot"] == 599
 
 
-def test_salted_distinct_count_exact_under_skew(spark):
-    """salted_distinct_count must equal the plain countDistinct on a
-    frame with one hot key carrying all-distinct values (the case that
-    defeats map-side partial aggregation), for any salt width."""
-    from pyspark.sql import functions as F
-
-    from tokenqc.skew import salted_distinct_count
-
-    rows = [("hot", i) for i in range(500)]  # 500 distinct values, one key
-    rows += [(f"k{i % 20}", i % 7) for i in range(200)]  # repeated values
-    df = spark.createDataFrame(rows, "doc_id string, v int")
-    want = {
-        r.doc_id: r.cnt
-        for r in df.groupBy("doc_id").agg(F.count_distinct("v").alias("cnt")).collect()
-    }
-    for n_salt in (2, 16, 64):
-        got = {
-            r.doc_id: r.cnt
-            for r in salted_distinct_count(df, "doc_id", F.col("v"), n_salt).collect()
-        }
-        assert got == want, f"n_salt={n_salt}"
-
-
 def test_invariant_exact(tables, seq_pa, expected):
     v = invariant.violations(tables["sequences"], tables["reference_tokens"], CFG)
     got = sorted(r.doc_id for r in v.select("doc_id").collect())
@@ -253,7 +231,6 @@ def test_invariant_exact(tables, seq_pa, expected):
     # exact-array mode agrees with the hash mode on this data
     v2 = invariant.violations(tables["sequences"], tables["reference_tokens"], CFG, exact=True)
     assert sorted(r.doc_id for r in v2.select("doc_id").collect()) == got
-
 
 
 def test_invariant_repeated_reference_doc_id(spark):
@@ -460,7 +437,7 @@ def test_degeneracy_fused_equals_two_standalone_passes(spark):
 
 
 def test_robust_outliers_discrete_fences(spark):
-    from tokenqc.checks import stats
+    from corpusops import checks as stats
 
     rows = [(i, "web", v) for i, v in enumerate([1, 2, 3, 4, 5, 6, 7, 8, 100])]
     rows += [(100, "books", 50), (101, "books", 51), (102, None, 999),
@@ -570,3 +547,62 @@ def test_row_diff_hand_computed(spark):
     assert (g["n_added"], g["n_removed"], g["n_common"]) == (0, 2, 0)
     assert g["churn_ppm"] == 1_000_000
     assert out["__null__"]["n_common"] == 1 and out["__null__"]["churn_ppm"] == 0
+
+
+# ---------------------------------------------------------------------------
+# token entropy gate
+# ---------------------------------------------------------------------------
+def test_token_entropy_flags_degenerate(spark):
+    import math
+
+    rows = [
+        (0, [5, 5, 5, 5]),          # degenerate: entropy 0
+        (1, [1, 2, 3, 4]),          # ln(4) ~ 1.386 < 1.5 -> flagged
+        (2, list(range(100))),      # ln(100) ~ 4.6 -> clean
+        (3, [1, 1, 2, 2]),          # ln(2)
+        (4, []),                    # excluded
+        (5, None),                  # excluded
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
+    out = {r.doc_id: r for r in degeneracy.token_entropy(df).collect()}
+    assert set(out) == {0, 1, 2, 3}
+    assert out[0].entropy == 0.0 and out[0].low_entropy and out[0].n_distinct == 1
+    assert out[1].entropy == round(math.log(4), 6) and out[1].low_entropy
+    assert out[2].entropy == round(math.log(100), 6) and not out[2].low_entropy
+    assert out[3].entropy == round(math.log(2), 6)
+    assert out[3].distinct_ratio == 0.5 and out[2].distinct_ratio == 1.0
+
+
+# ---------------------------------------------------------------------------
+# duplicated k-gram fraction (Gopher repetition rule over tokens)
+# ---------------------------------------------------------------------------
+def test_token_kgram_repetition_stats(spark):
+    rows = [
+        (0, list(range(20))),    # all distinct -> every window distinct
+        (1, [1, 2, 3, 4] * 10),  # period-4 tile: 33 windows, 4 distinct
+        (2, [7] * 12),           # constant: 5 windows, 1 distinct
+        (3, [1, 2, 3]),          # < k -> excluded (no window exists)
+        (4, None),               # excluded
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
+    out = {r.doc_id: r for r in degeneracy.token_kgram_repetition(df, k=8).collect()}
+    assert set(out) == {0, 1, 2}
+    assert out[0].dup_kgram_frac == 0.0 and not out[0].repetitive
+    assert out[0].n_kgrams == 13 and out[0].n_distinct_kgrams == 13
+    r1 = out[1]
+    assert r1.n_tok == 40 and r1.n_kgrams == 33 and r1.n_distinct_kgrams == 4
+    assert r1.dup_kgram_frac == round(1 - 4 / 33, 6) and r1.repetitive
+    r2 = out[2]
+    assert r2.n_kgrams == 5 and r2.n_distinct_kgrams == 1
+    assert r2.dup_kgram_frac == 0.8 and r2.repetitive
+
+
+def test_token_kgram_repetition_order_sensitive(spark):
+    # same multiset of windows' tokens, different order -> different
+    # window sets: the polynomial hash keeps positional sensitivity
+    rows = [(0, [1, 2, 3, 1, 2, 3]), (1, [3, 2, 1, 3, 2, 1])]
+    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
+    out = {r.doc_id: r for r in degeneracy.token_kgram_repetition(df, k=3).collect()}
+    # both tile with period 3: 4 windows, 3 distinct phases
+    assert out[0].n_distinct_kgrams == 3 and out[1].n_distinct_kgrams == 3
+    assert out[0].dup_kgram_frac == 0.25

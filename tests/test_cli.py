@@ -79,7 +79,6 @@ ENGINE_MODULES = sorted(
         "tokenqc/checks/referential.py",
         "tokenqc/checks/scoring.py",
         "tokenqc/checks/snapshot.py",
-        "tokenqc/checks/stats.py",
         "tokenqc/checks/structural.py",
         "tokenqc/checks/tokens.py",
         "tokenqc/checks/uniqueness.py",
@@ -349,3 +348,19 @@ def test_cli_prev_input_snapshot_diff(spark, synth_dir, tmp_path, capsys):
     with open(out3["report"]) as f:
         html = f.read()
     assert "Snapshot diff vs previous table version" in html
+
+
+def test_wrong_input_type_clean_error(spark, synth_dir, tmp_path, capsys):
+    """An input column of the wrong type is a user error: one
+    `tokenqc: error:` line naming the column, exit 2, no stack trace."""
+    from pyspark.sql import functions as F
+
+    bad = str(tmp_path / "bigint_tokens.parquet")
+    spark.read.parquet(f"{synth_dir}/sequences.parquet").withColumn(
+        "tokens", F.col("tokens").cast("array<bigint>")
+    ).write.parquet(bad)
+    rc = cli.main(["--input", bad, "--out", str(tmp_path / "out"), "--partitions", "4"])
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert "tokenqc: error: sequences.tokens: found array<bigint>, expected array<int>" in err
+    assert "Traceback" not in err

@@ -212,7 +212,7 @@ def test_psi_from_histograms_hand_computed(spark):
     """PSI math + graded statuses pinned by a numpy replay; eps clamp
     keeps disjoint-support finite; missing baseline -> UNKNOWN."""
     import math
-    from tokenqc.checks import drift
+    from corpusops import checks as drift
 
     hist = spark.createDataFrame(
         [("a", 0, 50), ("a", 1, 50),
@@ -249,7 +249,7 @@ def test_embedding_drift_hand_computed(spark):
     """Mean-shift z against a numpy replay; NEW_DIM/DROPPED_DIM on
     width changes; NaN/null/empty vectors excluded from both sides."""
     import numpy as np
-    from tokenqc.checks import drift
+    from corpusops import checks as drift
 
     rng = [[float(i), float(i % 3)] for i in range(10)]
     base = spark.createDataFrame(

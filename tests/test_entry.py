@@ -1,6 +1,9 @@
-"""Driver-contract checks: entry() smoke, every oracle-paired query
-matches DuckDB at sf0.001 (full sf0.01 parity is exercised by the driver
-and was verified manually at sf0.01), rows-only queries return rows."""
+"""Driver-contract checks: entry() smoke, the surface's shape (at most 50
+queries, every one oracle-paired and reaching the engine), and every
+query matching its DuckDB oracle at sf0.001 (sf0.01 parity is exercised
+by the driver). The corpusops operator queries (corpusops/surface.py),
+which are not part of the driver surface, keep their oracle parity
+checks here too."""
 
 from __future__ import annotations
 
@@ -9,8 +12,10 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 import __spark_entry__ as E  # noqa: E402
+from corpusops import surface as S  # noqa: E402
 from oracle_util import compare  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
@@ -19,49 +24,80 @@ SF = "/root/testdata/sf0.001"
 def test_entry_smoke(spark):
     df = E.entry(spark)
     rows = df.collect()
-    assert len(rows) == 16 * 4  # partitions × row-level checks
-    assert set(df.columns) == {"partition_id", "check_name", "n_viol", "status"}
+    # 16 partitions × 6 graded checks, plus one drift row per source
+    grid = [r for r in rows if r.partition_id >= 0]
+    drift = {r.check_name for r in rows if r.partition_id < 0}
+    assert len(grid) == 16 * 6
+    assert drift == {f"drift:{s}" for s in ("web", "books", "code", "wiki", "spam9")}
+    assert {r.status for r in grid} == {"PASS", "FAIL"}
+    assert set(df.columns) == {"partition_id", "check_name", "status", "n_rows", "n_viol"}
 
 
 def test_every_oracle_key_has_query():
+    for q, oracles in (
+        (E.queries(), E.oracle_sql()),
+        (S.queries(), S.oracle_sql()),
+        (S.extra_queries(), S.extra_oracle_sql()),
+    ):
+        for k in oracles:
+            assert k in q, k
+    # one name, one query: corpusops names never shadow the driver's
+    assert not set(E.queries()) & (set(S.queries()) | set(S.extra_queries()))
+
+
+class _Reached(Exception):
+    pass
+
+
+def _reaches_engine(call) -> bool:
+    """True iff `call()` enters a function defined in a file under
+    tokenqc/ (module bodies run by an import do not count). The profile
+    hook raises at the first such call, so the query stops there."""
+    engine = str(REPO / "tokenqc") + "/"
+
+    def spy(frame, event, _arg):
+        code = frame.f_code
+        if event == "call" and code.co_filename.startswith(engine) and code.co_name != "<module>":
+            raise _Reached(code.co_name)
+
+    sys.setprofile(spy)
+    try:
+        call()
+    except _Reached:
+        return True
+    finally:
+        sys.setprofile(None)
+    return False
+
+
+def test_driver_surface_contract(spark):
+    """The driver records at most 50 CORRECTNESS rows; every query has an
+    oracle, and every query calls into the engine."""
     q = E.queries()
-    for k in E.oracle_sql():
-        assert k in q, k
-    xq = E.extra_queries()
-    for k in E.extra_oracle_sql():
-        assert k in xq, k
+    assert 0 < len(q) <= 50
+    assert set(E.oracle_sql()) == set(q)
+    missed = [name for name, fn in sorted(q.items()) if not _reaches_engine(lambda: fn(spark, SF))]
+    assert missed == []
 
 
-def test_driver_surface_is_exactly_50():
-    """The driver records at most 50 CORRECTNESS rows (r03: 57 declared,
-    50 recorded) — the declared surface must fit so EVERY query gets a
-    row, and every main query except none must have an oracle."""
-    q = E.queries()
-    assert len(q) == 50
-    assert set(E.oracle_sql()) == set(q)  # 100% oracle coverage, 0 rows-only
-    assert not (set(E.extra_queries()) & set(q))  # no double-declared keys
-
-
-@pytest.mark.parametrize("name", sorted(E.oracle_sql().keys()))
+@pytest.mark.parametrize("name", sorted({*E.oracle_sql(), *S.oracle_sql()}))
 def test_query_matches_oracle_sf0001(spark, name):
-    q = E.queries()[name]
-    ok, msg = compare(q(spark, SF), SF, E.oracle_sql()[name])
+    reg = E if name in E.oracle_sql() else S
+    ok, msg = compare(reg.queries()[name](spark, SF), SF, reg.oracle_sql()[name])
     assert ok, f"{name}: {msg}"
 
 
-@pytest.mark.parametrize("name", sorted(E.extra_oracle_sql().keys()))
+@pytest.mark.parametrize("name", sorted(S.extra_oracle_sql().keys()))
 def test_extra_query_matches_oracle_sf0001(spark, name):
-    """Queries folded out of the 50-row driver surface keep full oracle
-    parity here — coverage is unchanged, only the driver rows moved."""
-    q = E.extra_queries()[name]
-    ok, msg = compare(q(spark, SF), SF, E.extra_oracle_sql()[name])
+    q = S.extra_queries()[name]
+    ok, msg = compare(q(spark, SF), SF, S.extra_oracle_sql()[name])
     assert ok, f"{name}: {msg}"
 
 
 def test_rows_only_queries_run(spark):
-    df = E.extra_queries()["simhash_pairs"](spark, SF)
+    df = S.extra_queries()["simhash_pairs"](spark, SF)
     assert df.count() >= 0  # executes without error; recall gated by
-    # simhash_planted_recall (driver) + brute-force Hamming (unit)
+    # simhash_planted_recall + brute-force Hamming (unit)
 
 
 def test_drift_verdict_full_statuses(spark):

@@ -129,22 +129,6 @@ def test_batch_topk_window_input_is_partial_topk(spark):
     assert all(e > min(map_ids) for e in exch_ids), plan
 
 
-def test_stats_profile_scan_shape(seq_parquet):
-    """stats.profile reads tokens only for null-ness (definition levels);
-    the histogram never reads tokens at all — pin both ReadSchemas."""
-    from tokenqc.checks import stats
-
-    plan = plan_of(stats.profile(seq_parquet, CFG))
-    read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    # the profile needs doc_id/n_tok/source values + tokens null-ness
-    for col in ("doc_id", "n_tok", "source", "tokens"):
-        assert col in read_schema, read_schema
-
-    hplan = plan_of(stats.histogram(seq_parquet, CFG))
-    hread = [l for l in hplan.splitlines() if "ReadSchema" in l][0]
-    assert "tokens" not in hread, hread
-
-
 def test_contamination_benchmark_is_broadcast(spark):
     from corpusops.textops import textqc
 

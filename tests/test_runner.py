@@ -656,3 +656,47 @@ def test_traced_timing_keys_survive(spark, tables, tmp_path):
         run_id="tk",
     )
     assert set(RUNNER_PHASES) <= set(res.timings), sorted(res.timings)
+
+
+def test_input_types_checked_before_any_job(spark, tables, tmp_path):
+    """The checks assume the input column types: xxhash64 hashes the same
+    ids as int and as bigint apart, so `tokens` cast to array<bigint>
+    once made every row an invariant violation with errors == {}. A
+    wrong or missing column is now a ValueError naming it, raised before
+    any Spark job; nullability and extra columns are fine."""
+    import os
+
+    out = str(tmp_path / "ty")
+    runner = QCRunner(spark, CheckConfig(n_partitions=4), out_dir=out)
+    seq, ref = tables["sequences"], tables["reference_tokens"]
+    as_long = F.col("tokens").cast("array<bigint>")
+    sc = spark.sparkContext
+    sc.setJobGroup("type-probe", "type-probe")
+    try:
+        with pytest.raises(
+            ValueError, match=r"^sequences\.tokens: found array<bigint>, expected array<int>$"
+        ):
+            runner.run(seq.withColumn("tokens", as_long), reference_tokens=ref, run_id="ty")
+        with pytest.raises(
+            ValueError, match=r"^sequences\.n_tok: found no such column, expected int$"
+        ):
+            runner.run(seq.drop("n_tok"), run_id="ty")
+        with pytest.raises(
+            ValueError,
+            match=r"^reference_tokens\.tokens_ref: found array<bigint>, expected array<int>$",
+        ):
+            runner.run(seq, reference_tokens=ref.withColumn("tokens_ref", F.col("tokens_ref").cast(
+                "array<bigint>")), run_id="ty")
+        assert list(sc.statusTracker().getJobIdsForGroup("type-probe")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not os.path.exists(out)
+
+    # an extra column, and array elements that may be NULL
+    extra = seq.withColumn("extra", F.lit(1)).withColumn(
+        "tokens", F.col("tokens").cast("array<int>")
+    )
+    cfg = CheckConfig(n_partitions=4, checks=("structural",))
+    res = QCRunner(spark, cfg, out_dir=out).run(extra, run_id="ok")
+    assert res.errors == {}

@@ -222,6 +222,7 @@ def test_streaming_drift_psi_matches_batch_gate(spark, tmp_path):
     histograms, including the graded WARN/FAIL bands and UNKNOWN."""
     import pyspark.sql.functions as F
 
+    from corpusops import checks as co_checks
     from tokenqc.checks import drift
     from tokenqc.checks.base import CheckConfig
 
@@ -273,7 +274,7 @@ def test_streaming_drift_psi_matches_batch_gate(spark, tmp_path):
 
     want = {
         r.source: (r.n_rows, r.psi, r.status)
-        for r in drift.psi_from_histograms(
+        for r in co_checks.psi_from_histograms(
             clamp_hist(hist), clamp_base(base), psi_warn=0.01, psi_fail=10.0
         ).collect()
     }

@@ -75,10 +75,11 @@ def test_baseline_hist_sums_to_one():
 
 
 def test_reference_citations_exist():
-    """Every /root/reference/... path cited in tokenqc docstrings and
-    comments must exist on disk (r5 VERDICT #1: two invented paths —
-    bin/check_tool.py, bin/analyze_almanack.py — poisoned the audit
-    trail; this pins the whole citation surface)."""
+    """Every /root/reference/... path cited in the docstrings and comments
+    of tokenqc, corpusops and __spark_entry__.py must exist on disk (r5
+    VERDICT #1: two invented paths — bin/check_tool.py,
+    bin/analyze_almanack.py — poisoned the audit trail; this pins the
+    whole citation surface)."""
     import os
     import re
     from pathlib import Path
@@ -90,7 +91,8 @@ def test_reference_citations_exist():
         import pytest
 
         pytest.skip("reference repo not mounted")
-    for py in (p for pkg in ("tokenqc", "corpusops") for p in (repo / pkg).rglob("*.py")):
+    pkgs = [p for pkg in ("tokenqc", "corpusops") for p in (repo / pkg).rglob("*.py")]
+    for py in [*pkgs, repo / "__spark_entry__.py"]:
         text = py.read_text()
         for m in pat.findall(text):
             path = m.rstrip(".,)")

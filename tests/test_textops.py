@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from corpusops.textops import dedup, multimodal, simsearch, textqc
-from tokenqc.checks import degeneracy
 
 
 @pytest.fixture(scope="module")
@@ -844,65 +843,6 @@ def test_embedding_profile_flags_bad_vectors(spark):
     assert r.n_vecs == 5 and r.n_dims == 2  # 2-dim and 3-dim present
     assert r.n_null_vecs == 1 and r.n_nan_vecs == 1 and r.n_zero_norm == 1
     assert r.max_norm == 5.0 and r.min_norm == 0.0
-
-
-# ---------------------------------------------------------------------------
-# token entropy gate
-# ---------------------------------------------------------------------------
-def test_token_entropy_flags_degenerate(spark):
-    import math
-
-    rows = [
-        (0, [5, 5, 5, 5]),          # degenerate: entropy 0
-        (1, [1, 2, 3, 4]),          # ln(4) ~ 1.386 < 1.5 -> flagged
-        (2, list(range(100))),      # ln(100) ~ 4.6 -> clean
-        (3, [1, 1, 2, 2]),          # ln(2)
-        (4, []),                    # excluded
-        (5, None),                  # excluded
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
-    out = {r.doc_id: r for r in degeneracy.token_entropy(df).collect()}
-    assert set(out) == {0, 1, 2, 3}
-    assert out[0].entropy == 0.0 and out[0].low_entropy and out[0].n_distinct == 1
-    assert out[1].entropy == round(math.log(4), 6) and out[1].low_entropy
-    assert out[2].entropy == round(math.log(100), 6) and not out[2].low_entropy
-    assert out[3].entropy == round(math.log(2), 6)
-    assert out[3].distinct_ratio == 0.5 and out[2].distinct_ratio == 1.0
-
-
-# ---------------------------------------------------------------------------
-# duplicated k-gram fraction (Gopher repetition rule over tokens)
-# ---------------------------------------------------------------------------
-def test_token_kgram_repetition_stats(spark):
-    rows = [
-        (0, list(range(20))),    # all distinct -> every window distinct
-        (1, [1, 2, 3, 4] * 10),  # period-4 tile: 33 windows, 4 distinct
-        (2, [7] * 12),           # constant: 5 windows, 1 distinct
-        (3, [1, 2, 3]),          # < k -> excluded (no window exists)
-        (4, None),               # excluded
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
-    out = {r.doc_id: r for r in degeneracy.token_kgram_repetition(df, k=8).collect()}
-    assert set(out) == {0, 1, 2}
-    assert out[0].dup_kgram_frac == 0.0 and not out[0].repetitive
-    assert out[0].n_kgrams == 13 and out[0].n_distinct_kgrams == 13
-    r1 = out[1]
-    assert r1.n_tok == 40 and r1.n_kgrams == 33 and r1.n_distinct_kgrams == 4
-    assert r1.dup_kgram_frac == round(1 - 4 / 33, 6) and r1.repetitive
-    r2 = out[2]
-    assert r2.n_kgrams == 5 and r2.n_distinct_kgrams == 1
-    assert r2.dup_kgram_frac == 0.8 and r2.repetitive
-
-
-def test_token_kgram_repetition_order_sensitive(spark):
-    # same multiset of windows' tokens, different order -> different
-    # window sets: the polynomial hash keeps positional sensitivity
-    rows = [(0, [1, 2, 3, 1, 2, 3]), (1, [3, 2, 1, 3, 2, 1])]
-    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
-    out = {r.doc_id: r for r in degeneracy.token_kgram_repetition(df, k=3).collect()}
-    # both tile with period 3: 4 windows, 3 distinct phases
-    assert out[0].n_distinct_kgrams == 3 and out[1].n_distinct_kgrams == 3
-    assert out[0].dup_kgram_frac == 0.25
 
 
 # ---------------------------------------------------------------------------

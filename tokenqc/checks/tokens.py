@@ -14,8 +14,7 @@ and the analogous gates are:
   appear only at position 0; an EOS id only at the final position.
   Mid-sequence control tokens mean a packing or concatenation bug.
 - **long_run**: a run of >= ``max_token_run`` identical consecutive ids
-  is degenerate repetition (decoder loops, extraction artifacts) — the
-  token-level twin of textops.textqc's character/line repetition gate.
+  is degenerate repetition (decoder loops, extraction artifacts).
 
 All four are row-level predicates over the array, evaluated JVM-side
 (higher-order functions, no Python), so they ride the engine's single

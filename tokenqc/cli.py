@@ -187,14 +187,19 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 2
     runner = QCRunner(spark, cfg, out_dir=args.out, n_batches=args.batches)
-    res = runner.run(
-        seq,
-        allowed_sources=read(args.allowed_sources),
-        baseline_hist=read(args.baseline_hist),
-        reference_tokens=read(args.reference_tokens),
-        run_id=args.run_id,
-        token_baseline_hist=read(args.token_baseline),
-    )
+    try:
+        res = runner.run(
+            seq,
+            allowed_sources=read(args.allowed_sources),
+            baseline_hist=read(args.baseline_hist),
+            reference_tokens=read(args.reference_tokens),
+            run_id=args.run_id,
+            token_baseline_hist=read(args.token_baseline),
+        )
+    except ValueError as e:
+        # an input column of the wrong type is a user error too
+        print(f"tokenqc: error: {e}", file=sys.stderr)
+        return 2
     dup_rows = None
     if args.enumerate_dups:
         from tokenqc import io as qio

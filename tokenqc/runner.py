@@ -77,6 +77,7 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tokenqc import io as qio
 from tokenqc.checks import base as cb
@@ -89,7 +90,7 @@ from tokenqc.checks import (
     scoring,
     uniqueness,
 )
-from tokenqc.schema import FAIL, PASS, UNKNOWN
+from tokenqc.schema import FAIL, PASS, REFERENCE_TOKENS, SEQUENCES, UNKNOWN
 
 TABLES = ("violations", "verdicts", "qc_state")
 
@@ -131,6 +132,20 @@ def _source_verdicts(family: str, frame: DataFrame, stats: tuple[str, ...]) -> l
         )
         for r in frame.collect()
     ]
+
+
+def _check_input_types(name: str, df: DataFrame, want: list[T.StructField]) -> None:
+    """Raise ValueError unless `df` has every column of `want` with its
+    type. Nullability and containsNull are ignored (simpleString omits
+    them), and extra columns are allowed. The checks assume these types:
+    xxhash64, for one, hashes the same ids as int and as bigint apart."""
+    have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    for f in want:
+        expected, found = f.dataType.simpleString(), have.get(f.name)
+        if found != expected:
+            raise ValueError(
+                f"{name}.{f.name}: found {found or 'no such column'}, expected {expected}"
+            )
 
 
 def _row_level_facets(cfg: cb.CheckConfig, with_referential: bool) -> list[cb.Facet]:
@@ -177,6 +192,11 @@ class QCRunner:
         run_id: str | None = None,
         token_baseline_hist: DataFrame | None = None,
     ) -> RunResult:
+        _check_input_types("sequences", sequences, SEQUENCES.fields)
+        if reference_tokens is not None:
+            _check_input_types(
+                "reference_tokens", reference_tokens, [REFERENCE_TOKENS["tokens_ref"]]
+            )
         cfg = self.cfg
         run_id = run_id or uuid.uuid4().hex[:12]
         spark = self.spark

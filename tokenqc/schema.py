@@ -23,26 +23,7 @@ SEQUENCES = T.StructType(
     ]
 )
 
-# ---- dimensions / snapshots ------------------------------------------------
-# Referential whitelist: recast of the reference's URL-format gate
-# (/root/reference/main.nf:62-66) as a broadcast anti-join check.
-ALLOWED_SOURCES = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("active", T.BooleanType(), False),
-    ]
-)
-
-# Drift baseline: recast of the reference's expected-status ground truth
-# (/root/reference/README.md expected-status table).
-BASELINE_HIST = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("p", T.DoubleType(), False),
-    ]
-)
-
+# ---- reference -------------------------------------------------------------
 # Per-row invariant oracle (the analogue of the reference re-running each
 # repo's own test suite, /root/reference/bin/run_tests.py:109-125).
 REFERENCE_TOKENS = T.StructType(

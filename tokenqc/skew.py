@@ -1,14 +1,14 @@
-"""Skew helpers: salted two-stage aggregation and salted repartitioning.
+"""Skew helper: salted two-stage aggregation.
 
 The north rule requires explicit handling of skewed source partitions
 (the synthetic data makes `web` ~70% of rows). AQE skew-join splitting
-(enabled in :mod:`tokenqc.session`) covers joins; these helpers cover
-aggregations and explicit repartitions.
+(enabled in :mod:`tokenqc.session`) covers joins; `salted_count` covers
+aggregations.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -36,42 +36,3 @@ def salted_count(df: DataFrame, key: str, n_salt: int) -> DataFrame:
     salted = with_salt(df.select(key), n_salt)
     partial = salted.groupBy(key, "__salt").agg(F.count(F.lit(1)).alias("c"))
     return partial.groupBy(key).agg(F.sum("c").alias("cnt"))
-
-
-def salted_distinct_count(
-    df: DataFrame, key: str, value: Column | str, n_salt: int
-) -> DataFrame:
-    """Two-stage count-DISTINCT-by-key salted by the VALUE's hash — exact
-    (no value can land in two ``pmod(xxhash64(value), n_salt)`` buckets,
-    so per-bucket distinct counts sum to the true count).
-
-    Honest scope (measured, BENCH/skew_result.json): for a SINGLE
-    distinct aggregate Catalyst's rewrite is already skew-proof — the
-    dedup stage shuffles by (key, value), spreading a hot key evenly,
-    and the final count is partial-agg-bounded — so this helper is
-    ~parity there. It matters for plans that shuffle by the grouping key
-    alone with unreduced per-key data: MULTIPLE distinct aggregates
-    (the Expand plan partitions by group keys only) and holistic
-    aggregates (collect_list/collect_set), where a hot key's entire
-    value set hits one reducer.
-
-    Output: (key, cnt) with cnt = exact distinct-value count.
-    """
-    v = F.col(value) if isinstance(value, str) else value
-    bucket = F.pmod(F.xxhash64(v), F.lit(n_salt)).cast("int")
-    partial = (
-        df.select(F.col(key), v.alias("__v"), bucket.alias("__b"))
-        .groupBy(key, "__b")
-        .agg(F.count_distinct(F.col("__v")).alias("c"))
-    )
-    return partial.groupBy(key).agg(F.sum("c").alias("cnt"))
-
-
-def salted_repartition(df: DataFrame, key: Column | str, n_parts: int, n_salt: int) -> DataFrame:
-    """Repartition on (key, salt) — spreads a hot key across n_salt
-    partitions for downstream per-partition work that doesn't need
-    strict key co-location."""
-    salted = with_salt(df, n_salt)
-    return salted.repartition(n_parts, F.col(key) if isinstance(key, str) else key, F.col("__salt")).drop(
-        "__salt"
-    )
