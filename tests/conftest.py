@@ -11,8 +11,14 @@ SEED = 42
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark("tokenqc-tests", master="local[4]", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # the reference digest store lives under the warehouse: a fresh one
+    # per test session, so no digest outlives the session that built it
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    s = get_spark(
+        "tokenqc-tests", master="local[4]", shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     yield s
 
 

@@ -169,6 +169,25 @@ def test_missing_input_clean_error(capsys):
     assert "cannot read --input" in err and "PATH_NOT_FOUND" in err
 
 
+@pytest.mark.parametrize(
+    "flag", ["--allowed-sources", "--baseline-hist", "--reference-tokens", "--token-baseline"]
+)
+def test_missing_side_input_clean_error(spark, synth_dir, tmp_path, capsys, flag):
+    """A side table's missing path is a user error like a missing
+    --input: one `tokenqc: error:` line naming the flag, exit 2 (exit 1
+    means "ran with errors"), no stack trace."""
+    missing = str(tmp_path / "nope.parquet")
+    rc = cli.main([
+        "--input", f"{synth_dir}/sequences.parquet", "--out", str(tmp_path / "out"),
+        flag, missing,
+    ])
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert f"tokenqc: error: cannot read {flag} {missing}: PATH_NOT_FOUND" in err
+    assert "Traceback" not in err
+    assert not (tmp_path / "out").exists()
+
+
 def test_cli_diff_against(spark, synth_dir, tmp_path, capsys):
     out_dir = str(tmp_path / "out")
     base = [

@@ -662,8 +662,9 @@ def test_input_types_checked_before_any_job(spark, tables, tmp_path):
     """The checks assume the input column types: xxhash64 hashes the same
     ids as int and as bigint apart, so `tokens` cast to array<bigint>
     once made every row an invariant violation with errors == {}. A
-    wrong or missing column is now a ValueError naming it, raised before
-    any Spark job; nullability and extra columns are fine."""
+    wrong or missing column of any input table is now a ValueError
+    naming it, raised before any Spark job; nullability and extra columns
+    are fine."""
     import os
 
     out = str(tmp_path / "ty")
@@ -687,6 +688,36 @@ def test_input_types_checked_before_any_job(spark, tables, tmp_path):
         ):
             runner.run(seq, reference_tokens=ref.withColumn("tokens_ref", F.col("tokens_ref").cast(
                 "array<bigint>")), run_id="ty")
+        base, tok_base = tables["baseline_hist"], tables["token_baseline"]
+        for kwargs, message in (
+            (
+                {"allowed_sources": tables["allowed_sources"].withColumn(
+                    "active", F.col("active").cast("string"))},
+                r"^allowed_sources\.active: found string, expected boolean$",
+            ),
+            (
+                {"allowed_sources": tables["allowed_sources"].drop("active")},
+                r"^allowed_sources\.active: found no such column, expected boolean$",
+            ),
+            (
+                {"baseline_hist": base.withColumn("bucket", F.col("bucket").cast("bigint"))},
+                r"^baseline_hist\.bucket: found bigint, expected int$",
+            ),
+            (
+                {"baseline_hist": base.withColumn("p", F.col("p").cast("float"))},
+                r"^baseline_hist\.p: found float, expected double$",
+            ),
+            (
+                {"token_baseline_hist": tok_base.withColumnRenamed("source", "src")},
+                r"^token_baseline_hist\.source: found no such column, expected string$",
+            ),
+            (
+                {"token_baseline_hist": tok_base.withColumn("p", F.col("p").cast("string"))},
+                r"^token_baseline_hist\.p: found string, expected double$",
+            ),
+        ):
+            with pytest.raises(ValueError, match=message):
+                runner.run(seq, reference_tokens=ref, run_id="ty", **kwargs)
         assert list(sc.statusTracker().getJobIdsForGroup("type-probe")) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -698,5 +729,9 @@ def test_input_types_checked_before_any_job(spark, tables, tmp_path):
         "tokens", F.col("tokens").cast("array<int>")
     )
     cfg = CheckConfig(n_partitions=4, checks=("structural",))
-    res = QCRunner(spark, cfg, out_dir=out).run(extra, run_id="ok")
+    res = QCRunner(spark, cfg, out_dir=out).run(
+        extra, run_id="ok",
+        allowed_sources=tables["allowed_sources"].withColumn("extra", F.lit(1)),
+        baseline_hist=tables["baseline_hist"], token_baseline_hist=tables["token_baseline"],
+    )
     assert res.errors == {}

@@ -165,36 +165,28 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.errors import AnalysisException
 
-    def read(path):
-        return spark.read.parquet(path) if path else None
-
-    try:
-        seq = spark.read.parquet(args.input)
-    except AnalysisException as e:
-        # a missing/unreadable input is a user error, not a stack trace
-        cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-        print(f"tokenqc: error: cannot read --input {args.input}: {cond or e}", file=sys.stderr)
-        return 2
-    prev = None
-    if args.prev_input:
+    # a missing/unreadable table path is a user error, not a stack trace
+    tables = {}
+    for flag in ("input", "prev_input", "allowed_sources", "baseline_hist",
+                 "reference_tokens", "token_baseline"):
+        path = getattr(args, flag)
         try:
-            prev = spark.read.parquet(args.prev_input)
+            tables[flag] = spark.read.parquet(path) if path else None
         except AnalysisException as e:
             cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-            print(
-                f"tokenqc: error: cannot read --prev-input {args.prev_input}: {cond or e}",
-                file=sys.stderr,
-            )
+            name = flag.replace("_", "-")
+            print(f"tokenqc: error: cannot read --{name} {path}: {cond or e}", file=sys.stderr)
             return 2
+    seq, prev = tables["input"], tables["prev_input"]
     runner = QCRunner(spark, cfg, out_dir=args.out, n_batches=args.batches)
     try:
         res = runner.run(
             seq,
-            allowed_sources=read(args.allowed_sources),
-            baseline_hist=read(args.baseline_hist),
-            reference_tokens=read(args.reference_tokens),
+            allowed_sources=tables["allowed_sources"],
+            baseline_hist=tables["baseline_hist"],
+            reference_tokens=tables["reference_tokens"],
             run_id=args.run_id,
-            token_baseline_hist=read(args.token_baseline),
+            token_baseline_hist=tables["token_baseline"],
         )
     except ValueError as e:
         # an input column of the wrong type is a user error too

@@ -19,12 +19,21 @@ API (never ``os.path``) so resume works identically for ``file://``,
 ``hdfs://`` and ``s3a://`` output locations. Reference analogue: the
 results/state sink family (/root/reference/modules/RunAlmanack.nf:33)
 plus the workDir-keyed resume cache (/root/reference/nextflow.config:14).
+
+Keyed side tables (data derived from an input, stored once per input
+snapshot rather than once per run) live under ``spark.sql.warehouse.dir``,
+beside the session's managed tables: ``file_scan_key`` names a snapshot,
+``write_keyed`` commits a table under its key, and ``read_keyed`` reads
+it back only while the key still matches.
 """
 
 from __future__ import annotations
 
 import functools
+import hashlib
+import json
 import os
+import uuid
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -315,6 +324,110 @@ def read_current(
         )
         neg = neg.join(neg_latest, on=["check_name", "batch"], how="left_semi")
     return cur.unionByName(neg)
+
+
+# ---------------------------------------------------------------------------
+# keyed side tables
+# ---------------------------------------------------------------------------
+#: The marker a committed keyed table carries; it holds the key's record.
+_KEY_MARKER = "_TOKENQC_KEY"
+
+
+def file_scan_key(df: DataFrame, columns: list[str]) -> tuple[str, str] | None:
+    """(location, key) of a frame that reads exactly its files, or None.
+
+    Only a frame whose optimized plan is a file relation, at most under a
+    column projection without renames, qualifies: a filter, a derived
+    column, an in-memory or cached frame, or a catalog table without
+    ``inputFiles()`` gets None. The location is the relation's root
+    paths. The key records the types of `columns` and each input file's
+    path, length and modification time, read now through the Hadoop
+    FileSystem (the frame's own listing may predate a rewrite), so a
+    file rewritten, added or removed changes it."""
+    plan = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    if plan.nodeName() == "Project":
+        exprs = plan.projectList()
+        if any(
+            exprs.apply(i).getClass().getSimpleName() != "AttributeReference"
+            for i in range(exprs.size())
+        ):
+            return None
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    relation = plan.relation()
+    if relation.getClass().getSimpleName() != "HadoopFsRelation":
+        return None
+    roots = relation.location().rootPaths()
+    location = "\n".join(sorted(roots.apply(i).toString() for i in range(roots.size())))
+    sc = df.sparkSession.sparkContext
+    jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()  # noqa: SLF001
+    files = []
+    for f in sorted(df.inputFiles()):
+        # inputFiles are URI strings: Path(URI) keeps their escapes intact
+        jpath = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f))
+        st = jpath.getFileSystem(conf).getFileStatus(jpath)
+        files.append([f, st.getLen(), st.getModificationTime()])
+    types = {c: df.schema[c].dataType.simpleString() for c in columns}
+    key = json.dumps({"location": location, "columns": types, "files": files},
+                     separators=(",", ":"))
+    return location, key
+
+
+def keyed_dir(spark: SparkSession, name: str, location: str) -> str:
+    """``<warehouse>/tokenqc_<name>/<hash of location>``: the one directory
+    the keyed table `name` of an input location is kept in."""
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    loc = hashlib.sha256(location.encode()).hexdigest()[:16]
+    return os.path.join(_qualify(warehouse), f"tokenqc_{name}", loc)
+
+
+def _key_dir(store: str, key: str) -> str:
+    return os.path.join(store, hashlib.sha256(key.encode()).hexdigest())
+
+
+def read_keyed(spark: SparkSession, store: str, key: str, schema) -> DataFrame | None:
+    """The table committed in `store` under `key`, read with `schema`
+    pinned (no inference job), or None if none is: a missing marker means
+    another key, or a build that never committed."""
+    path = _key_dir(store, key)
+    if not _exists(spark, os.path.join(path, _KEY_MARKER)):
+        return None
+    return spark.read.schema(schema).parquet(path)
+
+
+def write_keyed(df: DataFrame, store: str, key: str) -> None:
+    """Write `df` to a temp directory in `store`, then commit it as the
+    table of `key` (`_commit_keyed`). A crash before the commit leaves
+    only the temp directory, which no reader looks at."""
+    tmp = os.path.join(store, f"_tmp-{uuid.uuid4().hex}")
+    df.write.parquet(tmp)
+    _commit_keyed(df.sparkSession, store, key, tmp)
+
+
+def _commit_keyed(spark: SparkSession, store: str, key: str, tmp: str) -> None:
+    """Rename `tmp` into the directory of `key`, then write its marker
+    (holding the key) last, then delete everything else in `store`: the
+    store keeps one table, and the leftovers of crashed builds go. A build
+    that stops before the marker is never read."""
+    fs, jstore = _hadoop_fs(spark, store)
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    final, jtmp = path(_key_dir(store, key)), path(tmp)
+    marker = path(final, _KEY_MARKER)
+    if fs.exists(marker):  # a concurrent build of this key committed first
+        fs.delete(jtmp, True)
+    else:
+        fs.delete(final, True)  # a build that renamed but never marked
+        if not fs.rename(jtmp, final):
+            raise OSError(f"cannot rename {tmp} to {final.toString()}")
+        out = fs.create(marker, True)
+        try:
+            out.write(bytearray(key.encode()))
+        finally:
+            out.close()
+    for st in fs.listStatus(jstore):
+        if st.getPath().getName() != final.getName():
+            fs.delete(st.getPath(), True)
 
 
 def list_batches(spark: SparkSession, base_dir: str, table: str, run_id: str) -> list[int]:

@@ -31,11 +31,17 @@ batch is a commit unit, not a compute unit.
 1. ONE violation frame per run, over the pending partitions: one narrow
    pass over the fact table computes every row-level facet
    (completeness, structural, format, referential-via-broadcast) with
-   the invariant hash join fused in (the reference reduced to one row
-   per doc_id) in every configuration, an invariant-only run included,
-   so an invariant row reads the same whatever else runs. It is
-   unioned with the uniqueness and degeneracy rows and
-   clustered by partition_id into one persisted frame. It holds
+   the invariant hash join fused in in every configuration, an
+   invariant-only run included, so an invariant row reads the same
+   whatever else runs. The join's other side is the reference digest
+   (one row per doc_id: the least and greatest hash of its copies).
+   For a reference that is a bare file scan it comes from the digest
+   store under spark.sql.warehouse.dir, keyed by the reference's file
+   listing: a warm run reads it and never scans tokens_ref, a cold run
+   (no digest under the current key) builds and commits it first, in
+   jobs described `reference_digest`. Any other reference is digested
+   inline. The frame is unioned with the uniqueness and degeneracy rows
+   and clustered by partition_id into one persisted frame. It holds
    violation rows only, never input rows, and spills like any cached
    frame;
 2. uniqueness is planned as one linear, persisted aggregate:
@@ -90,7 +96,9 @@ from tokenqc.checks import (
     scoring,
     uniqueness,
 )
-from tokenqc.schema import FAIL, PASS, REFERENCE_TOKENS, SEQUENCES, UNKNOWN
+from tokenqc.schema import (
+    ALLOWED_SOURCES, BASELINE_HIST, FAIL, PASS, REFERENCE_TOKENS, SEQUENCES, UNKNOWN,
+)
 
 TABLES = ("violations", "verdicts", "qc_state")
 
@@ -192,11 +200,15 @@ class QCRunner:
         run_id: str | None = None,
         token_baseline_hist: DataFrame | None = None,
     ) -> RunResult:
-        _check_input_types("sequences", sequences, SEQUENCES.fields)
-        if reference_tokens is not None:
-            _check_input_types(
-                "reference_tokens", reference_tokens, [REFERENCE_TOKENS["tokens_ref"]]
-            )
+        for name, df, want in (
+            ("sequences", sequences, SEQUENCES.fields),
+            ("reference_tokens", reference_tokens, [REFERENCE_TOKENS["tokens_ref"]]),
+            ("allowed_sources", allowed_sources, ALLOWED_SOURCES.fields),
+            ("baseline_hist", baseline_hist, BASELINE_HIST.fields),
+            ("token_baseline_hist", token_baseline_hist, BASELINE_HIST.fields),
+        ):
+            if df is not None:
+                _check_input_types(name, df, want)
         cfg = self.cfg
         run_id = run_id or uuid.uuid4().hex[:12]
         spark = self.spark
@@ -304,12 +316,24 @@ class QCRunner:
                 ))
             t = _mark_timing(timings, "run_plans", t)
 
+            # the reference digest, from the store when the reference is a
+            # bare file scan: a warm run only checks the key and never
+            # reads tokens_ref; a cold run's build jobs are named here
+            want_invariant = "invariant" in cfg.checks and reference_tokens is not None
+            digest: DataFrame | None = None
+            if want_invariant:
+                phase("-", "reference_digest")
+                try:
+                    digest = invariant.stored_digest(reference_tokens)
+                except Exception as e:  # the store only saves work: digest inline
+                    errors["reference_digest"] = repr(e)
+                t = _mark_timing(timings, "reference_digest", t)
+
             # ONE narrow scan for all row-level gates, with the invariant
             # fused in (tokens hashed once, 8-byte hashes joined to the
-            # reference digest — the tokens column is read exactly once per
-            # side across the whole run)
+            # reference digest — the input's tokens column is read exactly
+            # once across the whole run)
             facets = _row_level_facets(cfg, with_referential=has_ref_dim)
-            want_invariant = "invariant" in cfg.checks and reference_tokens is not None
             if facets or want_invariant:
                 try:
                     extra = (
@@ -318,9 +342,9 @@ class QCRunner:
                     narrow = cb.project_facets(pdf, facets, extra)
                     all_facets = list(facets)
                     if want_invariant:
-                        narrow = narrow.join(
-                            invariant.reference_digest(reference_tokens), on="doc_id", how="left"
-                        )
+                        if digest is None:
+                            digest = invariant.reference_digest(reference_tokens)
+                        narrow = narrow.join(digest, on="doc_id", how="left")
                         inv = cb.Facet(
                             invariant.CHECK,
                             "tokens_mismatch",

@@ -33,6 +33,25 @@ REFERENCE_TOKENS = T.StructType(
     ]
 )
 
+# ---- dimension and baselines ------------------------------------------------
+# The referential whitelist: a source is allowed while `active`.
+ALLOWED_SOURCES = T.StructType(
+    [
+        T.StructField("source", T.StringType(), True),
+        T.StructField("active", T.BooleanType(), True),
+    ]
+)
+
+# Expected per-source bucket probabilities: n_tok buckets for the drift
+# gate, token-id residue buckets for the token drift gate.
+BASELINE_HIST = T.StructType(
+    [
+        T.StructField("source", T.StringType(), True),
+        T.StructField("bucket", T.IntegerType(), True),
+        T.StructField("p", T.DoubleType(), True),
+    ]
+)
+
 # ---- verdict statuses ------------------------------------------------------
 PASS = "PASS"
 FAIL = "FAIL"
