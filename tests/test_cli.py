@@ -188,6 +188,40 @@ def test_missing_side_input_clean_error(spark, synth_dir, tmp_path, capsys, flag
     assert not (tmp_path / "out").exists()
 
 
+def test_unwritable_digest_store_still_exits_0(spark, synth_dir, tmp_path, capsys,
+                                                monkeypatch):
+    """A digest store that cannot be written costs only time: the run
+    digests the reference inline, exits 0 with its rows unchanged, and
+    names the store's failure under `warnings`, not `errors`."""
+    from tokenqc import io as qio
+
+    def run(out):
+        rc = cli.main([
+            "--input", f"{synth_dir}/sequences.parquet", "--out", str(out),
+            "--reference-tokens", f"{synth_dir}/reference_tokens.parquet",
+            "--checks", "invariant", "--partitions", "4", "--run-id", "r",
+        ])
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        rows = {
+            t: sorted(map(tuple, spark.read.parquet(str(out / t)).collect()))
+            for t in ("violations", "verdicts")
+        }
+        return rc, summary, rows
+
+    # an absolute store name places the store under a regular file, where
+    # nothing can be created, whoever runs the test
+    (tmp_path / "blocker").write_text("")
+    with monkeypatch.context() as m:
+        m.setattr(qio, "DIGEST_STORE", str(tmp_path / "blocker" / "store"))
+        rc, summary, rows = run(tmp_path / "unwritable")
+    assert rc == 0
+    assert summary["errors"] == {}
+    assert "reference_digest" in summary["warnings"]
+    rc, summary, want = run(tmp_path / "stored")
+    assert rc == 0 and "warnings" not in summary
+    assert rows == want and rows["violations"]
+
+
 def test_cli_diff_against(spark, synth_dir, tmp_path, capsys):
     out_dir = str(tmp_path / "out")
     base = [

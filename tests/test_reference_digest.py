@@ -19,7 +19,6 @@ from tokenqc.checks import invariant
 from tokenqc.checks.base import CheckConfig
 from tokenqc.runner import QCRunner
 
-REF_COLUMNS = ["doc_id", "tokens_ref"]
 REF_SCHEMA = "doc_id string, tokens_ref array<int>"
 SEQ = [
     ("a", [1, 2, 3], 3, "web"), ("b", [4, 5], 2, "web"), ("c", [6], 1, "web"),
@@ -106,8 +105,15 @@ def _inline_rows(spark, tmp_path, files, name: str):
 
 def _store(spark, ref) -> str:
     """The local directory of `ref`'s digest store."""
-    location, _ = qio.file_scan_key(ref, REF_COLUMNS)
-    return qio._local_file_path(spark, qio.keyed_dir(spark, "reference_digest", location))  # noqa: SLF001
+    store, _ = qio.digest_snapshot(ref)
+    return qio._local_file_path(spark, store)  # noqa: SLF001
+
+
+def _committed(store: str) -> list[str]:
+    """The digests in `store` that carry their key's marker."""
+    return sorted(
+        d for d in os.listdir(store) if os.path.exists(os.path.join(store, d, "_TOKENQC_KEY"))
+    )
 
 
 def test_stored_digest_equals_inline_cold_and_warm(spark, tmp_path):
@@ -175,16 +181,18 @@ def test_rewritten_reference_file_invalidates_digest(spark, tmp_path):
     assert "tokenqc second batch=- reference_digest" in jobs
     assert _rows(res) == _inline_rows(spark, tmp_path, new, "inline")
     assert sorted(r.doc_id for r in res.violations.collect()) == ["b", "c"]
+    # the new digest, and the one it replaced (a run may still scan it)
     store = _store(spark, spark.read.parquet(path))
-    assert len(os.listdir(store)) == 1
+    assert len(_committed(store)) == 2 and sorted(os.listdir(store)) == _committed(store)
 
 
 @pytest.mark.parametrize("renamed", [False, True], ids=["before_rename", "before_marker"])
 def test_crashed_build_is_never_used(spark, tmp_path, monkeypatch, renamed):
     """A build whose commit raises, after its temp directory is written
     (and, `renamed`, moved into place without its marker), leaves no
-    digest a run uses: the failing run records the error and digests
-    inline, the next run rebuilds, and both give the inline rows."""
+    digest a run uses: the failing run digests inline and records a
+    warning, not an error, the next run rebuilds, and both give the
+    inline rows."""
     path = _ref_dir(tmp_path)
     want = _inline_rows(spark, tmp_path, REF_FILES, "inline")
 
@@ -196,19 +204,62 @@ def test_crashed_build_is_never_used(spark, tmp_path, monkeypatch, renamed):
         raise OSError("crash mid-commit")
 
     with monkeypatch.context() as m:
-        m.setattr(qio, "_commit_keyed", crashing)
+        m.setattr(qio, "_commit_digest", crashing)
         res, _ = _run(spark, str(tmp_path / "crash"), spark.read.parquet(path))
-    assert "crash mid-commit" in res.errors["reference_digest"]
+    assert res.errors == {}
+    assert "crash mid-commit" in res.warnings["reference_digest"]
     assert _rows(res) == want
     store = _store(spark, spark.read.parquet(path))
-    assert os.listdir(store)  # the half build is still there
+    assert os.listdir(store) and not _committed(store)  # the half build, unmarked
 
     res, jobs = _run(spark, str(tmp_path / "next"), spark.read.parquet(path), "next")
-    assert res.errors == {}
+    assert res.errors == {} and res.warnings == {}
     assert "tokenqc next batch=- reference_digest" in jobs
     assert _rows(res) == want
-    # the commit cleared the crashed build's leftovers
-    assert len(os.listdir(store)) == 1
+    assert len(_committed(store)) == 1
+
+
+def test_replaced_digest_outlives_the_run_scanning_it(spark, tmp_path, monkeypatch):
+    """A run that found its digest current still scans it after another
+    run commits a newer digest of the same location: a commit keeps the
+    digest it replaces, so the run's rows equal the inline path's. The
+    commit after that deletes the oldest digest; a build directory without
+    a marker goes only once it is a day old."""
+    path = _ref_dir(tmp_path)
+    want = _inline_rows(spark, tmp_path, REF_FILES, "inline")
+    _run(spark, str(tmp_path / "cold"), spark.read.parquet(path), "cold")
+    store = _store(spark, spark.read.parquet(path))
+    first = _committed(store)
+    real = invariant.stored_digest
+
+    def replaced_meanwhile(reference):
+        found = real(reference)  # warm: the digest under the current key
+        # another run sees one more reference file and commits its digest
+        _write_ref_file(os.path.join(path, "part-2.parquet"), [("y", [1])])
+        assert real(spark.read.parquet(path)) is not None
+        return found
+
+    with monkeypatch.context() as m:
+        m.setattr(invariant, "stored_digest", replaced_meanwhile)
+        res, _ = _run(spark, str(tmp_path / "warm"), spark.read.parquet(path), "warm")
+    assert res.errors == {} and res.warnings == {}
+    assert _rows(res) == want
+    second = _committed(store)
+    assert len(second) == 2 and set(first) < set(second)
+
+    # a stale build directory and one still being written, then one more
+    # commit: the oldest digest and the stale directory go
+    day = time.time() - 25 * 3600
+    os.makedirs(os.path.join(store, "_tmp-stale"))
+    os.utime(os.path.join(store, "_tmp-stale"), (day, day))
+    os.makedirs(os.path.join(store, "_tmp-running"))
+    part = os.path.join(path, "part-2.parquet")
+    _write_ref_file(part, [("y", [2])])
+    os.utime(part, (os.stat(part).st_mtime + 5,) * 2)
+    assert invariant.stored_digest(spark.read.parquet(path)) is not None
+    third = _committed(store)
+    assert len(third) == 2 and set(second) - set(first) < set(third)
+    assert sorted(os.listdir(store)) == sorted(third + ["_tmp-running"])
 
 
 def test_derived_and_in_memory_references_are_digested_inline(spark, tmp_path):
@@ -221,9 +272,7 @@ def test_derived_and_in_memory_references_are_digested_inline(spark, tmp_path):
     _run(spark, str(tmp_path / "cold"), ref)
     store = _store(spark, ref)
     committed = sorted(os.listdir(store))
-    assert qio.file_scan_key(ref.select("tokens_ref", "doc_id"), REF_COLUMNS) == (
-        qio.file_scan_key(ref, REF_COLUMNS)
-    )
+    assert qio.digest_snapshot(ref.select("tokens_ref", "doc_id")) == qio.digest_snapshot(ref)
 
     filtered = ref.where(F.col("doc_id") != "f")
     derived = ref.withColumn("tokens_ref", F.reverse("tokens_ref"))
@@ -233,7 +282,7 @@ def test_derived_and_in_memory_references_are_digested_inline(spark, tmp_path):
     frames = {"filtered": filtered, "derived": derived, "in_memory": in_memory}
     got = {}
     for name, frame in frames.items():
-        assert qio.file_scan_key(frame, REF_COLUMNS) is None
+        assert qio.digest_snapshot(frame) is None
         assert invariant.stored_digest(frame) is None
         res, jobs = _run(spark, str(tmp_path / name), frame, name)
         assert res.errors == {} and not any("reference_digest" in d for d in jobs)

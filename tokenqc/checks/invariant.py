@@ -23,10 +23,12 @@ digest kept under `spark.sql.warehouse.dir`, keyed by the reference's
 file listing with lengths and modification times. A run whose key
 matches the stored one reads the digest (16 bytes per doc_id plus the
 id) and never opens `tokens_ref`; any other run builds it, commits it
-and reads it back, so both join the same stored table. Any other
-reference (filtered, derived, in-memory, a catalog table without
-`inputFiles()`) is digested inline on every run. `reference_digest` and
-`violations` stay pure.
+and reads it back, so both join the same stored table. A commit keeps
+the digest it replaces (a concurrent run may still be scanning it) and
+deletes older ones. Any other reference (filtered, derived, in-memory, a
+catalog table without `inputFiles()`) is digested inline on every run,
+as is any reference whose store cannot be read or written.
+`reference_digest` and `violations` stay pure.
 """
 
 from __future__ import annotations
@@ -55,20 +57,18 @@ def reference_digest(reference: DataFrame, exact: bool = False) -> DataFrame:
 def stored_digest(reference: DataFrame) -> DataFrame | None:
     """`reference_digest(reference)` through the digest store: read back
     when the store holds it under the reference's current key, else built,
-    committed (replacing the location's older digest) and read back. None
-    when the reference is not a bare file scan; the caller then digests
-    it inline."""
-    snapshot = qio.file_scan_key(reference, ["doc_id", "tokens_ref"])
+    committed and read back. None when the reference is not a bare file
+    scan; the caller then digests it inline."""
+    snapshot = qio.digest_snapshot(reference)
     if snapshot is None:
         return None
-    location, key = snapshot
+    store, key = snapshot
     spark = reference.sparkSession
     digest = reference_digest(reference)
-    store = qio.keyed_dir(spark, "reference_digest", location)
-    found = qio.read_keyed(spark, store, key, digest.schema)
+    found = qio.read_digest(spark, store, key, digest.schema)
     if found is None:
-        qio.write_keyed(digest, store, key)
-        found = qio.read_keyed(spark, store, key, digest.schema)
+        qio.write_digest(digest, store, key)
+        found = qio.read_digest(spark, store, key, digest.schema)
     return found
 
 

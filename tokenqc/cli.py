@@ -244,6 +244,7 @@ def main(argv: list[str] | None = None) -> int:
         **({"snapshot": snap_summary} if snap_summary is not None else {}),
         "failed_partitions": res.state.where("status = 'FAIL'").count(),
         "errors": res.errors,
+        **({"warnings": res.warnings} if res.warnings else {}),
     }
     if args.diff_against:
         from pyspark.sql import functions as F

@@ -20,11 +20,12 @@ API (never ``os.path``) so resume works identically for ``file://``,
 results/state sink family (/root/reference/modules/RunAlmanack.nf:33)
 plus the workDir-keyed resume cache (/root/reference/nextflow.config:14).
 
-Keyed side tables (data derived from an input, stored once per input
-snapshot rather than once per run) live under ``spark.sql.warehouse.dir``,
-beside the session's managed tables: ``file_scan_key`` names a snapshot,
-``write_keyed`` commits a table under its key, and ``read_keyed`` reads
-it back only while the key still matches.
+The invariant's reference digest (data derived from the reference, stored
+once per reference snapshot rather than once per run) lives under
+``spark.sql.warehouse.dir``, beside the session's managed tables:
+``digest_snapshot`` names a reference snapshot, ``write_digest`` commits
+a digest under its key, and ``read_digest`` reads it back only while the
+key still matches.
 """
 
 from __future__ import annotations
@@ -33,7 +34,9 @@ import functools
 import hashlib
 import json
 import os
+import time
 import uuid
+from urllib.parse import unquote
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -327,23 +330,34 @@ def read_current(
 
 
 # ---------------------------------------------------------------------------
-# keyed side tables
+# the reference digest store
 # ---------------------------------------------------------------------------
-#: The marker a committed keyed table carries; it holds the key's record.
+#: The directory under ``spark.sql.warehouse.dir`` that holds the digests,
+#: one subdirectory per reference location.
+DIGEST_STORE = "tokenqc_reference_digest"
+#: The reference columns a digest is computed from: their types are part
+#: of its key.
+DIGEST_INPUTS = ("doc_id", "tokens_ref")
+#: The marker a committed digest carries; it holds the key's record.
 _KEY_MARKER = "_TOKENQC_KEY"
+#: Age past which a commit deletes a build directory that has no marker:
+#: well past any build's length, so a concurrent build is never hit.
+_STALE_BUILD_S = 24 * 3600
 
 
-def file_scan_key(df: DataFrame, columns: list[str]) -> tuple[str, str] | None:
-    """(location, key) of a frame that reads exactly its files, or None.
+def digest_snapshot(df: DataFrame) -> tuple[str, str] | None:
+    """(store, key) of a reference that reads exactly its files, or None.
 
     Only a frame whose optimized plan is a file relation, at most under a
     column projection without renames, qualifies: a filter, a derived
     column, an in-memory or cached frame, or a catalog table without
-    ``inputFiles()`` gets None. The location is the relation's root
-    paths. The key records the types of `columns` and each input file's
-    path, length and modification time, read now through the Hadoop
-    FileSystem (the frame's own listing may predate a rewrite), so a
-    file rewritten, added or removed changes it."""
+    ``inputFiles()`` gets None. The store is the one directory the
+    relation's root paths keep their digest in. The key records the types
+    of ``DIGEST_INPUTS`` and each input file's path, length and
+    modification time, listed now (the frame's own listing may predate a
+    rewrite) with one Hadoop ``listStatus`` per parent directory, so a
+    file rewritten, added or removed changes it. None as well when an
+    input file is no longer listed."""
     plan = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
     if plan.nodeName() == "Project":
         exprs = plan.projectList()
@@ -362,32 +376,38 @@ def file_scan_key(df: DataFrame, columns: list[str]) -> tuple[str, str] | None:
     location = "\n".join(sorted(roots.apply(i).toString() for i in range(roots.size())))
     sc = df.sparkSession.sparkContext
     jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()  # noqa: SLF001
-    files = []
-    for f in sorted(df.inputFiles()):
+    path, uri = jvm.org.apache.hadoop.fs.Path, jvm.java.net.URI
+    # the names Spark itself skips (leading _ or .): checksums, markers
+    visible = jvm.org.apache.parquet.hadoop.util.HiddenFileFilter.INSTANCE
+    files = sorted(df.inputFiles())
+    listed = {}
+    for parent in sorted({f.rsplit("/", 1)[0] for f in files}):
         # inputFiles are URI strings: Path(URI) keeps their escapes intact
-        jpath = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f))
-        st = jpath.getFileSystem(conf).getFileStatus(jpath)
-        files.append([f, st.getLen(), st.getModificationTime()])
-    types = {c: df.schema[c].dataType.simpleString() for c in columns}
-    key = json.dumps({"location": location, "columns": types, "files": files},
+        jdir = path(uri(parent))
+        for st in jdir.getFileSystem(conf).listStatus(jdir, visible):
+            name = st.getPath().getName()
+            listed[(parent, name)] = [st.getLen(), st.getModificationTime()]
+    stamps = []
+    for f in files:
+        parent, name = f.rsplit("/", 1)
+        stamp = listed.get((parent, unquote(name)))
+        if stamp is None:
+            return None
+        stamps.append([f, *stamp])
+    types = {c: df.schema[c].dataType.simpleString() for c in DIGEST_INPUTS}
+    key = json.dumps({"location": location, "columns": types, "files": stamps},
                      separators=(",", ":"))
-    return location, key
-
-
-def keyed_dir(spark: SparkSession, name: str, location: str) -> str:
-    """``<warehouse>/tokenqc_<name>/<hash of location>``: the one directory
-    the keyed table `name` of an input location is kept in."""
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
     loc = hashlib.sha256(location.encode()).hexdigest()[:16]
-    return os.path.join(_qualify(warehouse), f"tokenqc_{name}", loc)
+    warehouse = df.sparkSession.conf.get("spark.sql.warehouse.dir")
+    return os.path.join(_qualify(warehouse), DIGEST_STORE, loc), key
 
 
 def _key_dir(store: str, key: str) -> str:
     return os.path.join(store, hashlib.sha256(key.encode()).hexdigest())
 
 
-def read_keyed(spark: SparkSession, store: str, key: str, schema) -> DataFrame | None:
-    """The table committed in `store` under `key`, read with `schema`
+def read_digest(spark: SparkSession, store: str, key: str, schema) -> DataFrame | None:
+    """The digest committed in `store` under `key`, read with `schema`
     pinned (no inference job), or None if none is: a missing marker means
     another key, or a build that never committed."""
     path = _key_dir(store, key)
@@ -396,20 +416,19 @@ def read_keyed(spark: SparkSession, store: str, key: str, schema) -> DataFrame |
     return spark.read.schema(schema).parquet(path)
 
 
-def write_keyed(df: DataFrame, store: str, key: str) -> None:
+def write_digest(df: DataFrame, store: str, key: str) -> None:
     """Write `df` to a temp directory in `store`, then commit it as the
-    table of `key` (`_commit_keyed`). A crash before the commit leaves
+    digest of `key` (`_commit_digest`). A crash before the commit leaves
     only the temp directory, which no reader looks at."""
     tmp = os.path.join(store, f"_tmp-{uuid.uuid4().hex}")
     df.write.parquet(tmp)
-    _commit_keyed(df.sparkSession, store, key, tmp)
+    _commit_digest(df.sparkSession, store, key, tmp)
 
 
-def _commit_keyed(spark: SparkSession, store: str, key: str, tmp: str) -> None:
+def _commit_digest(spark: SparkSession, store: str, key: str, tmp: str) -> None:
     """Rename `tmp` into the directory of `key`, then write its marker
-    (holding the key) last, then delete everything else in `store`: the
-    store keeps one table, and the leftovers of crashed builds go. A build
-    that stops before the marker is never read."""
+    (holding the key) last, then prune `store`. A build that stops before
+    the marker is never read."""
     fs, jstore = _hadoop_fs(spark, store)
     path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     final, jtmp = path(_key_dir(store, key)), path(tmp)
@@ -425,9 +444,30 @@ def _commit_keyed(spark: SparkSession, store: str, key: str, tmp: str) -> None:
             out.write(bytearray(key.encode()))
         finally:
             out.close()
+    _prune_digests(spark, fs, jstore, final.getName())
+
+
+def _prune_digests(spark: SparkSession, fs, jstore, keep: str) -> None:
+    """Delete from a store what no run can still be using. The digest
+    `keep` just committed stays, and so does the newest other committed
+    digest: a run that found it current may still be scanning it. Older
+    committed digests go. A directory without a marker (a temp directory,
+    or a build that renamed but never marked) goes only once it is older
+    than `_STALE_BUILD_S`, so a build still running keeps its files."""
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    stale_before = (time.time() - _STALE_BUILD_S) * 1000
+    committed = []
     for st in fs.listStatus(jstore):
-        if st.getPath().getName() != final.getName():
-            fs.delete(st.getPath(), True)
+        d = st.getPath()
+        if d.getName() == keep:
+            continue
+        marker = path(d, _KEY_MARKER)
+        if fs.exists(marker):
+            committed.append((fs.getFileStatus(marker).getModificationTime(), d.getName(), d))
+        elif st.getModificationTime() < stale_before:
+            fs.delete(d, True)
+    for *_, d in sorted(committed)[:-1]:
+        fs.delete(d, True)
 
 
 def list_batches(spark: SparkSession, base_dir: str, table: str, run_id: str) -> list[int]:

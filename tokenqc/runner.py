@@ -39,9 +39,12 @@ batch is a commit unit, not a compute unit.
    store under spark.sql.warehouse.dir, keyed by the reference's file
    listing: a warm run reads it and never scans tokens_ref, a cold run
    (no digest under the current key) builds and commits it first, in
-   jobs described `reference_digest`. Any other reference is digested
-   inline. The frame is unioned with the uniqueness and degeneracy rows
-   and clustered by partition_id into one persisted frame. It holds
+   jobs described `reference_digest`, while the side thread (point 4)
+   already runs. A store that cannot be used costs only time: the run
+   digests inline and records it in `RunResult.warnings`, not `errors`.
+   Any other reference is digested inline. The frame is unioned with
+   the uniqueness and degeneracy rows and clustered by partition_id
+   into one persisted frame. It holds
    violation rows only, never input rows, and spills like any cached
    frame;
 2. uniqueness is planned as one linear, persisted aggregate:
@@ -56,7 +59,7 @@ batch is a commit unit, not a compute unit.
    rows, and the per-partition row totals (without uniqueness in the
    check set, a doc_id-only totals scan overlaps the first write);
 4. drift runs ONCE per run on the full input, on a side thread that
-   overlaps the first violations write: the 64-buckets-per-source
+   overlaps a cold run's digest build and the first violations write: the 64-buckets-per-source
    histogram joined to the baseline is collected and graded on the
    driver, and its verdict rows are appended to the first batch's
    verdict slice in Python — per-batch drift would compute chi2/KS on
@@ -73,6 +76,7 @@ Every Spark job a run starts carries the description
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
 import time
@@ -102,6 +106,8 @@ from tokenqc.schema import (
 
 TABLES = ("violations", "verdicts", "qc_state")
 
+_log = logging.getLogger(__name__)
+
 _VerdictRow = Row("partition_id", "check_name", "status", "n_rows", "n_viol", "details")
 
 
@@ -114,6 +120,9 @@ class RunResult:
     skipped_partitions: list[int] = field(default_factory=list)
     errors: dict[str, str] = field(default_factory=dict)
     timings: dict[str, float] = field(default_factory=dict)
+    # failures that cost only time: the results are complete (a digest
+    # store that cannot be written, say)
+    warnings: dict[str, str] = field(default_factory=dict)
 
 
 def _mark_timing(timings: dict[str, float], name: str, start: float) -> float:
@@ -214,6 +223,7 @@ class QCRunner:
         spark = self.spark
         sc = spark.sparkContext
         errors: dict[str, str] = {}
+        warnings: dict[str, str] = {}
         timings: dict[str, float] = {}
 
         def phase(batch: int | str, name: str) -> None:
@@ -236,7 +246,7 @@ class QCRunner:
             batches = self._plan_batches(pending)
             if not batches:
                 phase("-", "read_back")
-                return self._result(run_id, completed, errors, timings)
+                return self._result(run_id, completed, errors, timings, warnings)
 
             def pending_only(frame: DataFrame) -> DataFrame:
                 if len(pending) == cfg.n_partitions:
@@ -316,6 +326,44 @@ class QCRunner:
                 ))
             t = _mark_timing(timings, "run_plans", t)
 
+            # --- overlap independent side jobs with the reference digest
+            # build and the first violations write: the source-level
+            # families (histogram shuffle, then a driver-side grade) and,
+            # without uniqueness, the totals scan (doc_id only) share no
+            # lineage with either, so a second driver thread runs them
+            # while the build or the scan/join/write saturates the
+            # executors — Spark's scheduler interleaves jobs from
+            # concurrent threads (FIFO within cores). With uniqueness, the
+            # totals are sums over the persisted key_totals frame, which
+            # the first write materializes: no second scan of the input.
+            source_rows: list[Row] = []
+            row_totals: dict[int, int] = {}
+
+            def materialize_side() -> None:
+                try:
+                    if key_totals is None:
+                        phase(batch_start, "row_totals")
+                        try:
+                            row_totals.update(
+                                (r["partition_id"], r["n_rows"])
+                                for r in pdf.groupBy("partition_id")
+                                .agg(F.count(F.lit(1)).alias("n_rows"))
+                                .collect()
+                            )
+                        except Exception as e:  # errorStrategy 'ignore'
+                            errors["side_jobs"] = repr(e)
+                    for family, verdict_rows_of in source_checks:
+                        phase(batch_start, family)
+                        try:
+                            source_rows.extend(verdict_rows_of())
+                        except Exception as e:  # errorStrategy 'ignore'
+                            errors[family] = repr(e)
+                finally:
+                    sc.setJobDescription(None)
+
+            side_thread = threading.Thread(target=materialize_side, daemon=True)
+            side_thread.start()
+
             # the reference digest, from the store when the reference is a
             # bare file scan: a warm run only checks the key and never
             # reads tokens_ref; a cold run's build jobs are named here
@@ -325,8 +373,11 @@ class QCRunner:
                 phase("-", "reference_digest")
                 try:
                     digest = invariant.stored_digest(reference_tokens)
-                except Exception as e:  # the store only saves work: digest inline
-                    errors["reference_digest"] = repr(e)
+                except Exception as e:
+                    # the store only saves work: digest inline, results
+                    # complete, so a warning rather than an error
+                    warnings["reference_digest"] = repr(e)
+                    _log.warning("reference digest store unusable, digesting inline: %r", e)
                 t = _mark_timing(timings, "reference_digest", t)
 
             # ONE narrow scan for all row-level gates, with the invariant
@@ -376,42 +427,6 @@ class QCRunner:
             viol_all = viol_all.repartition("partition_id").persist()
             t = _mark_timing(timings, "build_plan", t)
 
-            # --- overlap independent side jobs with the first violations
-            # write: the source-level families (histogram shuffle, then a
-            # driver-side grade) and, without uniqueness, the totals scan
-            # (doc_id only) share no lineage with the violation sink, so a
-            # second driver thread runs them while the scan/join/write
-            # saturates the executors — Spark's scheduler interleaves jobs
-            # from concurrent threads (FIFO within cores). With uniqueness,
-            # the totals are sums over the persisted key_totals frame, which
-            # the first write materializes: no second scan of the input.
-            source_rows: list[Row] = []
-            row_totals: dict[int, int] = {}
-
-            def materialize_side() -> None:
-                try:
-                    if key_totals is None:
-                        phase(batch_start, "row_totals")
-                        try:
-                            row_totals.update(
-                                (r["partition_id"], r["n_rows"])
-                                for r in pdf.groupBy("partition_id")
-                                .agg(F.count(F.lit(1)).alias("n_rows"))
-                                .collect()
-                            )
-                        except Exception as e:  # errorStrategy 'ignore'
-                            errors["side_jobs"] = repr(e)
-                    for family, verdict_rows_of in source_checks:
-                        phase(batch_start, family)
-                        try:
-                            source_rows.extend(verdict_rows_of())
-                        except Exception as e:  # errorStrategy 'ignore'
-                            errors[family] = repr(e)
-                finally:
-                    sc.setJobDescription(None)
-
-            side_thread = threading.Thread(target=materialize_side, daemon=True)
-            side_thread.start()
             n_viol: dict[tuple[int, str], int] = {}
             # missing-input checks → one run-level UNKNOWN row each (-1);
             # the first batch commits them with the source-level verdicts
@@ -459,7 +474,7 @@ class QCRunner:
                 )
 
             phase("-", "read_back")
-            return self._result(run_id, completed, errors, timings)
+            return self._result(run_id, completed, errors, timings, warnings)
         finally:
             sc.setJobDescription(caller_description)
             if viol_all is not None:
@@ -469,7 +484,7 @@ class QCRunner:
 
     def _result(
         self, run_id: str, completed: set[int], errors: dict[str, str],
-        timings: dict[str, float],
+        timings: dict[str, float], warnings: dict[str, str],
     ) -> RunResult:
         """The run's result: the current view of its three tables."""
         t = time.monotonic()
@@ -488,6 +503,7 @@ class QCRunner:
             skipped_partitions=sorted(completed),
             errors=errors,
             timings=timings,
+            warnings=warnings,
         )
 
     # ------------------------------------------------------------------
