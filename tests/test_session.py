@@ -13,3 +13,9 @@ def test_join_confs_pinned(spark):
     assert conf.get("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == str(
         64 * 1024 * 1024
     )
+
+
+def test_reader_batch_size_pinned(spark):
+    """Parquet reader batches stay small: at the default 4096 rows a
+    batch of token arrays is a multi-MB vector, a humongous object to G1."""
+    assert spark.conf.get("spark.sql.parquet.columnarReaderBatchSize") == "256"

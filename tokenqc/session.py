@@ -56,6 +56,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("TOKENQC_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # token rows hold ~10^3 ints each: at the default 4096 rows a
+        # batch's tokens vector is MBs, which G1 allocates as a humongous
+        # object outside the young generation (and reallocates per file).
+        # 256-row batches keep it under a region, reused batch to batch.
+        .config("spark.sql.parquet.columnarReaderBatchSize", "256")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
